@@ -1,6 +1,6 @@
 package graft.lake
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** One catalog row per ingested data object — the engine's equivalent
@@ -3943,8 +3943,14 @@ object Catalog {
       .as[CatalogEntry]
   }
 
+  /** The whole catalog area. Read with the fixed [[CatalogEntry]]
+    * schema, so a read plans without a footer-inferring Spark job; the
+    * select keeps the column order of the inferred read (data columns,
+    * then the `source` partition column). */
   def load(spark: SparkSession, layout: Layout): DataFrame =
-    spark.read.parquet(layout.catalogDir)
+    spark.read.schema(Encoders.product[CatalogEntry].schema)
+      .parquet(layout.catalogDir)
+      .select("ts", "tsRaw", "key", "source")
 
   /** Committed (fully published) catalog versions, ascending — the
     * manifest log's `.commit` records that carry a `.done` marker.

@@ -1,6 +1,6 @@
 package graft.lake
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Time-range replay — the engine form of the reference's
@@ -21,6 +21,14 @@ import org.apache.spark.sql.functions._
   * [[maxCollectedKeys]] the replay switches to reading the source's
   * bronze partition and semi-joining on `input_file_name()` — no
   * driver materialization at any range size.
+  *
+  * Cost per call, one pass:
+  *  - ONE catalog query: a collect bounded at `maxCollectedKeys + 1`
+  *    keys, which both lists a small range and tells a big one apart;
+  *    an empty range returns 0 here, claiming nothing;
+  *  - ONE read of the matched bronze objects, by the publish itself;
+  *  - the returned count is observed on that publish write (an
+  *    `Observation`), not counted by a second read.
   */
 object Replay {
 
@@ -48,14 +56,14 @@ object Replay {
       t0: java.sql.Timestamp, t1: java.sql.Timestamp, committed: Boolean): Long = {
     val matched = Catalog.rangeQuery(spark, layout, source, t0, t1)
       .select(col("key")).distinct()
-    val nKeys = matched.count()
-    if (nKeys == 0) return 0L
+    // one catalog query: a small range needs its key list anyway, and
+    // one key past the cap is enough to tell a big range apart
+    val keys = matched.limit(maxCollectedKeys + 1).collect().map(_.getString(0))
+    if (keys.isEmpty) return 0L
 
     val records: DataFrame =
-      if (nKeys <= maxCollectedKeys) {
-        val keys = matched.collect().map(_.getString(0))
-        readObjects(spark, keys, source)
-      } else {
+      if (keys.length <= maxCollectedKeys) readObjects(spark, keys, source)
+      else {
         // big range: list/scan ONLY this source's bronze partition
         // (path-level pruning — a filter above the split flatMap would
         // not reach the file listing), keep matched files via semi-join
@@ -63,12 +71,16 @@ object Replay {
         all.join(matched.withColumnRenamed("key", "mkey"),
             col("key") === col("mkey"), "left_semi")
       }
-    val n = records.count()
+    // one bronze read: the publish counts its own rows as it writes
+    val published = Observation()
     val out = records.select(col("source"), col("key"), col("json"))
+      .observe(published, count(lit(1)).as("n"))
     if (committed) Catalog.commitDist(spark, layout, out)
     else Distribution.publish(out, layout)
     // NOTE deliberately no Catalog.append here (§2.3 item 2).
-    n
+    // Reached only after the write returned: `get` blocks until the
+    // write's metrics arrive, and a failed write never sends them.
+    published.get("n").asInstanceOf[Long]
   }
 
   /** Re-read whole objects by key (replay unit = object). */

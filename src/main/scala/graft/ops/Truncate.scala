@@ -1,6 +1,7 @@
 package graft.ops
 
 import org.apache.spark.sql.DataFrame
+import scala.util.control.NonFatal
 
 /** Lineage truncation for plans that would otherwise re-execute a
   * shared subtree per consumer (self-joined indexes, iterative
@@ -36,7 +37,12 @@ import org.apache.spark.sql.DataFrame
   * run without release ended with multi-GB of dead MEMORY_AND_DISK
   * blocks evicting each other, a global slowdown. Callers must only
   * release frames they are completely done with: a released local
-  * checkpoint cannot be recomputed (the lineage is gone). */
+  * checkpoint cannot be recomputed (the lineage is gone).
+  *
+  * The same contract binds any long-lived JVM (a service, a notebook
+  * kernel, a streaming driver): nothing releases on its own, so the
+  * registered ids and their blocks grow with every truncating query
+  * until the JVM calls [[release]] between its queries. */
 object Truncate {
 
   /** True when the durable posture is on for this session. */
@@ -114,7 +120,7 @@ object Truncate {
     while (id != null) {
       persisted.get(id.intValue()).foreach { rdd =>
         try { rdd.unpersist(false); n += 1 }
-        catch { case _: Throwable => () } // context stopped: nothing to free
+        catch { case NonFatal(_) => () } // context stopped: nothing to free
       }
       id = liveRddIds.poll()
     }

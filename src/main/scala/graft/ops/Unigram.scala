@@ -1,7 +1,7 @@
 package graft.ops
 
 import graft.Tables
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Unigram-LM (SentencePiece-style) tokenizer — the OTHER production
@@ -308,14 +308,16 @@ object Unigram {
       .select(explode(regexp_extract_all(lower(col("text")), lit("[a-z]+"), lit(0)))
         .as("word"))
       .groupBy(col("word")).agg(count(lit(1)).as("f"))
+    def zeroSum(c: Column): Column = coalesce(sum(c), lit(0L))
     val counted = wc
       .select(col("f"), length(col("word")).as("n_chars"),
         size(graft.functions.TextFunctions.bpe_tokens(col("word"), Bpe.merges)).as("tb"),
         size(graft.functions.TextFunctions.unigram_pieces(col("word"), pieces)).as("te"),
         size(graft.functions.TextFunctions.unigram_pieces(col("word"), piecesSoft)).as("ts"))
-      .agg(sum(col("f")).as("nw"), sum(col("f") * col("n_chars")).as("nc"),
-        sum(col("f") * col("tb")).as("tb"), sum(col("f") * col("te")).as("te"),
-        sum(col("f") * col("ts")).as("ts"))
+      // an empty corpus sums to null; its report rows carry 0 instead
+      .agg(zeroSum(col("f")).as("nw"), zeroSum(col("f") * col("n_chars")).as("nc"),
+        zeroSum(col("f") * col("tb")).as("tb"), zeroSum(col("f") * col("te")).as("te"),
+        zeroSum(col("f") * col("ts")).as("ts"))
     counted.selectExpr(
         """stack(3,
           |  'bpe', nw, tb, nc,
@@ -324,7 +326,9 @@ object Unigram {
           .stripMargin)
       .select(col("tokenizer"), col("n_words").cast("long"),
         col("n_tokens").cast("long"),
-        round(col("n_chars").cast("double") / col("n_tokens"), 4).as("chars_per_token"))
+        // no tokens, no ratio: null, not a divide-by-zero error
+        round(try_divide(col("n_chars").cast("double"), col("n_tokens")), 4)
+          .as("chars_per_token"))
       .orderBy(col("tokenizer"))
   }
 

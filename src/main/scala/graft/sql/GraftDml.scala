@@ -2,7 +2,7 @@ package graft.sql
 
 import org.apache.spark.sql.{Column, GraftDmlBridge, Row, SparkSession}
 import org.apache.spark.sql.catalyst.analysis.{EliminateSubqueryAliases, UnresolvedAttribute}
-import org.apache.spark.sql.catalyst.expressions.{AttributeReference, ExprId, Expression}
+import org.apache.spark.sql.catalyst.expressions.{AttributeReference, CommonExpressionRef, ExprId, Expression, With}
 import org.apache.spark.sql.catalyst.plans.logical.{Assignment, DeleteAction, InsertAction, LogicalPlan, MergeAction, MergeIntoTable, UpdateAction, UpdateTable}
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.execution.command.LeafRunnableCommand
@@ -75,10 +75,27 @@ class GraftDmlRule(session: SparkSession) extends Rule[LogicalPlan] {
     * fresh target frame); everything else — source attributes included
     * — stays resolved. */
   private def toCol(e: Expression, target: Map[ExprId, String]): Column =
-    GraftDmlBridge.column(e.transform {
+    GraftDmlBridge.column(inlineShared(e, target).transform {
       case ar: AttributeReference if target.contains(ar.exprId) =>
         UnresolvedAttribute(Seq(Merge.SqlTargetAlias, target(ar.exprId)))
     })
+
+  /** `BETWEEN` resolves to a `With` (one shared operand, two
+    * comparisons), and a `With` re-types its references from its
+    * definitions whenever it is rebuilt — which fails once a
+    * definition holds an unresolved target column. Such definitions
+    * are inlined into their references first; a nondeterministic one
+    * would then be evaluated once per reference, so it refuses. */
+  private def inlineShared(e: Expression, target: Map[ExprId, String]): Expression =
+    e.transformUp {
+      case w: With if w.defs.exists(_.references.exists(a => target.contains(a.exprId))) =>
+        if (!w.defs.forall(_.deterministic)) throw new UnsupportedOperationException(
+          "a nondeterministic BETWEEN operand over target columns is not supported")
+        val defs = w.defs.map(d => d.id -> d.child).toMap
+        w.child.transform {
+          case r: CommonExpressionRef if defs.contains(r.id) => defs(r.id)
+        }
+    }
 
   private def keyName(a: Assignment): String = a.key match {
     case ar: AttributeReference => ar.name

@@ -176,6 +176,34 @@ class GraftDmlSpec extends SparkTestBase {
     assert(Catalog.headVersion(spark, layout) == vNow)
   }
 
+  test("UPDATE … WHERE key BETWEEN lo AND hi ≡ the same range written " +
+      "with >= and <=; MERGE conditions take BETWEEN too") {
+    val s = spark
+    import s.implicits._
+    val viaBetween = Layout(tmpDir("dml-between"))
+    val viaCompare = Layout(tmpDir("dml-between-cmp"))
+    seed(viaBetween); seed(viaCompare)
+    val (c1, c2) = (register(viaBetween), register(viaCompare))
+    spark.sql(s"UPDATE $c1.lake SET v = v + 1 WHERE key BETWEEN 'k2' AND 'k3'")
+    spark.sql(s"UPDATE $c2.lake SET v = v + 1 WHERE key >= 'k2' AND key <= 'k3'")
+    assert(state(viaBetween) == state(viaCompare))
+    assert(state(viaBetween) == Set(("clicks", "k1", 10L), ("clicks", "k2", 21L),
+      ("logs", "k3", 31L)))
+    // a BETWEEN over source and target columns in a MERGE clause
+    Seq(("k1", 5L, 15L), ("k2", 0L, 1L)).toDF("key", "lo", "hi")
+      .createOrReplaceTempView("dml_between_src")
+    spark.sql(
+      s"""MERGE INTO $c1.lake t USING dml_between_src s ON t.key = s.key
+         |WHEN MATCHED AND t.v BETWEEN s.lo AND s.hi THEN UPDATE SET v = 0""".stripMargin)
+    assert(state(viaBetween) == Set(("clicks", "k1", 0L), ("clicks", "k2", 21L),
+      ("logs", "k3", 31L)))
+    // inlining would evaluate a nondeterministic operand twice: refused
+    val e = intercept[UnsupportedOperationException](spark.sql(
+      s"UPDATE $c1.lake SET v = 1 WHERE v + rand() BETWEEN 0 AND 100"))
+    assert(e.getMessage.contains("nondeterministic"))
+    assert(state(viaBetween).map(_._3) == Set(0L, 21L, 31L), "nothing committed")
+  }
+
   test("plan audit: a CDC-sized merge source BROADCASTS — the lake side " +
       "is never shuffled for the match join") {
     val s = spark

@@ -63,6 +63,19 @@ class UnigramSpec extends SparkTestBase {
       s"expected-count EM should not compress worse than Viterbi counts: $rows")
   }
 
+  test("tokenizerCompare on an empty corpus: three rows of zero counts, no ratio") {
+    val empty = tmpDir("emptydocs")
+    graft.Tables.documents(spark, sfDir).limit(0)
+      .write.mode("overwrite").parquet(s"$empty/documents.parquet")
+    val rows = Unigram.tokenizerCompare(spark, empty).collect()
+    assert(rows.map(_.getString(0)).toSeq == Seq("bpe", "unigram_em", "unigram_soft"))
+    rows.foreach { r =>
+      assert(r.getLong(1) == 0L && r.getLong(2) == 0L,
+        s"counts must be 0, not null: $r")
+      assert(r.isNullAt(3), s"no tokens, no chars/token: $r")
+    }
+  }
+
   test("unigramTokens aggregates per language with exact token totals") {
     val df = Unigram.unigramTokens(spark, sfDir).collect()
     assert(df.nonEmpty)
