@@ -52,8 +52,7 @@ object Distribution {
   def subscribe(spark: SparkSession, layout: Layout, source: String,
       maxWaitMs: Long = 10000L, pollMs: Long = 50L): DataFrame = {
     Compaction.awaitQuiescent(spark, layout, source, maxWaitMs, pollMs)
-    spark.read.format("json").load(layout.distributionDir)
-      .filter(col("source") === source)
+    read(spark, layout, layout.distributionDir).filter(col("source") === source)
   }
 
   /** Action-time-consistent subscriber view: materializes the read NOW
@@ -74,7 +73,7 @@ object Distribution {
     while (System.nanoTime() <= deadline) {
       Compaction.awaitQuiescent(spark, layout, source, maxWaitMs, pollMs)
       try {
-        val snap = spark.read.format("json").load(layout.distributionDir)
+        val snap = read(spark, layout, layout.distributionDir)
           .filter(col("source") === source)
           .localCheckpoint(true)
         if (!snap.isEmpty || !Compaction.swapSuspect(spark, layout, source))
@@ -122,11 +121,23 @@ object Distribution {
       .filter(_.startsWith(s"source=$source/"))
     if (live.isEmpty) {
       import spark.implicits._
-      return Seq.empty[(String, String, String)].toDF("key", "json", "source")
+      return Seq.empty[(String, String, String)].toDF("json", "key", "source")
     }
-    spark.read.option("basePath", layout.distributionDir).format("json")
-      .load(live.map(rel => s"${layout.distributionDir}/$rel"): _*)
+    read(spark, layout, live.map(rel => s"${layout.distributionDir}/$rel"): _*)
   }
+
+  /** The record schema of a distribution file, in the column order an
+    * inferred read gives. */
+  private[lake] val recordSchema = "json STRING, key STRING"
+
+  /** Distribution files under `paths`, read with [[recordSchema]] plus
+    * the discovered `source` partition column — the
+    * `(json, key, source)` of an inferred read, without the inference
+    * job that would read every file before the caller's own action. */
+  private[lake] def read(spark: SparkSession, layout: Layout, paths: String*): DataFrame =
+    spark.read.option("basePath", layout.distributionDir)
+      .schema(recordSchema).format("json")
+      .load(paths: _*)
 
   /** PUSH-based subscriber delivery — the SNS→Lambda push analogue
     * (`/root/reference/serverless_datalake/serverless_datalake_stack.py:233-265`,
@@ -141,14 +152,18 @@ object Distribution {
     *
     * Scale: discovery cost is the file listing per trigger — the same
     * contract as the ingest stream; handler work is whatever the
-    * subscriber's frame plan does, fully distributed. */
+    * subscriber's frame plan does, fully distributed.
+    *
+    * The handler gets `(json, key)` batches on the stream's own cloned
+    * session, so a temp view or conf it sets stays private to this
+    * subscription. */
   def pushSubscribe(spark: SparkSession, layout: Layout, source: String,
       subscriberName: String,
       trigger: org.apache.spark.sql.streaming.Trigger =
         org.apache.spark.sql.streaming.Trigger.ProcessingTime("1 second"))(
       handler: DataFrame => Unit): org.apache.spark.sql.streaming.StreamingQuery =
     spark.readStream
-      .schema("key string, json string")
+      .schema(recordSchema)
       .format("json")
       .load(topicPath(layout, source))
       .writeStream

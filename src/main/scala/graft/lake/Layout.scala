@@ -228,8 +228,8 @@ object Compaction {
         .filter(_.startsWith(s"source=$source/"))
       if (live.size <= targetFiles) 0L
       else {
-        val df = spark.read.option("basePath", layout.distributionDir).format("json")
-          .load(live.map(rel => s"${layout.distributionDir}/$rel"): _*)
+        val df = Distribution.read(spark, layout,
+          live.map(rel => s"${layout.distributionDir}/$rel"): _*)
         val n = df.count()
         Catalog.commitDist(spark, layout, df.coalesce(targetFiles), removes = live)
         n

@@ -47,12 +47,12 @@ object StreamDrift {
     events.writeStream
       .option("checkpointLocation", checkpointDir)
       .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+      .foreachBatch(CallerSession(events.sparkSession) { (batch, batchId) =>
         batchCells(batch)
           .coalesce(1)
           .write.mode("overwrite").parquet(s"$storeDir/batch=$batchId")
         ()
-      }
+      })
       .start()
 
   /** The merged store: cell-wise sums across batch partitions. */

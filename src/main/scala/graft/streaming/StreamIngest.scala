@@ -21,7 +21,16 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   */
 object StreamIngest {
 
-  /** Start the bronze→(catalog, distribution) ingest stream. */
+  /** Start the bronze→(catalog, distribution) ingest stream.
+    *
+    * Each micro-batch runs on `spark` itself, not on the stream's
+    * cloned session ([[CallerSession]]): Spark gives every session id
+    * its own executor class loader, and the generated-code cache is
+    * keyed by (class loader, source), so batches run on the clone
+    * would recompile their generated classes at every start of the
+    * stream — once per arrival under `Trigger.AvailableNow`. The
+    * default long-running trigger keeps one clone, so there the
+    * re-bind saves only the first batch's compiles. */
   def start(spark: SparkSession, layout: Layout,
       trigger: Trigger = Trigger.ProcessingTime("60 seconds")): StreamingQuery = {
     import spark.implicits._
@@ -42,9 +51,9 @@ object StreamIngest {
     lines.writeStream
       .option("checkpointLocation", s"${layout.checkpointDir}/ingest")
       .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+      .foreachBatch(CallerSession(spark) { (batch, batchId) =>
         processBatch(batch, layout, System.currentTimeMillis(), batchId)
-      }
+      })
       .start()
   }
 
@@ -67,44 +76,44 @@ object StreamIngest {
     * (`/root/reference/src/event_recorder/lambda_function.py:46-65`). */
   def processBatch(batch: DataFrame, layout: Layout, arrivalMs: Long,
       batchId: Long = -1L): Unit = {
-    if (batch.isEmpty) return
-    // the standing-erasure gate: records matching a registered
-    // tombstone never enter the catalog or the distribution area —
-    // with lake/Erase.eraseWhere clearing existing copies, erasure
-    // stays complete while ingestion keeps running. The set is read
-    // per batch (tiny, driver-side) so a tombstone takes effect at
-    // the NEXT micro-batch without a stream restart.
-    val rawBatch = batch
-    val tombs = graft.lake.Erase.tombstones(batch.sparkSession, layout)
-    val gated = if (tombs.isEmpty) rawBatch else {
-      val drop = graft.lake.Erase.recordMatcher(tombs)
-      val s = rawBatch.sparkSession
-      import s.implicits._
-      rawBatch.select("source", "key", "json").as[(String, String, String)]
-        .filter(r => !drop(r._1, r._3))
-        .toDF("source", "key", "json")
-    }
-    processGated(gated, layout, arrivalMs, batchId)
-  }
-
-  private def processGated(batch: DataFrame, layout: Layout, arrivalMs: Long,
-      batchId: Long): Unit = {
+    val spark = batch.sparkSession
     // Hadoop FileSystem API (not java.io.File): the checkpoint dir may
     // be HDFS/S3 on a real cluster, where File.exists() is always
     // false and the idempotency guard would silently disappear
-    val hconf = batch.sparkSession.sparkContext.hadoopConfiguration
+    val hconf = spark.sparkContext.hadoopConfiguration
     val markersDir = new org.apache.hadoop.fs.Path(s"${layout.checkpointDir}/markers")
     val fs = markersDir.getFileSystem(hconf)
     val marker = new org.apache.hadoop.fs.Path(markersDir, batchId.toString)
     if (batchId >= 0 && fs.exists(marker)) return // replayed completed batch
+    // persisted before the emptiness probe, so the probe, the catalog
+    // entries and the publish all read each bronze object once
     val cached = batch.persist()
+    var gated = cached
     try {
+      if (cached.isEmpty) return
+      // the standing-erasure gate: records matching a registered
+      // tombstone never enter the catalog or the distribution area —
+      // with lake/Erase.eraseWhere clearing existing copies, erasure
+      // stays complete while ingestion keeps running. The set is read
+      // per batch (tiny, driver-side) so a tombstone takes effect at
+      // the NEXT micro-batch without a stream restart.
+      val tombs = graft.lake.Erase.tombstones(spark, layout)
+      if (tombs.nonEmpty) {
+        val drop = graft.lake.Erase.recordMatcher(tombs)
+        import spark.implicits._
+        // persisted too: the catalog entries and the publish each read
+        // it, and the typed filter should run once per record
+        gated = cached.select("source", "key", "json").as[(String, String, String)]
+          .filter(r => !drop(r._1, r._3))
+          .toDF("source", "key", "json")
+          .persist()
+      }
       // ONE atomic commit: catalog entries + distribution fan-out +
       // completion marker, all under a single manifest-log record —
-      // see the delivery-semantics contract on processBatch above
-      Catalog.commitIngest(batch.sparkSession, layout,
-        Catalog.entriesFor(cached, arrivalMs),
-        cached.select("source", "key", "json"), batchId,
+      // see the delivery-semantics contract above
+      Catalog.commitIngest(spark, layout,
+        Catalog.entriesFor(gated, arrivalMs),
+        gated.select("source", "key", "json"), batchId,
         if (batchId >= 0) Some(marker.toString) else None)
       if (batchId >= 0) {
         pruneMarkers(fs, markersDir, batchId)
@@ -122,15 +131,18 @@ object StreamIngest {
             // only clears at the 10-min TTL steal — blocking here
             // would add up to 2×waitMs of trigger latency); a fold
             // already running bounds the tail for us
-            Catalog.checkpoint(batch.sparkSession, layout, waitMs = 0L)
-            Catalog.pruneLog(batch.sparkSession, layout, waitMs = 0L)
+            Catalog.checkpoint(spark, layout, waitMs = 0L)
+            Catalog.pruneLog(spark, layout, waitMs = 0L)
           } catch {
             case _: graft.lake.LockBusyException => () // another fold runs
             case scala.util.control.NonFatal(e) =>
             System.err.println(s"[StreamIngest] catalog-log maintenance failed (deferred): $e")
           }
       }
-    } finally cached.unpersist()
+    } finally {
+      if (gated ne cached) gated.unpersist()
+      cached.unpersist()
+    }
   }
 
   /** Catalog-log checkpoint cadence (in micro-batches). */

@@ -54,12 +54,12 @@ object StreamKmv {
     events.writeStream
       .option("checkpointLocation", checkpointDir)
       .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+      .foreachBatch(CallerSession(events.sparkSession) { (batch, batchId) =>
         batchSketch(batch, grp, key)
           .coalesce(1)
           .write.mode("overwrite").parquet(s"$storeDir/batch=$batchId")
         ()
-      }
+      })
       .start()
 
   /** The merged sketch: distinct union of every batch's hashes, keep

@@ -54,12 +54,12 @@ object StreamQuantile {
     events.writeStream
       .option("checkpointLocation", checkpointDir)
       .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+      .foreachBatch(CallerSession(events.sparkSession) { (batch, batchId) =>
         batchHist(batch, grp, value)
           .coalesce(1)
           .write.mode("overwrite").parquet(s"$storeDir/batch=$batchId")
         ()
-      }
+      })
       .start()
 
   /** The merged histogram: cell-wise sums across every batch

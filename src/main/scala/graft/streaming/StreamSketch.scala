@@ -30,12 +30,12 @@ object StreamSketch {
     events.writeStream
       .option("checkpointLocation", checkpointDir)
       .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+      .foreachBatch(CallerSession(events.sparkSession) { (batch, batchId) =>
         Sketch.cellsOf(batch, key)
           .coalesce(1)
           .write.mode("overwrite").parquet(s"$storeDir/batch=$batchId")
         ()
-      }
+      })
       .start()
 
   /** The merged sketch: cell-wise sum across every batch partition. */
