@@ -22,53 +22,27 @@ final case class CatalogEntry(source: String, ts: java.sql.Timestamp, tsRaw: Str
 
 object Catalog {
 
-  /** O6+O7: project (source, ts, key) and append to the catalog table.
-    * The write is distributed and uncapped (the reference's DynamoDB
-    * 25-item batch cap and its silent drop of unprocessed items have
-    * no equivalent here), and the layout gives replay partition
-    * pruning on source.
-    *
-    * CONCURRENT-WRITER SAFE via a manifest-log commit (the reference
-    * gets per-item atomicity from DynamoDB; a naive
-    * `mode("append")` does not — two Spark jobs appending to one
-    * directory share the `_temporary` committer staging dir, and
-    * either job's cleanup can delete the other's in-flight files):
-    *
-    *  1. STAGE — the batch is written with the normal committer into a
-    *     private `_staged/<uuid>/` dir (underscore-prefixed: invisible
-    *     to every parquet reader of the catalog root), so concurrent
-    *     appends never share committer state.
-    *  2. CLAIM — the writer claims the next commit id by atomically
-    *     creating `_log/<seq>.commit` (create-no-overwrite; atomic on
-    *     HDFS, the standard claim primitive) and records the staged
-    *     uuid + the file list inside it.
-    *  3. PUBLISH — each staged file is renamed into its live
-    *     `source=X/` partition dir under the collision-free name
-    *     `c<seq>-<origname>`. File renames are atomic, so a reader
-    *     sees only whole files; rows of one batch are independent
-    *     catalog facts, so batch-level atomicity is not required —
-    *     a concurrent reader sees a prefix of the commit, never a
-    *     torn file.
-    *  4. DONE — `_log/<seq>.done` marks the publish complete; only
-    *     then is the staging dir deleted. A crash between CLAIM and
-    *     DONE is finished (never re-done) by [[recoverAppends]] from
-    *     the commit record. A crash before CLAIM leaves an orphan
-    *     staging dir that readers can never see; recoverAppends sweeps
-    *     staging dirs not named by any commit record. */
+  /** O6+O7: project (source, ts, key) and append to the catalog table
+    * as one catalog-only commit record — the catalog leg of
+    * [[commitIngest]], with the same STAGE → CLAIM → PUBLISH → DONE
+    * protocol and [[recoverAppends]] crash recovery. The write is
+    * distributed and uncapped (the reference's DynamoDB 25-item batch
+    * cap and its silent drop of unprocessed items have no equivalent
+    * here), concurrent appends never share committer state (each
+    * stages under its own `_staged/<uuid>/`), and the layout gives
+    * replay partition pruning on source. */
   def append(spark: SparkSession, layout: Layout, entries: Dataset[CatalogEntry]): Unit = {
     val fs = new org.apache.hadoop.fs.Path(layout.catalogDir)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     val uuid = java.util.UUID.randomUUID().toString
     val stage = new org.apache.hadoop.fs.Path(s"${layout.catalogDir}/_staged/$uuid")
-    entries.toDF()
-      .write.mode("overwrite")
-      .partitionBy("source")
-      .parquet(stage.toString)
-    // relative staged data-file paths, e.g. source=clicks/part-0000….parquet
+    entries.toDF().write.mode("overwrite").partitionBy("source").parquet(stage.toString)
     val staged = stagedFiles(fs, stage)
     if (staged.isEmpty) { fs.delete(stage, true); return }
-    val seq = claimCommit(fs, layout, uuid, staged)
-    publish(fs, layout, uuid, seq, staged)
+    val rec = V2Record(-1L, System.currentTimeMillis(), None,
+      Some(uuid), staged, None, Seq.empty, Seq.empty)
+    val seq = claimBody(fs, layout, v2Body(rec))
+    finishV2(fs, layout, seq, rec)
   }
 
   private[lake] def stagedFiles(fs: org.apache.hadoop.fs.FileSystem,
@@ -81,15 +55,6 @@ object Catalog {
       .toSeq.sorted
 
   private def logDir(layout: Layout) = s"${layout.catalogDir}/_log"
-
-  /** Atomically claim the next commit sequence number by creating its
-    * `.commit` record with overwrite=false; on contention, re-list and
-    * retry at the next number. The record body names the staged uuid
-    * and every file the commit publishes — enough for recovery to
-    * finish the publish exactly. */
-  private[lake] def claimCommit(fs: org.apache.hadoop.fs.FileSystem, layout: Layout,
-      uuid: String, staged: Seq[String]): Long =
-    claimBody(fs, layout, (uuid +: staged).mkString("\n"))
 
   // --------------------------------------------------------------------
   // The log-commit primitive and its object-store seam
@@ -287,9 +252,9 @@ object Catalog {
     }
   }
 
-  /** The claim primitive shared by v1 catalog appends and v2 unified
-    * ingest commits: atomic create-no-overwrite on the next dense
-    * commit id ([[exclusiveCreate]] for the per-store dispatch). */
+  /** The claim primitive every commit path shares: atomic
+    * create-no-overwrite on the next dense commit id
+    * ([[exclusiveCreate]] for the per-store dispatch). */
   private[lake] def claimBody(fs: org.apache.hadoop.fs.FileSystem, layout: Layout,
       body: String): Long = {
     val dir = new org.apache.hadoop.fs.Path(logDir(layout))
@@ -310,7 +275,7 @@ object Catalog {
       if (exclusiveCreate(fs, rec, body)) return next
       attempts += 1 // lost the race; renumber
     }
-    sys.error("Catalog.append: could not claim a commit id after 10000 attempts")
+    sys.error(s"could not claim a commit id in $dir after 10000 attempts")
   }
 
   /** Claim EXACTLY seq `expected` — the OPTIMISTIC-CONCURRENCY claim
@@ -331,17 +296,6 @@ object Catalog {
     fs.mkdirs(dir)
     exclusiveCreate(fs,
       new org.apache.hadoop.fs.Path(dir, f"$expected%020d.commit"), body)
-  }
-
-  /** Rename staged files into the live partition dirs under their
-    * commit-prefixed names, then mark the commit done and drop the
-    * staging dir. Idempotent: skips files already published (so
-    * recovery can re-drive it). */
-  private[lake] def publish(fs: org.apache.hadoop.fs.FileSystem, layout: Layout,
-      uuid: String, seq: Long, staged: Seq[String]): Unit = {
-    renameStaged(fs, layout.catalogDir, uuid, seq, staged)
-    fs.create(new org.apache.hadoop.fs.Path(logDir(layout), f"$seq%020d.done"), true).close()
-    fs.delete(new org.apache.hadoop.fs.Path(s"${layout.catalogDir}/_staged/$uuid"), true)
   }
 
   /** Idempotent rename of every staged `source=X/name` file under
@@ -366,13 +320,14 @@ object Catalog {
   }
 
   // --------------------------------------------------------------------
-  // v2 unified commits: one record spanning catalog + distribution
+  // The commit record: one log entry spanning catalog, distribution
+  // and lake
   // --------------------------------------------------------------------
 
-  /** A v2 commit record — ONE log entry covering a catalog append, a
+  /** A commit record — ONE log entry covering a catalog append, a
     * distribution publish, pending distribution file removals, and the
-    * stream's batch-completion marker. Extending the v1 record to span
-    * both writes closes the at-least-once window the reference has
+    * stream's batch-completion marker. Spanning both writes closes the
+    * at-least-once window the reference has
     * between its DynamoDB put and SNS publish
     * (`/root/reference/src/event_recorder/lambda_function.py:46-65`
     * does both with no atomicity): a crash anywhere after CLAIM is
@@ -536,7 +491,21 @@ object Catalog {
       props.result(), propRms.result(), note, txn)
   }
 
-  /** Finish a v2 commit from its record: publish both legs (idempotent
+  /** Read one `.commit` record. Every record starts with its
+    * `v2 <batchId> <claimMs>` head; a file without one is not a record
+    * this log wrote, and reading it fails loud, naming the file. */
+  private def readRecord(fs: org.apache.hadoop.fs.FileSystem,
+      path: org.apache.hadoop.fs.Path): V2Record = {
+    val in = fs.open(path)
+    val lines = try scala.io.Source.fromInputStream(in, "UTF-8").getLines().toList
+      finally in.close()
+    if (!lines.headOption.exists(_.startsWith("v2 ")))
+      throw new java.io.IOException(s"commit record $path has no 'v2 ' head " +
+        s"(first line: '${lines.headOption.getOrElse("").take(80)}')")
+    parseV2(lines)
+  }
+
+  /** Finish a commit from its record: publish every leg (idempotent
     * renames), recreate the batch marker, mark done, drop staging.
     * Safe to re-drive any number of times. */
   private def finishV2(fs: org.apache.hadoop.fs.FileSystem, layout: Layout,
@@ -627,14 +596,13 @@ object Catalog {
   /** ATOMIC batch ingest: the canonical LAKE parquet and the catalog
     * entries land as ONE commit record — the batch-side sibling of
     * [[commitIngest]] (which covers catalog + distribution for the
-    * stream). Closes two hazards of the previous
-    * `mode("append")` + `Catalog.append` pair: concurrent batch
-    * ingests shared the lake dir's `_temporary` committer staging
-    * (either job's cleanup could delete the other's in-flight files),
-    * and a crash between the lake write and the catalog append left
-    * an uncataloged partial batch. Now a reader of
-    * [[loadLakeSnapshot]] sees a batch's lake rows iff its catalog
-    * rows are visible too. */
+    * stream). A lake `mode("append")` write followed by a separate
+    * [[append]] would have two hazards: concurrent batch ingests share
+    * the lake dir's `_temporary` committer staging (either job's
+    * cleanup can delete the other's in-flight files), and a crash
+    * between the two writes leaves an uncataloged partial batch. Here a
+    * reader of [[loadLakeSnapshot]] sees a batch's lake rows iff its
+    * catalog rows are visible too. */
   def commitLakeIngest(spark: SparkSession, layout: Layout,
       lakeBatch: DataFrame, entries: Dataset[CatalogEntry]): Unit = {
     val fs = new org.apache.hadoop.fs.Path(layout.catalogDir)
@@ -1180,13 +1148,7 @@ object Catalog {
     val log = new org.apache.hadoop.fs.Path(logDir(layout))
     if (!fs.exists(log)) return Set.empty
     fs.listStatus(log).map(_.getPath).filter(_.getName.endsWith(".commit"))
-      .flatMap { p =>
-        val in = fs.open(p)
-        try scala.io.Source.fromInputStream(in, "UTF-8").getLines()
-          .collect { case l if l.startsWith("txn ") => l.stripPrefix("txn ") }
-          .toList
-        finally in.close()
-      }.toSet
+      .flatMap(readRecord(fs, _).txn).toSet
   }
 
   /** The live-named data/DV files an aborted txn leg PUBLISHED — read
@@ -1195,14 +1157,8 @@ object Catalog {
       layout: Layout, seq: Long): Seq[String] = {
     val padded = f"$seq%020d"
     val p = new org.apache.hadoop.fs.Path(logDir(layout), s"$padded.commit")
-    val lines =
-      try {
-        val in = fs.open(p)
-        try scala.io.Source.fromInputStream(in, "UTF-8").getLines().toList
-        finally in.close()
-      } catch { case _: java.io.FileNotFoundException => return Seq.empty }
-    if (!lines.headOption.exists(_.startsWith("v2 "))) return Seq.empty
-    val r = parseV2(lines)
+    val r = try readRecord(fs, p)
+      catch { case _: java.io.FileNotFoundException => return Seq.empty }
     (r.lake ++ r.dv).map { rel =>
       val slash = rel.indexOf('/')
       s"${rel.substring(0, slash)}/c$padded-${rel.substring(slash + 1)}"
@@ -3571,32 +3527,25 @@ object Catalog {
     val rows = names
       .filter(n => n.endsWith(".commit") && done.contains(n.stripSuffix(".commit")))
       .map(_.stripSuffix(".commit").toLong).sorted.map { seq =>
-        val p = new org.apache.hadoop.fs.Path(log, f"$seq%020d.commit")
-        val in = fs.open(p)
-        val lines = try scala.io.Source.fromInputStream(in, "UTF-8")
-          .getLines().toList finally in.close()
-        if (lines.headOption.exists(_.startsWith("v2 "))) {
-          val r = parseV2(lines)
-          // a cross-table txn leg reports its RESOLUTION — an aborted
-          // or unbound record must never read as a served version
-          // (review catch: an operator would see adds the table never
-          // served, with no indication)
-          val txnNote = r.txn.map { id =>
-            val st = txnStatus(fs, txnDirOf(layout), id).getOrElse("pending")
-            s"txn $id $st" + (if (st == "commit") "" else " (invisible)")
-          }
-          // restore re-adds count as adds: history reports set movement
-          (seq, r.claimMs, r.lake.size + r.lakeReAdds.size,
-            r.lakeRemoves.size, r.dv.size + r.dvReAdds.size,
-            r.cat.size, r.dist.size,
-            r.addCols.map(_._1).mkString(","),
-            r.widenCols.map { case (n, t) => s"$n:$t" }.mkString(","),
-            (r.renameCols.map { case (o, n) => s"$o->$n" } ++
-              r.dropCols.map("-" + _)).mkString(","),
-            (r.expects.map("+" + _._1) ++ r.expectRms.map("-" + _)).mkString(","),
-            (r.note.toSeq ++ txnNote).mkString("; "))
-        } else (seq, fs.getFileStatus(p).getModificationTime,
-          0, 0, 0, lines.tail.size, 0, "", "", "", "", "")
+        val r = readRecord(fs, new org.apache.hadoop.fs.Path(log, f"$seq%020d.commit"))
+        // a cross-table txn leg reports its RESOLUTION — an aborted
+        // or unbound record must never read as a served version
+        // (otherwise an operator would see adds the table never
+        // served, with no indication)
+        val txnNote = r.txn.map { id =>
+          val st = txnStatus(fs, txnDirOf(layout), id).getOrElse("pending")
+          s"txn $id $st" + (if (st == "commit") "" else " (invisible)")
+        }
+        // restore re-adds count as adds: history reports set movement
+        (seq, r.claimMs, r.lake.size + r.lakeReAdds.size,
+          r.lakeRemoves.size, r.dv.size + r.dvReAdds.size,
+          r.cat.size, r.dist.size,
+          r.addCols.map(_._1).mkString(","),
+          r.widenCols.map { case (n, t) => s"$n:$t" }.mkString(","),
+          (r.renameCols.map { case (o, n) => s"$o->$n" } ++
+            r.dropCols.map("-" + _)).mkString(","),
+          (r.expects.map("+" + _._1) ++ r.expectRms.map("-" + _)).mkString(","),
+          (r.note.toSeq ++ txnNote).mkString("; "))
       }
     // monotonize commit times in seq order (same rule as
     // versionAtTimestamp — writer clock skew cannot reorder history)
@@ -3862,9 +3811,13 @@ object Catalog {
   /** Finish or sweep interrupted appends: commits with a `.commit`
     * record but no `.done` marker are re-driven from the record
     * (publish is idempotent — already-renamed files are skipped);
-    * staging dirs named by no commit record are orphans from a crash
-    * before CLAIM and are deleted. Idempotent; run from maintenance,
-    * like [[graft.streaming.SnapshotStore.recover]].
+    * staging dirs named by no undone record are orphans — from a crash
+    * before CLAIM, or a done commit's leftover from a crash between
+    * DONE and its stage delete — and are deleted. Only undone records
+    * are opened, so a run over a clean log reads one listing.
+    * Idempotent; run from maintenance and before every
+    * [[graft.streaming.StreamIngest.start]], like
+    * [[graft.streaming.SnapshotStore.recover]].
     *
     * The orphan sweep is AGE-GATED: an unclaimed stage younger than
     * `stageGraceMs` may belong to a committer that is right now
@@ -3885,25 +3838,18 @@ object Catalog {
     if (fs.exists(log)) {
       val entries = fs.listStatus(log).map(_.getPath.getName)
       val done = entries.filter(_.endsWith(".done")).map(_.stripSuffix(".done")).toSet
-      entries.filter(_.endsWith(".commit")).sorted.foreach { rec =>
-        val seqStr = rec.stripSuffix(".commit")
-        val in = fs.open(new org.apache.hadoop.fs.Path(log, rec))
-        val lines = try scala.io.Source.fromInputStream(in, "UTF-8").getLines().toList
-        finally in.close()
-        if (lines.headOption.exists(_.startsWith("v2 "))) {
-          val r = parseV2(lines)
+      // only UNDONE records are read: a done record's stage was its
+      // committer's to delete, so a leftover one is debris for the
+      // age-gated sweep below (a crash between DONE and the delete)
+      entries.filter(n => n.endsWith(".commit") && !done.contains(n.stripSuffix(".commit")))
+        .sorted.foreach { rec =>
+          val r = readRecord(fs, new org.apache.hadoop.fs.Path(log, rec))
           claimedCat ++= r.catUuid
           claimedDist ++= r.distUuid
           claimedLake ++= r.lakeUuid
           claimedLake ++= r.dvUuid
-          if (!done.contains(seqStr)) finishV2(fs, layout, seqStr.toLong, r)
-        } else {
-          val uuid = lines.head
-          claimedCat += uuid
-          if (!done.contains(seqStr))
-            publish(fs, layout, uuid, seqStr.toLong, lines.tail)
+          finishV2(fs, layout, rec.stripSuffix(".commit").toLong, r)
         }
-      }
     }
     val now = System.currentTimeMillis()
     val sweepCutoff = now - stageGraceMs
@@ -3963,9 +3909,9 @@ object Catalog {
   /** TIMESTAMP AS OF — map a wall-clock time to the version that was
     * live then: the highest committed seq whose commit record's
     * (monotonized) time is ≤ `ms`, for use with [[loadAsOf]] /
-    * [[loadLakeSnapshot]] / [[lakeChangesBetween]]. v2 records carry
-    * their claim time in the body; v1 records fall back to the record
-    * file's mtime; times are MONOTONIZED in seq order, so clock skew
+    * [[loadLakeSnapshot]] / [[lakeChangesBetween]]. A version's time
+    * is the claim time in its record's head (never the file's mtime);
+    * times are MONOTONIZED in seq order, so clock skew
     * between concurrent writers can never reorder history (the Delta
     * timestamp-resolution rule).
     *
@@ -3994,10 +3940,9 @@ object Catalog {
         // txn gate below comes from the parsed state instead
         val head = try scala.io.Source.fromInputStream(in, "UTF-8")
           .getLines().nextOption().getOrElse("") finally in.close()
-        val t =
-          if (head.startsWith("v2 ")) head.split(' ')(2).toLong
-          else s.getModificationTime
-        Some((seq, t))
+        if (!head.startsWith("v2 ")) throw new java.io.IOException(
+          s"commit record ${s.getPath} has no 'v2 ' head (first line: '${head.take(80)}')")
+        Some((seq, head.split(' ')(2).toLong))
       }.sortBy(_._1)
     // a txn leg that is not COMMITTED is not a version that happened —
     // TIMESTAMP AS OF must never resolve to it. Pending/aborted seqs
@@ -4558,11 +4503,6 @@ object Catalog {
     def resolveTxn(id: String): String =
       txnSeen.getOrElseUpdate(id,
         txnStatus(fs, txnDir, id).getOrElse("pending"))
-    def readLines(p: org.apache.hadoop.fs.Path): List[String] = {
-      val in = fs.open(p)
-      try scala.io.Source.fromInputStream(in, "UTF-8").getLines().toList
-      finally in.close()
-    }
     val (cpSeq, cpLines) = latestValidCheckpoint(fs, log, names) match {
       case Some((seq, lines)) => (seq, lines)
       case None => (0L, List.empty[String])
@@ -4629,23 +4569,21 @@ object Catalog {
       .foreach { seq =>
         maxSeq = math.max(maxSeq, seq)
         val padded = f"$seq%020d"
-        val lines = readLines(new org.apache.hadoop.fs.Path(log, s"$padded.commit"))
+        val r = readRecord(fs, new org.apache.hadoop.fs.Path(log, s"$padded.commit"))
         def live(rel: String): String = {
           val slash = rel.indexOf('/')
           s"${rel.substring(0, slash)}/c$padded-${rel.substring(slash + 1)}"
         }
-        if (lines.headOption.exists(_.startsWith("v2 "))) {
-          val r = parseV2(lines)
-          // a txn'd record is visible ONLY once its root txn file says
-          // commit; aborted = invisible forever; unbound = invisible
-          // now, tracked so the state stays un-memoized and the
-          // checkpoint fold stops below it
-          val txnGate = r.txn.map(resolveTxn)
-          if (txnGate.contains("pending"))
-            pendingTxns += ((seq, r.txn.get, r.claimMs))
-          if (txnGate.contains("abort"))
-            abortedTxns += ((seq, r.txn.get))
-          if (txnGate.forall(_ == "commit")) {
+        // a txn'd record is visible ONLY once its root txn file says
+        // commit; aborted = invisible forever; unbound = invisible
+        // now, tracked so the state stays un-memoized and the
+        // checkpoint fold stops below it
+        val txnGate = r.txn.map(resolveTxn)
+        if (txnGate.contains("pending"))
+          pendingTxns += ((seq, r.txn.get, r.claimMs))
+        if (txnGate.contains("abort"))
+          abortedTxns += ((seq, r.txn.get))
+        if (txnGate.forall(_ == "commit")) {
           r.cat.foreach(rel => cat += ((seq, live(rel))))
           r.dist.foreach(rel => dist += ((seq, live(rel))))
           r.removes.foreach(p => removes += ((seq, r.claimMs, p)))
@@ -4666,9 +4604,6 @@ object Catalog {
           r.props.foreach { case (k, v) => props += ((seq, k, v)) }
           r.propRms.foreach(k => propRms += ((seq, k)))
           r.note.foreach(n => notes += ((seq, n)))
-          }
-        } else {
-          lines.tail.foreach(rel => cat += ((seq, live(rel))))
         }
       }
     (LogState(cat.result(), dist.result(), removes.result(),

@@ -248,21 +248,10 @@ object Pq {
   /** As above, but encoding/training read from `res` — lets the index
     * build share one materialized residual frame instead of recomputing
     * the coarse assignment per stage. */
-  /** Artifact-FAMILY suffix for the coarse-assignment build mode:
-    * codes and residual codebooks built from the two-level assignment
-    * ([[Similarity.buildAssignments]] under `spark.graft.ivfBuild=
-    * twoLevel`) differ from exact-mode ones and must never be served
-    * across modes — they live under sibling `…_2l/` family dirs (a
-    * key suffix would land them inside the directory the DuckDB
-    * oracle globs, breaking its schema inference). */
-  private def buildModeDir(spark: SparkSession): String =
-    if (spark.conf.get("spark.graft.ivfBuild", "exact") == "twoLevel") "_2l" else ""
-
   private def buildIvfPqCodebooks(spark: SparkSession, sfDir: String,
       res: DataFrame): String = {
     val corpusKey = Similarity.corpusKeyOf(Tables.embeddings(spark, sfDir))
-    val family = s"${Similarity.OracleExportRoot}/shared/ivfpq_codebooks${buildModeDir(spark)}/v1"
-    Artifacts.commit(spark, s"$family/k=$corpusKey") { tmp =>
+    Artifacts.commit(spark, s"$IvfPqCodebooksPath/k=$corpusKey") { tmp =>
       val sample = res.filter(col("vec_id") % 4 === 0)
         .select(col("vec_id"), col("embedding"))
       trainCodebooks(spark, sample, iters = 2)
@@ -281,13 +270,11 @@ object Pq {
     * (codebooksDir, codesDir). */
   def buildIvfPqIndex(spark: SparkSession, sfDir: String): (String, String) = {
     val corpusKey = Similarity.corpusKeyOf(Tables.embeddings(spark, sfDir))
-    val md = buildModeDir(spark)
-    val cbFamily = s"${Similarity.OracleExportRoot}/shared/ivfpq_codebooks$md/v1"
-    val cdDir = s"${Similarity.OracleExportRoot}/shared/ivfpq_codes$md/v1/k=$corpusKey"
+    val cdDir = s"$IvfPqCodesPath/k=$corpusKey"
     val fs = new org.apache.hadoop.fs.Path(cdDir)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (fs.exists(new org.apache.hadoop.fs.Path(cdDir, "_SUCCESS")))
-      return (s"$cbFamily/k=$corpusKey", cdDir)
+      return (s"$IvfPqCodebooksPath/k=$corpusKey", cdDir)
     // one coarse assignment pass feeds BOTH the codebook training
     // sample and the full encode (it was the build's dominant cost
     // when recomputed per stage)

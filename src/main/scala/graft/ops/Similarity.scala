@@ -150,30 +150,13 @@ object Similarity {
     * production posture, where an ANN index is built once and served
     * many times, and the fix for the n·K assignment cost otherwise
     * paid per query. */
-  def buildAssignments(spark: SparkSession, sfDir: String): String = {
-    val mode = spark.conf.get("spark.graft.ivfBuild", "exact")
-    assignmentsCache.getOrElseUpdate(s"$sfDir|$mode", {
+  def buildAssignments(spark: SparkSession, sfDir: String): String =
+    assignmentsCache.getOrElseUpdate(sfDir, {
       val emb = Tables.embeddings(spark, sfDir)
-      if (mode == "twoLevel") {
-        // the O(n·√C) build posture: the hierarchy is an approximation
-        // of exact nearest-centroid, so its artifacts live under their
-        // own keyed path (never served to an exact-mode consumer)
-        val stride = defaultSuperStride(
-          emb.filter(col("vec_id") % 50 === 0).count())
-        Artifacts.commit(spark,
-            s"${AssignmentsPath}_2l$stride/k=${corpusKeyOf(emb)}") { tmp =>
-          twoLevelAssignmentsOf(emb, stride).write.mode("overwrite").parquet(tmp)
-        }
-      } else
-        Artifacts.commit(spark, s"$AssignmentsPath/k=${corpusKeyOf(emb)}") { tmp =>
-          assignmentsDerivation(spark, sfDir).write.mode("overwrite").parquet(tmp)
-        }
+      Artifacts.commit(spark, s"$AssignmentsPath/k=${corpusKeyOf(emb)}") { tmp =>
+        assignmentsDerivation(spark, sfDir).write.mode("overwrite").parquet(tmp)
+      }
     })
-  }
-
-  /** √C super-centroid stride for the two-level build (≥2). */
-  def defaultSuperStride(nCentroids: Long): Long =
-    math.max(2L, math.round(math.sqrt(math.max(1L, nCentroids).toDouble)))
 
   /** Where [[buildAssignments]] commits its artifacts — SHARED across
     * JVMs (unlike the run-isolated oracle exports): reuse by later
@@ -239,8 +222,9 @@ object Similarity {
     * best same-super centroid instead) — but it is fully DETERMINISTIC
     * and SQL-replayable, so it gets its own oracle-checked query
     * ([[ivfAssignTwoLevel]]) plus an exact-vs-hierarchical agreement
-    * audit ([[ivfBuildAgreement]]); the index build switches to it
-    * under `spark.graft.ivfBuild=twoLevel` ([[buildAssignments]]). */
+    * audit ([[ivfBuildAgreement]]). The index build
+    * ([[buildAssignments]]) stays exact: the hierarchy's assignments
+    * would change the `q_ivf_*` answers. */
   private[ops] def twoLevelAssignmentsOf(emb: DataFrame, stride: Long,
       superProbe: Int = 2): DataFrame = {
     import org.apache.spark.sql.expressions.Window
@@ -296,8 +280,8 @@ object Similarity {
 
   /** Exact-vs-two-level agreement audit: how many vectors land on
     * their true nearest centroid through the hierarchy. One row —
-    * (n_vecs, n_agree, agree_ppm). The acceptance gate for switching
-    * the index build to the O(n·√C) path. */
+    * (n_vecs, n_agree, agree_ppm). Below 100% the O(n·√C) path cannot
+    * replace the exact index build without changing `q_ivf_*` answers. */
   def ivfBuildAgreement(spark: SparkSession, sfDir: String,
       stride: Long = 4L, superProbe: Int = 2): DataFrame = {
     val exact = assignmentsDerivation(spark, sfDir)

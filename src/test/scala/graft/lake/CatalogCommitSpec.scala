@@ -3,12 +3,22 @@ package graft.lake
 import graft.SparkTestBase
 import java.sql.Timestamp
 
-/** The manifest-log commit behind [[Catalog.append]]: concurrent
+/** The manifest-log commit behind [[Catalog.append]] (a catalog-only
+  * commit record, the format every commit path writes): concurrent
   * appends never lose each other's files (the `_temporary`-sharing
   * hazard of a naive `mode("append")`), crashes between CLAIM and DONE
-  * are finished exactly by [[Catalog.recoverAppends]], and pre-CLAIM
-  * orphans are swept. */
+  * are finished exactly by [[Catalog.recoverAppends]], pre-CLAIM
+  * orphans and a done commit's leftover stage are swept once aged out,
+  * and recovery over a clean log opens no record. */
 class CatalogCommitSpec extends SparkTestBase {
+
+  /** Stage-and-claim WITHOUT publishing — a writer that crashed
+    * between CLAIM and DONE. The record is the catalog-only one
+    * [[Catalog.append]] writes. */
+  private def claimCatOnly(fs: org.apache.hadoop.fs.FileSystem, layout: Layout,
+      uuid: String, staged: Seq[String]): Long =
+    Catalog.claimBody(fs, layout,
+      (Seq(s"v2 -1 ${System.currentTimeMillis()}", s"cat $uuid") ++ staged).mkString("\n"))
 
   private def entries(n: Int, offset: Int, sources: Seq[String]) = {
     val s = spark
@@ -66,7 +76,7 @@ class CatalogCommitSpec extends SparkTestBase {
     entries(5, 500, Seq("clicks", "tweets")).toDF()
       .write.mode("overwrite").partitionBy("source").parquet(stage.toString)
     val staged = Catalog.stagedFiles(fs, stage)
-    Catalog.claimCommit(fs, layout, uuid, staged)
+    claimCatOnly(fs, layout, uuid, staged)
 
     // the unfinished commit's rows are invisible (staged under `_`)
     assert(Catalog.load(spark, layout).count() == 10)
@@ -102,6 +112,57 @@ class CatalogCommitSpec extends SparkTestBase {
     Catalog.recoverAppends(spark, layout)
     assert(!fs.exists(orphan), "an aged unclaimed stage is a crashed writer — swept")
     assert(Catalog.load(spark, layout).count() == 4)
+  }
+
+  test("recoverAppends sweeps a DONE commit's leftover stage once aged out, and " +
+      "finishes an UNDONE commit's stage without ever sweeping it") {
+    val layout = Layout(tmpDir("cat-leftover"))
+    val fs = new org.apache.hadoop.fs.Path(layout.catalogDir)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val old = System.currentTimeMillis() - 3600_000L
+    // seq 1, committed and finished; then a crash between its DONE and
+    // its stage delete leaves the (published, now empty) stage behind
+    val leftover = new org.apache.hadoop.fs.Path(s"${layout.catalogDir}/_staged/done-uuid")
+    entries(4, 0, Seq("clicks")).toDF()
+      .write.mode("overwrite").partitionBy("source").parquet(leftover.toString)
+    assert(claimCatOnly(fs, layout, "done-uuid", Catalog.stagedFiles(fs, leftover)) == 1L)
+    Catalog.recoverAppends(spark, layout)
+    assert(Catalog.versions(spark, layout) == Seq(1L) && !fs.exists(leftover))
+    fs.mkdirs(new org.apache.hadoop.fs.Path(leftover, "source=clicks"))
+    // an undone commit (seq 2) whose stage is older than the grace window
+    val undone = new org.apache.hadoop.fs.Path(s"${layout.catalogDir}/_staged/undone-uuid")
+    entries(3, 500, Seq("clicks", "tweets")).toDF()
+      .write.mode("overwrite").partitionBy("source").parquet(undone.toString)
+    assert(claimCatOnly(fs, layout, "undone-uuid", Catalog.stagedFiles(fs, undone)) == 2L)
+    fs.setTimes(undone, old, -1L)
+
+    // a fresh leftover is inside the grace window: kept; the undone
+    // commit is finished from its record, its rows published
+    Catalog.recoverAppends(spark, layout)
+    assert(fs.exists(leftover), "a stage younger than the grace window is kept")
+    assert(Catalog.versions(spark, layout) == Seq(1L, 2L))
+    assert(Catalog.load(spark, layout).count() == 7,
+      "the undone commit's aged stage is finished, never swept")
+    assert(!fs.exists(undone), "finishing drops the undone commit's stage")
+
+    // aged out, the done commit's leftover is debris: swept
+    fs.setTimes(leftover, old, -1L)
+    Catalog.recoverAppends(spark, layout)
+    assert(!fs.exists(leftover), "a done commit names no live stage")
+    assert(Catalog.load(spark, layout).count() == 7)
+  }
+
+  test("recoverAppends over a clean log lists it once and opens no record") {
+    spark.sparkContext.hadoopConfiguration
+      .set("fs.countfs.impl", classOf[CountingLocalFs].getName)
+    val layout = Layout("countfs:" + tmpDir("cat-recover-reads"))
+    (0 until 3).foreach(i => Catalog.append(spark, layout, entries(2, i * 10, Seq("clicks"))))
+    CountingLocalFs.reset()
+    Catalog.recoverAppends(spark, layout)
+    assert(CountingLocalFs.logLists.get == 1)
+    assert(CountingLocalFs.logOpens.get == 0,
+      s"done records carry nothing recovery needs (opened ${CountingLocalFs.logOpens.get})")
+    assert(Catalog.load(spark, layout).count() == 6)
   }
 
   test("loadAsOf reconstructs each committed snapshot exactly from the log") {
@@ -251,7 +312,7 @@ class CatalogCommitSpec extends SparkTestBase {
     df.write.mode("overwrite").partitionBy("source").parquet(stage.toString)
     val fs = stage.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val staged = Catalog.stagedFiles(fs, stage)
-    Catalog.claimCommit(fs, layout, "crash-uuid", staged)
+    claimCatOnly(fs, layout, "crash-uuid", staged)
 
     assert(Catalog.versions(spark, layout) == Seq(1L),
       "a torn commit must not be a readable version")

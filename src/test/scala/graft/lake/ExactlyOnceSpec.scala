@@ -135,7 +135,8 @@ class ExactlyOnceSpec extends SparkTestBase {
     val stage = new Path(s"${layout.catalogDir}/_staged/gap-uuid")
     entries(3, 500).toDF().write.mode("overwrite").partitionBy("source")
       .parquet(stage.toString)
-    Catalog.claimCommit(fs, layout, "gap-uuid", Catalog.stagedFiles(fs, stage))
+    Catalog.claimBody(fs, layout, (Seq("v2 -1 1704067200000", "cat gap-uuid") ++
+      Catalog.stagedFiles(fs, stage)).mkString("\n"))
 
     Catalog.append(spark, layout, entries(4, 900)) // seq 3, done
 
