@@ -1,7 +1,9 @@
 package graft.lake
 
-import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Observation, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{StringType, StructField, StructType, TimestampType}
+import scala.jdk.CollectionConverters._
 
 /** One catalog row per ingested data object — the engine's equivalent
   * of the reference's DynamoDB table (partition key `Source`, sort key
@@ -530,10 +532,10 @@ object Catalog {
       fs.delete(new org.apache.hadoop.fs.Path(s"${layout.lakeDir}/_staged/$u"), true))
   }
 
-  /** EXACTLY-ONCE ingest commit: stage the catalog entries AND the
-    * distribution fan-out, then claim ONE commit record covering both
-    * plus the micro-batch completion marker. Crash-safe at every
-    * point:
+  /** EXACTLY-ONCE ingest commit: stage the distribution fan-out of
+    * `batch` (`source`, `key`, `json` rows) and its catalog entries,
+    * then claim ONE commit record covering both plus the micro-batch
+    * completion marker. Crash-safe at every point:
     *  - before CLAIM: both staging dirs are `_`-invisible orphans,
     *    swept by [[recoverAppends]]; the redelivered batch re-runs.
     *  - after CLAIM: [[recoverAppends]] (run by
@@ -543,29 +545,48 @@ object Catalog {
     *    sees its marker and skips. No interleaving double-publishes.
     * This is strictly stronger than the reference's
     * record-then-publish pair (ref `lambda_function.py:46-65`), which
-    * is at-least-once on both legs. */
-  def commitIngest(spark: SparkSession, layout: Layout, entries: Dataset[CatalogEntry],
-      dist: DataFrame, batchId: Long, markerPath: Option[String]): Unit = {
+    * is at-least-once on both legs.
+    *
+    * Cost: ONE pass over `batch` and no shuffle. The catalog entries
+    * come from the write that produced the distribution files (the
+    * Delta Lake rule: a commit's file metadata comes from its own
+    * write, not a second read) — an `Observation` collects the set of
+    * `(source, key)` pairs on that write (a set, so a retried task
+    * cannot list an object twice), and the catalog rows are built on
+    * the driver with `arrivalMs` as data, not as a literal inlined
+    * into generated code, so successive arrivals reuse one compiled
+    * plan. The rows land as one task, one file per source.
+    *
+    * Scale bound: the key set holds one entry per object in the batch
+    * — the same order as the file list the stream's file source
+    * already holds on the driver and logs per batch. A batch with no
+    * records writes no catalog dir and claims nothing. */
+  def commitIngest(spark: SparkSession, layout: Layout, batch: DataFrame,
+      arrivalMs: Long, batchId: Long, markerPath: Option[String]): Unit = {
     val fs = new org.apache.hadoop.fs.Path(layout.catalogDir)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val catUuid = java.util.UUID.randomUUID().toString
-    val catStage = new org.apache.hadoop.fs.Path(s"${layout.catalogDir}/_staged/$catUuid")
-    entries.toDF().write.mode("overwrite").partitionBy("source").parquet(catStage.toString)
-    val catFiles = stagedFiles(fs, catStage)
+    val objects = Observation()
     val distUuid = java.util.UUID.randomUUID().toString
     val distStage = new org.apache.hadoop.fs.Path(s"${layout.distributionDir}/_staged/$distUuid")
-    dist.write.mode("overwrite").partitionBy("source").format("json").save(distStage.toString)
+    batch.select("source", "key", "json")
+      .observe(objects, collect_set(struct(col("source"), col("key"))).as("keys"))
+      .write.mode("overwrite").partitionBy("source").format("json").save(distStage.toString)
     val distFiles = stagedFiles(fs, distStage, suffix = ".json")
-    if (catFiles.isEmpty && distFiles.isEmpty) {
-      fs.delete(catStage, true); fs.delete(distStage, true); return
-    }
+    // every observed record is in a staged file, so no file means no
+    // key (and the observation is not waited on)
+    if (distFiles.isEmpty) { fs.delete(distStage, true); return }
+    val ts = java.time.Instant.ofEpochMilli(arrivalMs)
+    val entries = objects.get("keys").asInstanceOf[Seq[Row]]
+      .map(k => Row(k.getString(0), ts, arrivalMs.toString, k.getString(1)))
+    val catUuid = java.util.UUID.randomUUID().toString
+    val catStage = new org.apache.hadoop.fs.Path(s"${layout.catalogDir}/_staged/$catUuid")
+    spark.createDataFrame(entries.asJava, catalogSchema).coalesce(1)
+      .write.mode("overwrite").partitionBy("source").parquet(catStage.toString)
+    val catFiles = stagedFiles(fs, catStage)
     val rec = V2Record(batchId, System.currentTimeMillis(), markerPath,
-      if (catFiles.nonEmpty) Some(catUuid) else None, catFiles,
-      if (distFiles.nonEmpty) Some(distUuid) else None, distFiles, Seq.empty)
+      Some(catUuid), catFiles, Some(distUuid), distFiles, Seq.empty)
     val seq = claimBody(fs, layout, v2Body(rec))
     finishV2(fs, layout, seq, rec)
-    if (catFiles.isEmpty) fs.delete(catStage, true)
-    if (distFiles.isEmpty) fs.delete(distStage, true)
   }
 
   /** Distribution-only manifest commit: publish `batch` into the
@@ -3879,7 +3900,9 @@ object Catalog {
   /** Derive catalog entries for a batch of ingested records that carry
     * `source` + `key` (object path) columns; arrival time is stamped
     * once per batch (the micro-batch is the unit of arrival, like the
-    * reference's SQS delivery). */
+    * reference's SQS delivery). A distributed job (a `distinct`
+    * shuffle), for whole-bronze [[Ingest.ingestBatch]]; the stream's
+    * [[commitIngest]] builds the same rows from its own write. */
   def entriesFor(batch: DataFrame, arrivalMs: Long): Dataset[CatalogEntry] = {
     import batch.sparkSession.implicits._
     batch.select(col("source"), col("key")).distinct()
@@ -3889,12 +3912,18 @@ object Catalog {
       .as[CatalogEntry]
   }
 
+  /** The [[CatalogEntry]] schema, spelled out: catalog reads and the
+    * driver-built ingest rows use it without deriving it by reflection. */
+  private val catalogSchema = StructType(Seq(
+    StructField("source", StringType), StructField("ts", TimestampType),
+    StructField("tsRaw", StringType), StructField("key", StringType)))
+
   /** The whole catalog area. Read with the fixed [[CatalogEntry]]
     * schema, so a read plans without a footer-inferring Spark job; the
     * select keeps the column order of the inferred read (data columns,
     * then the `source` partition column). */
   def load(spark: SparkSession, layout: Layout): DataFrame =
-    spark.read.schema(Encoders.product[CatalogEntry].schema)
+    spark.read.schema(catalogSchema)
       .parquet(layout.catalogDir)
       .select("ts", "tsRaw", "key", "source")
 

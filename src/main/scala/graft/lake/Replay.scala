@@ -23,9 +23,10 @@ import org.apache.spark.sql.functions._
   * driver materialization at any range size.
   *
   * Cost per call, one pass:
-  *  - ONE catalog query: a collect bounded at `maxCollectedKeys + 1`
-  *    keys, which both lists a small range and tells a big one apart;
-  *    an empty range returns 0 here, claiming nothing;
+  *  - ONE catalog query, with no shuffle: a collect bounded at
+  *    `maxCollectedKeys + 1` rows, which both lists a small range and
+  *    tells a big one apart; an empty range returns 0 here, claiming
+  *    nothing;
   *  - ONE read of the matched bronze objects, by the publish itself;
   *  - the returned count is observed on that publish write (an
   *    `Observation`), not counted by a second read.
@@ -54,15 +55,17 @@ object Replay {
 
   private def replayImpl(spark: SparkSession, layout: Layout, source: String,
       t0: java.sql.Timestamp, t1: java.sql.Timestamp, committed: Boolean): Long = {
-    val matched = Catalog.rangeQuery(spark, layout, source, t0, t1)
-      .select(col("key")).distinct()
-    // one catalog query: a small range needs its key list anyway, and
-    // one key past the cap is enough to tell a big range apart
-    val keys = matched.limit(maxCollectedKeys + 1).collect().map(_.getString(0))
-    if (keys.isEmpty) return 0L
+    val matched = Catalog.rangeQuery(spark, layout, source, t0, t1).select(col("key"))
+    // one catalog query, no shuffle: a small range needs its key list
+    // anyway, and one row past the cap is enough to tell a big range
+    // apart. The rows are deduplicated here, on the driver; counting
+    // duplicates toward the cap only sends a range to the semi-join
+    // early, which tolerates them.
+    val rows = matched.limit(maxCollectedKeys + 1).collect().map(_.getString(0))
+    if (rows.isEmpty) return 0L
 
     val records: DataFrame =
-      if (keys.length <= maxCollectedKeys) readObjects(spark, keys, source)
+      if (rows.length <= maxCollectedKeys) readObjects(spark, rows.distinct, source)
       else {
         // big range: list/scan ONLY this source's bronze partition
         // (path-level pruning — a filter above the split flatMap would

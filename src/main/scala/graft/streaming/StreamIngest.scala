@@ -59,8 +59,15 @@ object StreamIngest {
 
   /** One micro-batch = one reference SQS delivery: catalog-append the
     * distinct objects, publish every record per source. Factored out so
-    * batch tests (and batch [[graft.lake.Ingest.ingestBatch]]) exercise
-    * the same code path the stream runs — SURVEY §7.4 risk 3.
+    * batch tests exercise the same code path the stream runs — SURVEY
+    * §7.4 risk 3.
+    *
+    * Cost: ONE pass over the batch, with no shuffle — the tombstone
+    * gate is a filter inside that pass, and the catalog entries are
+    * observed on the distribution write
+    * ([[graft.lake.Catalog.commitIngest]]). The driver holds one
+    * catalog key per object in the batch, the order of the file list
+    * the stream's file source already holds there.
     *
     * Delivery semantics: END-TO-END EXACTLY-ONCE. The source side is
     * exactly-once (checkpointed file-stream offsets), and the sink
@@ -85,63 +92,48 @@ object StreamIngest {
     val fs = markersDir.getFileSystem(hconf)
     val marker = new org.apache.hadoop.fs.Path(markersDir, batchId.toString)
     if (batchId >= 0 && fs.exists(marker)) return // replayed completed batch
-    // persisted before the emptiness probe, so the probe, the catalog
-    // entries and the publish all read each bronze object once
-    val cached = batch.persist()
-    var gated = cached
-    try {
-      if (cached.isEmpty) return
-      // the standing-erasure gate: records matching a registered
-      // tombstone never enter the catalog or the distribution area —
-      // with lake/Erase.eraseWhere clearing existing copies, erasure
-      // stays complete while ingestion keeps running. The set is read
-      // per batch (tiny, driver-side) so a tombstone takes effect at
-      // the NEXT micro-batch without a stream restart.
-      val tombs = graft.lake.Erase.tombstones(spark, layout)
-      if (tombs.nonEmpty) {
-        val drop = graft.lake.Erase.recordMatcher(tombs)
-        import spark.implicits._
-        // persisted too: the catalog entries and the publish each read
-        // it, and the typed filter should run once per record
-        gated = cached.select("source", "key", "json").as[(String, String, String)]
-          .filter(r => !drop(r._1, r._3))
-          .toDF("source", "key", "json")
-          .persist()
-      }
-      // ONE atomic commit: catalog entries + distribution fan-out +
-      // completion marker, all under a single manifest-log record —
-      // see the delivery-semantics contract above
-      Catalog.commitIngest(spark, layout,
-        Catalog.entriesFor(gated, arrivalMs),
-        gated.select("source", "key", "json"), batchId,
-        if (batchId >= 0) Some(marker.toString) else None)
-      if (batchId >= 0) {
-        pruneMarkers(fs, markersDir, batchId)
-        // periodic log maintenance: fold the committed catalog-log
-        // prefix into one checkpoint and drop the folded records, so
-        // a long-lived stream's log replay cost stays O(1) + tail
-        // instead of O(total commits). Best-effort — a failed fold
-        // only delays the next one. NonFatal (not just IOException):
-        // a stray file in _log surfaces as NumberFormatException etc.,
-        // and maintenance must never crash-loop a committed batch.
-        if (batchId > 0 && batchId % checkpointEvery == 0)
-          try {
-            // waitMs=0: best-effort maintenance must never stall a
-            // micro-batch behind the fold/prune mutex (a stale lock
-            // only clears at the 10-min TTL steal — blocking here
-            // would add up to 2×waitMs of trigger latency); a fold
-            // already running bounds the tail for us
-            Catalog.checkpoint(spark, layout, waitMs = 0L)
-            Catalog.pruneLog(spark, layout, waitMs = 0L)
-          } catch {
-            case _: graft.lake.LockBusyException => () // another fold runs
-            case scala.util.control.NonFatal(e) =>
-            System.err.println(s"[StreamIngest] catalog-log maintenance failed (deferred): $e")
-          }
-      }
-    } finally {
-      if (gated ne cached) gated.unpersist()
-      cached.unpersist()
+    // the standing-erasure gate: records matching a registered
+    // tombstone never enter the catalog or the distribution area —
+    // with lake/Erase.eraseWhere clearing existing copies, erasure
+    // stays complete while ingestion keeps running. The set is read
+    // per batch (tiny, driver-side) so a tombstone takes effect at
+    // the NEXT micro-batch without a stream restart.
+    val tombs = graft.lake.Erase.tombstones(spark, layout)
+    val gated = if (tombs.isEmpty) batch else {
+      val drop = graft.lake.Erase.recordMatcher(tombs)
+      import spark.implicits._
+      batch.select("source", "key", "json").as[(String, String, String)]
+        .filter(r => !drop(r._1, r._3))
+        .toDF("source", "key", "json")
+    }
+    // ONE atomic commit: catalog entries + distribution fan-out +
+    // completion marker, all under a single manifest-log record —
+    // see the delivery-semantics contract above
+    Catalog.commitIngest(spark, layout, gated, arrivalMs, batchId,
+      if (batchId >= 0) Some(marker.toString) else None)
+    if (batchId >= 0) {
+      pruneMarkers(fs, markersDir, batchId)
+      // periodic log maintenance: fold the committed catalog-log
+      // prefix into one checkpoint and drop the folded records, so
+      // a long-lived stream's log replay cost stays O(1) + tail
+      // instead of O(total commits). Best-effort — a failed fold
+      // only delays the next one. NonFatal (not just IOException):
+      // a stray file in _log surfaces as NumberFormatException etc.,
+      // and maintenance must never crash-loop a committed batch.
+      if (batchId > 0 && batchId % checkpointEvery == 0)
+        try {
+          // waitMs=0: best-effort maintenance must never stall a
+          // micro-batch behind the fold/prune mutex (a stale lock
+          // only clears at the 10-min TTL steal — blocking here
+          // would add up to 2×waitMs of trigger latency); a fold
+          // already running bounds the tail for us
+          Catalog.checkpoint(spark, layout, waitMs = 0L)
+          Catalog.pruneLog(spark, layout, waitMs = 0L)
+        } catch {
+          case _: graft.lake.LockBusyException => () // another fold runs
+          case scala.util.control.NonFatal(e) =>
+          System.err.println(s"[StreamIngest] catalog-log maintenance failed (deferred): $e")
+        }
     }
   }
 

@@ -6,11 +6,8 @@ import java.sql.Timestamp
 import org.apache.spark.ListenerBusAccess
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.execution.QueryExecution
-import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{StringType, TimestampType}
-import org.apache.spark.sql.util.QueryExecutionListener
 
 /** The replay's cost shape: one bounded catalog collect, ONE bronze
   * read (the publish counts its own rows), nothing claimed for an
@@ -46,27 +43,8 @@ class ReplaySpec extends SparkTestBase {
   /** Runs `body`, returning its value and the number of query
     * executions in it whose plan reads a file under the bronze area. */
   private def bronzeReadsDuring[T](layout: Layout)(body: => T): (T, Int) = {
-    val bronze = new org.apache.hadoop.fs.Path(layout.bronzeDir).toUri.getPath
-    val reads = new java.util.concurrent.atomic.AtomicInteger()
-    def readsBronze(qe: QueryExecution): Boolean =
-      qe.analyzed.collectWithSubqueries { case l: LogicalRelation => l.relation }
-        .exists {
-          case r: HadoopFsRelation => r.location.rootPaths.exists(_.toUri.getPath.startsWith(bronze))
-          case _ => false
-        }
-    val listener = new QueryExecutionListener {
-      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
-        if (readsBronze(qe)) reads.incrementAndGet()
-      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit =
-        if (readsBronze(qe)) reads.incrementAndGet()
-    }
-    ListenerBusAccess.drain(spark.sparkContext)
-    spark.listenerManager.register(listener)
-    try {
-      val out = body
-      ListenerBusAccess.drain(spark.sparkContext)
-      (out, reads.get())
-    } finally spark.listenerManager.unregister(listener)
+    val (out, executions) = QueryExecutions.during(spark)(body)
+    (out, executions.count(QueryExecutions.readsUnder(layout.bronzeDir)))
   }
 
   private type ReplayFn = (SparkSession, Layout, String, Timestamp, Timestamp) => Long
