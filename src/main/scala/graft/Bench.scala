@@ -1,5 +1,6 @@
 package graft
 import org.apache.spark.sql.SparkSession
+import scala.util.control.NonFatal
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -73,7 +74,7 @@ object Bench {
         "concat('a', id % 31, ' b', id % 17, ' c', id % 13) AS text")
       val toks = warm.selectExpr("explode(split(text, ' ')) AS tok")
       toks.groupBy("tok").count().join(toks, "tok").count()
-    } catch { case e: Throwable =>
+    } catch { case NonFatal(e) =>
       System.err.println(s"[bench] warmup failed: ${e.getClass.getName}: ${e.getMessage}")
     }
     // a failed query must be VISIBLE in the emitted JSON (name +
@@ -88,7 +89,7 @@ object Bench {
       try {
         fn(spark, sfDir).count()
         results(name) = (System.nanoTime() - t0) / 1e9
-      } catch { case e: Throwable => failures(name) = e.getClass.getSimpleName }
+      } catch { case NonFatal(e) => failures(name) = e.getClass.getSimpleName }
       // storage hygiene BETWEEN queries (after the clock stops): free
       // the query's lineage-truncation checkpoint blocks. Without this
       // a 228-query run accumulates every query's checkpointed

@@ -1,6 +1,7 @@
 package graft.lake
 
 import org.apache.spark.sql.{DataFrame, Dataset, Observation, Row, SparkSession}
+import org.apache.spark.sql.catalyst.util.DateTimeUtils
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{StringType, StructField, StructType, TimestampType}
 import scala.jdk.CollectionConverters._
@@ -38,23 +39,62 @@ object Catalog {
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     val uuid = java.util.UUID.randomUUID().toString
     val stage = new org.apache.hadoop.fs.Path(s"${layout.catalogDir}/_staged/$uuid")
-    entries.toDF().write.mode("overwrite").partitionBy("source").parquet(stage.toString)
-    val staged = stagedFiles(fs, stage)
+    val staged = stageCatalog(fs, stage, entries.toDF(), ts = None)
     if (staged.isEmpty) { fs.delete(stage, true); return }
     val rec = V2Record(-1L, System.currentTimeMillis(), None,
-      Some(uuid), staged, None, Seq.empty, Seq.empty)
+      Some(uuid), staged.map(_._1), None, Seq.empty, Seq.empty, catStats = staged)
     val seq = claimBody(fs, layout, v2Body(rec))
     finishV2(fs, layout, seq, rec)
   }
 
   private[lake] def stagedFiles(fs: org.apache.hadoop.fs.FileSystem,
       stage: org.apache.hadoop.fs.Path, suffix: String = ".parquet"): Seq[String] =
+    stagedSizes(fs, stage, suffix).map(_._1)
+
+  /** [[stagedFiles]] with each file's byte size, from the same listing. */
+  private def stagedSizes(fs: org.apache.hadoop.fs.FileSystem,
+      stage: org.apache.hadoop.fs.Path, suffix: String): Seq[(String, Long)] =
     fs.listStatus(stage)
       .filter(s => s.isDirectory && s.getPath.getName.startsWith("source="))
       .flatMap(d => fs.listStatus(d.getPath)
         .filter(f => f.isFile && f.getPath.getName.endsWith(suffix))
-        .map(f => s"${d.getPath.getName}/${f.getPath.getName}"))
-      .toSeq.sorted
+        .map(f => (s"${d.getPath.getName}/${f.getPath.getName}", f.getLen)))
+      .toSeq.sortBy(_._1)
+
+  /** What a commit record knows of one catalog file: its byte size and
+    * the min and max of its `ts` in microseconds (None when unknown),
+    * so a catalog read plans from the log alone ([[readCatalogFiles]],
+    * [[rangeQuery]]). */
+  private final case class CatStat(bytes: Long, ts: Option[(Long, Long)]) {
+    def fields: String = ts.fold(s"$bytes - -") { case (lo, hi) => s"$bytes $lo $hi" }
+  }
+
+  private object CatStat {
+    def parse(bytes: String, lo: String, hi: String): CatStat =
+      CatStat(bytes.toLong, lo.toLongOption.zip(hi.toLongOption))
+  }
+
+  /** Stage catalog rows under `stage`, one directory per source, and
+    * return each staged file with its [[CatStat]]: the size from the
+    * listing the record needs anyway, and the `ts` bounds the caller
+    * knows, else the ones an `Observation` takes on this write (no
+    * second pass). A null `ts` leaves the bounds unknown. */
+  private def stageCatalog(fs: org.apache.hadoop.fs.FileSystem,
+      stage: org.apache.hadoop.fs.Path, rows: DataFrame,
+      ts: Option[(Long, Long)]): Seq[(String, CatStat)] = {
+    val observed = Observation()
+    val write = if (ts.isDefined) rows else rows.observe(observed,
+      min(unix_micros(col("ts"))).as("lo"), max(unix_micros(col("ts"))).as("hi"),
+      count(lit(1)).as("rows"), count(col("ts")).as("timed"))
+    write.write.mode("overwrite").partitionBy("source").parquet(stage.toString)
+    // no staged file: nothing to wait for
+    lazy val bounds = ts.orElse {
+      val m = observed.get
+      Option.when(m("rows") == m("timed"))(
+        (m("lo").asInstanceOf[Long], m("hi").asInstanceOf[Long]))
+    }
+    stagedSizes(fs, stage, ".parquet").map { case (rel, bytes) => rel -> CatStat(bytes, bounds) }
+  }
 
   private def logDir(layout: Layout) = s"${layout.catalogDir}/_log"
 
@@ -373,7 +413,11 @@ object Catalog {
       // cross-table transaction id ([[commitLakeTransaction]]): the
       // record is INVISIBLE until `<root>/_txn/<id>.txn` says commit —
       // the one root file is the atomic commit point for all N tables
-      txn: Option[String] = None)
+      txn: Option[String] = None,
+      // per catalog file (staged relative path): size and `ts` bounds
+      // (`catstat <bytes> <lo> <hi> <rel>`); a record without them
+      // still reads, at one status call per file
+      catStats: Seq[(String, CatStat)] = Seq.empty)
 
   private def v2Body(r: V2Record): String = {
     val b = new StringBuilder
@@ -393,6 +437,7 @@ object Catalog {
     if (r.lakeReAdds.nonEmpty) { b ++= "\nlakere"; r.lakeReAdds.foreach(f => b ++= s"\n$f") }
     if (r.dvReAdds.nonEmpty) { b ++= "\ndvre"; r.dvReAdds.foreach(f => b ++= s"\n$f") }
     r.fileStats.foreach { case (rel, json) => b ++= s"\nfstat $rel $json" }
+    r.catStats.foreach { case (rel, st) => b ++= s"\ncatstat ${st.fields} $rel" }
     r.expects.foreach { case (n, pred) => b ++= s"\nexpect $n $pred" }
     r.expectRms.foreach(n => b ++= s"\nexpectrm $n")
     r.props.foreach { case (k, v) => b ++= s"\nprop $k $v" }
@@ -419,6 +464,7 @@ object Catalog {
     val renameCols = Seq.newBuilder[(String, String)]
     val dropCols = Seq.newBuilder[String]
     val fileStats = Seq.newBuilder[(String, String)]
+    val catStats = Seq.newBuilder[(String, CatStat)]
     val expects = Seq.newBuilder[(String, String)]
     val expectRms = Seq.newBuilder[String]
     val props = Seq.newBuilder[(String, String)]
@@ -434,6 +480,10 @@ object Catalog {
         val rest = l.stripPrefix("fstat ")
         val sp = rest.indexOf(' ')
         fileStats += ((rest.substring(0, sp), rest.substring(sp + 1)))
+      }
+      else if (l.startsWith("catstat ")) {
+        val a = l.split(" ", 5)
+        catStats += ((a(4), CatStat.parse(a(1), a(2), a(3))))
       }
       else if (l.startsWith("expectrm ")) expectRms += l.stripPrefix("expectrm ")
       else if (l.startsWith("expect ")) {
@@ -490,7 +540,7 @@ object Catalog {
       dvUuid, dv.result(), dvRemoves.result(),
       lakeReAdds.result(), dvReAdds.result(), fileStats.result(),
       expects.result(), expectRms.result(),
-      props.result(), propRms.result(), note, txn)
+      props.result(), propRms.result(), note, txn, catStats.result())
   }
 
   /** Read one `.commit` record. Every record starts with its
@@ -555,7 +605,9 @@ object Catalog {
     * cannot list an object twice), and the catalog rows are built on
     * the driver with `arrivalMs` as data, not as a literal inlined
     * into generated code, so successive arrivals reuse one compiled
-    * plan. The rows land as one task, one file per source.
+    * plan. The rows land as one task, one file per source, and the
+    * record gives each file its size and the `ts` bounds `arrivalMs`
+    * fixes, so a range read plans from the log ([[rangeQuery]]).
     *
     * Scale bound: the key set holds one entry per object in the batch
     * — the same order as the file list the stream's file source
@@ -580,11 +632,13 @@ object Catalog {
       .map(k => Row(k.getString(0), ts, arrivalMs.toString, k.getString(1)))
     val catUuid = java.util.UUID.randomUUID().toString
     val catStage = new org.apache.hadoop.fs.Path(s"${layout.catalogDir}/_staged/$catUuid")
-    spark.createDataFrame(entries.asJava, catalogSchema).coalesce(1)
-      .write.mode("overwrite").partitionBy("source").parquet(catStage.toString)
-    val catFiles = stagedFiles(fs, catStage)
+    val arrivalUs = Math.multiplyExact(arrivalMs, 1000L)
+    val catFiles = stageCatalog(fs, catStage,
+      spark.createDataFrame(entries.asJava, catalogSchema).coalesce(1),
+      ts = Some((arrivalUs, arrivalUs)))
     val rec = V2Record(batchId, System.currentTimeMillis(), markerPath,
-      Some(catUuid), catFiles, Some(distUuid), distFiles, Seq.empty)
+      Some(catUuid), catFiles.map(_._1), Some(distUuid), distFiles, Seq.empty,
+      catStats = catFiles)
     val seq = claimBody(fs, layout, v2Body(rec))
     finishV2(fs, layout, seq, rec)
   }
@@ -635,8 +689,7 @@ object Catalog {
     val lakeFiles = stagedFiles(fs, lakeStage)
     val catUuid = java.util.UUID.randomUUID().toString
     val catStage = new org.apache.hadoop.fs.Path(s"${layout.catalogDir}/_staged/$catUuid")
-    entries.toDF().write.mode("overwrite").partitionBy("source").parquet(catStage.toString)
-    val catFiles = stagedFiles(fs, catStage)
+    val catFiles = stageCatalog(fs, catStage, entries.toDF(), ts = None)
     if (lakeFiles.isEmpty && catFiles.isEmpty) {
       fs.delete(lakeStage, true); fs.delete(catStage, true); return
     }
@@ -646,10 +699,10 @@ object Catalog {
         Seq.empty[(String, String)]
       else computeFileStats(spark, lakeStage.toString, declStats, declBloom)
     val rec = V2Record(-1L, System.currentTimeMillis(), None,
-      if (catFiles.nonEmpty) Some(catUuid) else None, catFiles,
+      if (catFiles.nonEmpty) Some(catUuid) else None, catFiles.map(_._1),
       None, Seq.empty, Seq.empty,
       if (lakeFiles.nonEmpty) Some(lakeUuid) else None, lakeFiles,
-      fileStats = stats)
+      fileStats = stats, catStats = catFiles)
     val seq = claimBody(fs, layout, v2Body(rec))
     finishV2(fs, layout, seq, rec)
     if (catFiles.isEmpty) fs.delete(catStage, true)
@@ -3918,14 +3971,43 @@ object Catalog {
     StructField("source", StringType), StructField("ts", TimestampType),
     StructField("tsRaw", StringType), StructField("key", StringType)))
 
-  /** The whole catalog area. Read with the fixed [[CatalogEntry]]
-    * schema, so a read plans without a footer-inferring Spark job; the
-    * select keeps the column order of the inferred read (data columns,
-    * then the `source` partition column). */
+  /** The columns a catalog file holds; `source` is its directory. */
+  private val catalogFileSchema = StructType(catalogSchema.filterNot(_.name == "source"))
+
+  /** The whole committed catalog, as of the log's head: `(ts, tsRaw,
+    * key, source)`, the inferred read's columns and types. */
   def load(spark: SparkSession, layout: Layout): DataFrame =
-    spark.read.schema(catalogSchema)
-      .parquet(layout.catalogDir)
-      .select("ts", "tsRaw", "key", "source")
+    readCatalogFiles(spark, layout, catalogFilesAsOf(spark, layout, Long.MaxValue))
+
+  /** The catalog's published files as of `version`, each with what its
+    * record knows of it. */
+  private def catalogFilesAsOf(spark: SparkSession, layout: Layout,
+      version: Long): Seq[(String, Option[CatStat])] = {
+    val state = readLog(spark, layout)
+    state.cat.collect { case (seq, live) if seq <= version => (live, state.catStatOf.get(live)) }
+  }
+
+  /** The one catalog reader: `files` (live paths) through a
+    * [[LogFileIndex]] with the fixed catalog schema, so planning lists
+    * no directory, opens no footer and starts no Spark job. A file
+    * whose record carries no size (written before sizes were recorded)
+    * costs one status call. No file gives an empty frame with the same
+    * columns. */
+  private def readCatalogFiles(spark: SparkSession, layout: Layout,
+      files: Seq[(String, Option[CatStat])]): DataFrame =
+    if (files.isEmpty)
+      spark.createDataFrame(java.util.Collections.emptyList[Row](),
+        StructType(catalogFileSchema ++ LogFileIndex.partitionSchema))
+    else {
+      val root = new org.apache.hadoop.fs.Path(layout.catalogDir)
+      val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      val qualified = fs.makeQualified(root)
+      LogFileIndex.read(spark, qualified, catalogFileSchema, files.map { case (live, st) =>
+        val path = new org.apache.hadoop.fs.Path(qualified, live)
+        st.fold(fs.getFileStatus(path))(s =>
+          new org.apache.hadoop.fs.FileStatus(s.bytes, false, 1, 0L, 0L, path))
+      })
+    }
 
   /** Committed (fully published) catalog versions, ascending — the
     * manifest log's `.commit` records that carry a `.done` marker.
@@ -4112,7 +4194,9 @@ object Catalog {
       psF.sortBy(e => (e._1, e._2)).map { case (s, k, v) => s"PS $s $k $v" } ++
       psrF.sortBy(e => (e._1, e._2)).map { case (s, k) => s"PSR $s $k" } ++
       state.notes.filter(_._1 <= cap).sortBy(_._1)
-        .map { case (s, n) => s"N $s $n" }
+        .map { case (s, n) => s"N $s $n" } ++
+      state.catStats.filter(_._1 <= cap).sortBy(e => (e._1, e._2))
+        .map { case (s, p, st) => s"CS $s ${st.fields} $p" }
     val body = (lines :+ s"#end ${lines.size}").mkString("\n")
     val tmp = new org.apache.hadoop.fs.Path(logDir(layout),
       s"_cp-${java.util.UUID.randomUUID().toString.take(12)}.tmp")
@@ -4253,7 +4337,11 @@ object Catalog {
       // key) — extended with observed txn resolutions, so a snapshot
       // plan memoized against a pre-commit parse can never be served
       // for the post-commit state (same listing, different content)
-      digest: String = "")
+      digest: String = "",
+      // catalog file facts: (seq, live path, size and ts bounds)
+      catStats: Seq[(Long, String, CatStat)] = Seq.empty) {
+    lazy val catStatOf: Map[String, CatStat] = catStats.map(e => e._2 -> e._3).toMap
+  }
 
   /** `_log/_last_checkpoint` — the Delta-style POINTER HINT bounding
     * the object-store LIST cost of a cold log read: at 10⁴ commits a
@@ -4549,13 +4637,17 @@ object Catalog {
     val dv = Seq.newBuilder[(Long, String)]
     val dvRemoves = Seq.newBuilder[(Long, Long, String)]
     val fileStats = Seq.newBuilder[(Long, String, String)]
+    val catStats = Seq.newBuilder[(Long, String, CatStat)]
     val expects = Seq.newBuilder[(Long, String, String)]
     val expectRms = Seq.newBuilder[(Long, String)]
     val props = Seq.newBuilder[(Long, String, String)]
     val propRms = Seq.newBuilder[(Long, String)]
     val notes = Seq.newBuilder[(Long, String)]
     cpLines.filter(_.nonEmpty).foreach { l =>
-      if (l.startsWith("N ")) {
+      if (l.startsWith("CS ")) {
+        val a = l.split(" ", 6)
+        catStats += ((a(1).toLong, a(5), CatStat.parse(a(2), a(3), a(4))))
+      } else if (l.startsWith("N ")) {
         val a = l.split(" ", 3); notes += ((a(1).toLong, a(2)))
       } else if (l.startsWith("PSR ")) {
         val a = l.split(' '); propRms += ((a(1).toLong, a(2)))
@@ -4628,6 +4720,7 @@ object Catalog {
           r.lakeReAdds.foreach(p => lake += ((seq, p)))
           r.dvReAdds.foreach(p => dv += ((seq, p)))
           r.fileStats.foreach { case (rel, json) => fileStats += ((seq, live(rel), json)) }
+          r.catStats.foreach { case (rel, st) => catStats += ((seq, live(rel), st)) }
           r.expects.foreach { case (n, pred) => expects += ((seq, n, pred)) }
           r.expectRms.foreach(n => expectRms += ((seq, n)))
           r.props.foreach { case (k, v) => props += ((seq, k, v)) }
@@ -4643,7 +4736,8 @@ object Catalog {
       props.result(), propRms.result(), notes.result(),
       pendingTxns = pendingTxns.result(),
       txnIds = txnSeen.keys.toSeq.sorted,
-      abortedTxns = abortedTxns.result(), maxSeq = maxSeq),
+      abortedTxns = abortedTxns.result(), maxSeq = maxSeq,
+      catStats = catStats.result()),
       txnSeen.toMap)
   }
 
@@ -4709,28 +4803,46 @@ object Catalog {
     * writer's in-flight files are invisible regardless of rename
     * timing). Each qualifying `.commit` record names its published
     * files; the snapshot is the union of those file lists for
-    * committed versions ≤ `version`, read with the catalog root as
-    * basePath so `source` partition pruning still applies.
+    * committed versions ≤ `version`, read like [[load]] (same columns,
+    * `source` partition pruning, no planning job), and a version with
+    * no catalog file is an empty frame with those columns.
     *
     * Scale: the log is one tiny record per commit (driver-side list,
     * O(commits) — the same order as Delta's log replay); the data
     * read is a normal pruned parquet scan. */
-  def loadAsOf(spark: SparkSession, layout: Layout, version: Long): DataFrame = {
-    val paths = readLog(spark, layout).cat
-      .filter(_._1 <= version)
-      .map { case (_, live) => s"${layout.catalogDir}/$live" }
-    if (paths.isEmpty)
-      spark.emptyDataFrame
-    else
-      spark.read.option("basePath", layout.catalogDir).parquet(paths: _*)
-  }
+  def loadAsOf(spark: SparkSession, layout: Layout, version: Long): DataFrame =
+    readCatalogFiles(spark, layout, catalogFilesAsOf(spark, layout, version))
 
-  /** O11: `Source = s AND ts BETWEEN t0 AND t1`. Equality on the
-    * partition column prunes directories (DynamoDB partition-key
-    * equality); the range predicate pushes into parquet row-group
-    * min/max stats (sort-key BETWEEN). Storage-side pruning at any SF. */
+  /** O11: `Source = s AND ts BETWEEN t0 AND t1`, planned from the log.
+    * Equality on the partition column prunes directories (DynamoDB
+    * partition-key equality). For the sort-key BETWEEN, each file's
+    * recorded `ts` bounds skip the files wholly outside the range, and
+    * the files wholly inside it are read with no row filter, so the
+    * plan inlines no bound and successive ranges reuse one compiled
+    * plan. Only files with unknown or partly overlapping bounds keep
+    * the `ts` filter. The comparison is in microseconds, the unit of
+    * the stored `ts` and of the filter's literals, so the skip is
+    * exact. No overlapping file gives an empty frame without a job. */
   def rangeQuery(spark: SparkSession, layout: Layout, source: String,
-      t0: java.sql.Timestamp, t1: java.sql.Timestamp): DataFrame =
-    load(spark, layout)
-      .filter(col("source") === source && col("ts").between(t0, t1))
+      t0: java.sql.Timestamp, t1: java.sql.Timestamp): DataFrame = {
+    val range = for (a <- Option(t0); b <- Option(t1))
+      yield (DateTimeUtils.fromJavaTimestamp(a), DateTimeUtils.fromJavaTimestamp(b))
+    // Some(inside) when the bounds settle the file, None when rows must be filtered
+    def settled(st: Option[CatStat]): Option[Boolean] = for {
+      (r0, r1) <- range
+      (lo, hi) <- st.flatMap(_.ts)
+      inside = r0 <= lo && hi <= r1
+      if inside || hi < r0 || lo > r1
+    } yield inside
+    val files = catalogFilesAsOf(spark, layout, Long.MaxValue)
+      .filter { case (live, _) => LogFileIndex.sourceOf(live.takeWhile(_ != '/')).contains(source) }
+      .groupBy { case (_, st) => settled(st) }
+    val ofSource = col("source") === source
+    Seq(
+      files.get(Some(true)).map(readCatalogFiles(spark, layout, _).filter(ofSource)),
+      files.get(None).map(readCatalogFiles(spark, layout, _)
+        .filter(ofSource && col("ts").between(t0, t1))))
+      .flatten.reduceOption(_ union _)
+      .getOrElse(readCatalogFiles(spark, layout, Seq.empty))
+  }
 }

@@ -25,7 +25,12 @@ import org.apache.spark.sql.functions._
   * Cost per call, one pass:
   *  - ONE catalog query, with no shuffle: a collect bounded at
   *    `maxCollectedKeys + 1` rows, which both lists a small range and
-  *    tells a big one apart; an empty range returns 0 here, claiming
+  *    tells a big one apart. [[Catalog.rangeQuery]] plans it from the
+  *    manifest log: it lists no catalog directory, opens only the
+  *    catalog files whose `ts` bounds overlap the range, and compiles
+  *    no new code for new bounds when those files lie wholly inside
+  *    them (every ingest commit's files hold one arrival instant). An
+  *    empty range returns 0 here without a Spark job, claiming
   *    nothing;
   *  - ONE read of the matched bronze objects, by the publish itself;
   *  - the returned count is observed on that publish write (an
