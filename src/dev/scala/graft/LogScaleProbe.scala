@@ -21,7 +21,18 @@ import org.apache.spark.sql.SparkSession
   * Numbers land in BASELINE.md round-14; the honest bound they
   * document: the log layer is O(live files) driver memory and parse
   * time per COLD read (amortized by the memo for warm readers), the
-  * same contract as Delta's driver-side snapshot state. */
+  * same contract as Delta's driver-side snapshot state.
+  *
+  * The same sizes are then run for a stream-built catalog, whose
+  * records carry one catalog entry per ingested object (`CE` lines in
+  * the fold, `catent` lines in a 32-record live tail of 100 objects
+  * each, 100 objects per folded commit, 8 sources, bronze-shaped
+  * keys). It measures the same cold and warm reads, one narrow
+  * `rangeQuery` collect (after one untimed), the re-fold and the
+  * prune.
+  *
+  * Run: `sbt "runMain graft.LogScaleProbe [n1,n2,...]"` (default
+  * 100000,1000000). */
 object LogScaleProbe {
   def main(args: Array[String]): Unit = {
     val spark = SparkSession.builder().master("local[8]")
@@ -99,6 +110,59 @@ object LogScaleProbe {
         f"liveListMs=${files._2}%.0f refoldMs=$fold%.0f " +
         f"pruneMs=$prune%.0f (folded=$folded pruned=$pruned) " +
         f"cpMb=${cpBytes / 1e6}%.1f heapDeltaMb=${h1 - h0}%.0f")
+    }
+
+    val perCommit = 100
+    def key(seq: Int, i: Int): String =
+      f"file:///data/lake/bronze/source=s${i % 8}%d/2024/01/01/00/" +
+        f"ingest-1-2024-01-01-00-00-00-$seq%08x-$i%04x.json.gz"
+    def arrival(seq: Int): Long = 1704067200000L + seq * 1000L
+    def buildEntries(n: Int): (graft.lake.Layout, Int) = {
+      val root = Files.createTempDirectory(s"logscale-entries-$n").toString
+      val log = Paths.get(s"$root/catalog/_log")
+      Files.createDirectories(log)
+      val folded = n / perCommit
+      val w = Files.newBufferedWriter(log.resolve(f"$folded%020d.checkpoint"))
+      try {
+        (1 to folded).foreach { seq =>
+          (0 until perCommit).foreach(i =>
+            w.write(s"CE $seq ${arrival(seq)} s${i % 8} ${key(seq, i)}\n"))
+        }
+        w.write(s"#end ${folded * perCommit}\n")
+      } finally w.close()
+      (folded + 1 to folded + 32).foreach { seq =>
+        val body = new StringBuilder(s"v2 $seq ${arrival(seq)}\ndist u$seq")
+        (0 until 8).foreach(i => body ++= s"\nsource=s$i/part-00000-$seq.json")
+        (0 until perCommit).foreach(i =>
+          body ++= s"\ncatent ${arrival(seq)} s${i % 8} ${key(seq, i)}")
+        Files.write(log.resolve(f"$seq%020d.commit"), body.result().getBytes("UTF-8"))
+        Files.write(log.resolve(f"$seq%020d.done"), Array.emptyByteArray)
+      }
+      (graft.lake.Layout(root), folded + 32)
+    }
+    def ms[T](body: => T): (T, Double) = {
+      val t = System.nanoTime(); val out = body; (out, (System.nanoTime() - t) / 1e6)
+    }
+
+    args.headOption.map(_.split(',').map(_.toInt).toSeq)
+      .getOrElse(Seq(100000, 1000000)).foreach { n =>
+      val (layout, head) = buildEntries(n)
+      val h0 = heapMb()
+      val (versions, cold) = ms(graft.lake.Catalog.versions(spark, layout).size)
+      val h1 = heapMb()
+      val (_, warm) = ms(graft.lake.Catalog.versions(spark, layout))
+      def oneArrival(seq: Int): Int = graft.lake.Catalog.rangeQuery(spark, layout, "s3",
+        new java.sql.Timestamp(arrival(seq)), new java.sql.Timestamp(arrival(seq))).collect().length
+      oneArrival(head - 41) // the JVM's first Spark query pays the session's warm-up
+      val (keys, range) = ms(oneArrival(head - 40))
+      val (folded, fold) = ms(graft.lake.Catalog.checkpoint(spark, layout))
+      val (pruned, prune) = ms(graft.lake.Catalog.pruneLog(spark, layout))
+      val cpBytes = Files.size(Paths.get(s"${layout.catalogDir}/_log/" + f"$head%020d.checkpoint"))
+      println(f"[logscale-entries] n=${head * perCommit}%d versions=$versions%d " +
+        f"coldReadMs=$cold%.0f warmReadMs=$warm%.2f rangeKeys=$keys%d " +
+        f"rangeQueryMs=$range%.0f refoldMs=$fold%.0f pruneMs=$prune%.0f " +
+        f"(folded=$folded pruned=$pruned) cpMb=${cpBytes / 1e6}%.1f " +
+        f"heapDeltaMb=${h1 - h0}%.0f")
     }
     spark.stop()
   }

@@ -31,6 +31,11 @@ object Bench {
     // fresh driver environment pays anyway. Disable (to measure a
     // warm-index serving posture explicitly) with
     // SPARK_GRAFT_KEEP_ARTIFACTS=1.
+    // ONE SESSION PER CORPUS: the erase deletes committed artifacts
+    // keyed by this corpus with no lock, so run no second process over
+    // the same corpus meanwhile (another bench, or a Verify whose
+    // DuckDB replay still reads them) — or set
+    // SPARK_GRAFT_KEEP_ARTIFACTS=1 in every process but one.
     if (!sys.env.get("SPARK_GRAFT_KEEP_ARTIFACTS").contains("1")) {
       try {
         // every artifact-family key derivation this corpus uses:

@@ -1,10 +1,13 @@
 package graft.lake
 
-import org.apache.spark.sql.{DataFrame, Dataset, Observation, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, GraftDmlBridge, Observation, Row, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+import org.apache.spark.sql.catalyst.types.DataTypeUtils
 import org.apache.spark.sql.catalyst.util.DateTimeUtils
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{StringType, StructField, StructType, TimestampType}
-import scala.jdk.CollectionConverters._
+import org.apache.spark.unsafe.types.UTF8String
 
 /** One catalog row per ingested data object — the engine's equivalent
   * of the reference's DynamoDB table (partition key `Source`, sort key
@@ -26,8 +29,10 @@ final case class CatalogEntry(source: String, ts: java.sql.Timestamp, tsRaw: Str
 object Catalog {
 
   /** O6+O7: project (source, ts, key) and append to the catalog table
-    * as one catalog-only commit record — the catalog leg of
-    * [[commitIngest]], with the same STAGE → CLAIM → PUBLISH → DONE
+    * as one catalog-only commit record, staged as parquet files (a
+    * distributed Dataset's rows are not on the driver; a stream's
+    * micro-batch logs its entries in the record instead,
+    * [[commitIngest]]), with the STAGE → CLAIM → PUBLISH → DONE
     * protocol and [[recoverAppends]] crash recovery. The write is
     * distributed and uncapped (the reference's DynamoDB 25-item batch
     * cap and its silent drop of unprocessed items have no equivalent
@@ -39,7 +44,7 @@ object Catalog {
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     val uuid = java.util.UUID.randomUUID().toString
     val stage = new org.apache.hadoop.fs.Path(s"${layout.catalogDir}/_staged/$uuid")
-    val staged = stageCatalog(fs, stage, entries.toDF(), ts = None)
+    val staged = stageCatalog(fs, stage, entries.toDF())
     if (staged.isEmpty) { fs.delete(stage, true); return }
     val rec = V2Record(-1L, System.currentTimeMillis(), None,
       Some(uuid), staged.map(_._1), None, Seq.empty, Seq.empty, catStats = staged)
@@ -76,24 +81,66 @@ object Catalog {
 
   /** Stage catalog rows under `stage`, one directory per source, and
     * return each staged file with its [[CatStat]]: the size from the
-    * listing the record needs anyway, and the `ts` bounds the caller
-    * knows, else the ones an `Observation` takes on this write (no
-    * second pass). A null `ts` leaves the bounds unknown. */
+    * listing the record needs anyway, and the `ts` bounds an
+    * `Observation` takes on this write (no second pass). A null `ts`
+    * leaves the bounds unknown. */
   private def stageCatalog(fs: org.apache.hadoop.fs.FileSystem,
-      stage: org.apache.hadoop.fs.Path, rows: DataFrame,
-      ts: Option[(Long, Long)]): Seq[(String, CatStat)] = {
+      stage: org.apache.hadoop.fs.Path, rows: DataFrame): Seq[(String, CatStat)] = {
     val observed = Observation()
-    val write = if (ts.isDefined) rows else rows.observe(observed,
+    rows.observe(observed,
       min(unix_micros(col("ts"))).as("lo"), max(unix_micros(col("ts"))).as("hi"),
       count(lit(1)).as("rows"), count(col("ts")).as("timed"))
-    write.write.mode("overwrite").partitionBy("source").parquet(stage.toString)
+      .write.mode("overwrite").partitionBy("source").parquet(stage.toString)
     // no staged file: nothing to wait for
-    lazy val bounds = ts.orElse {
+    lazy val bounds = {
       val m = observed.get
       Option.when(m("rows") == m("timed"))(
         (m("lo").asInstanceOf[Long], m("hi").asInstanceOf[Long]))
     }
     stagedSizes(fs, stage, ".parquet").map { case (rel, bytes) => rel -> CatStat(bytes, bounds) }
+  }
+
+  /** A catalog row a commit record carries itself, with no catalog file
+    * behind it: one object's arrival time in epoch millis, its source
+    * and its key (`catent <ms> <source> <key>` in a record,
+    * `CE <seq> <ms> <source> <key>` in a checkpoint). `seq` is the
+    * committing record's version, 0 until the log is read. It reads
+    * back as the row `(ts, tsRaw, key, source)` a catalog file holds
+    * for the same object ([[entryFrame]]). */
+  private final case class LoggedEntry(seq: Long, ms: Long, source: String, key: String) {
+    def micros: Long = Math.multiplyExact(ms, 1000L)
+    def fields: String = s"$ms ${LoggedEntry.encode(source)} ${LoggedEntry.encode(key)}"
+  }
+
+  private object LoggedEntry {
+    /** One space-free token for any string: `%`, space and control
+      * characters become `%XX`, everything else (non-ASCII included)
+      * is kept, since records are UTF-8. Null is a lone `%`, which no
+      * encoded string is. */
+    def encode(s: String): String =
+      if (s == null) "%"
+      else if (!s.exists(c => c <= ' ' || c == '%' || c == '\u007f')) s
+      else {
+        val b = new StringBuilder(s.length + 8)
+        s.foreach { c =>
+          if (c <= ' ' || c == '%' || c == '\u007f') b ++= f"%%${c.toInt}%02X" else b += c
+        }
+        b.result()
+      }
+
+    def decode(s: String): String =
+      if (s == "%") null
+      else if (s.indexOf('%') < 0) s
+      else {
+        val b = new StringBuilder(s.length)
+        var i = 0
+        while (i < s.length) {
+          if (s.charAt(i) == '%') {
+            b += Integer.parseInt(s.substring(i + 1, i + 3), 16).toChar; i += 3
+          } else { b += s.charAt(i); i += 1 }
+        }
+        b.result()
+      }
   }
 
   private def logDir(layout: Layout) = s"${layout.catalogDir}/_log"
@@ -417,7 +464,9 @@ object Catalog {
       // per catalog file (staged relative path): size and `ts` bounds
       // (`catstat <bytes> <lo> <hi> <rel>`); a record without them
       // still reads, at one status call per file
-      catStats: Seq[(String, CatStat)] = Seq.empty)
+      catStats: Seq[(String, CatStat)] = Seq.empty,
+      // catalog rows held in the record itself ([[commitIngest]])
+      entries: Seq[LoggedEntry] = Seq.empty)
 
   private def v2Body(r: V2Record): String = {
     val b = new StringBuilder
@@ -438,6 +487,7 @@ object Catalog {
     if (r.dvReAdds.nonEmpty) { b ++= "\ndvre"; r.dvReAdds.foreach(f => b ++= s"\n$f") }
     r.fileStats.foreach { case (rel, json) => b ++= s"\nfstat $rel $json" }
     r.catStats.foreach { case (rel, st) => b ++= s"\ncatstat ${st.fields} $rel" }
+    r.entries.foreach(e => b ++= s"\ncatent ${e.fields}")
     r.expects.foreach { case (n, pred) => b ++= s"\nexpect $n $pred" }
     r.expectRms.foreach(n => b ++= s"\nexpectrm $n")
     r.props.foreach { case (k, v) => b ++= s"\nprop $k $v" }
@@ -465,6 +515,7 @@ object Catalog {
     val dropCols = Seq.newBuilder[String]
     val fileStats = Seq.newBuilder[(String, String)]
     val catStats = Seq.newBuilder[(String, CatStat)]
+    val entries = Seq.newBuilder[LoggedEntry]
     val expects = Seq.newBuilder[(String, String)]
     val expectRms = Seq.newBuilder[String]
     val props = Seq.newBuilder[(String, String)]
@@ -484,6 +535,10 @@ object Catalog {
       else if (l.startsWith("catstat ")) {
         val a = l.split(" ", 5)
         catStats += ((a(4), CatStat.parse(a(1), a(2), a(3))))
+      }
+      else if (l.startsWith("catent ")) {
+        val a = l.split(" ", 4)
+        entries += LoggedEntry(0L, a(1).toLong, LoggedEntry.decode(a(2)), LoggedEntry.decode(a(3)))
       }
       else if (l.startsWith("expectrm ")) expectRms += l.stripPrefix("expectrm ")
       else if (l.startsWith("expect ")) {
@@ -540,7 +595,7 @@ object Catalog {
       dvUuid, dv.result(), dvRemoves.result(),
       lakeReAdds.result(), dvReAdds.result(), fileStats.result(),
       expects.result(), expectRms.result(),
-      props.result(), propRms.result(), note, txn, catStats.result())
+      props.result(), propRms.result(), note, txn, catStats.result(), entries.result())
   }
 
   /** Read one `.commit` record. Every record starts with its
@@ -583,36 +638,37 @@ object Catalog {
   }
 
   /** EXACTLY-ONCE ingest commit: stage the distribution fan-out of
-    * `batch` (`source`, `key`, `json` rows) and its catalog entries,
-    * then claim ONE commit record covering both plus the micro-batch
-    * completion marker. Crash-safe at every point:
-    *  - before CLAIM: both staging dirs are `_`-invisible orphans,
+    * `batch` (`source`, `key`, `json` rows), then claim ONE commit
+    * record holding that publish, the batch's catalog entries and the
+    * micro-batch completion marker. Crash-safe at every point:
+    *  - before CLAIM: the staging dir is a `_`-invisible orphan,
     *    swept by [[recoverAppends]]; the redelivered batch re-runs.
     *  - after CLAIM: [[recoverAppends]] (run by
     *    [[graft.streaming.StreamIngest.start]] before the stream
-    *    restarts) finishes catalog publish, distribution publish, AND
-    *    the marker from the one record — the redelivered batch then
-    *    sees its marker and skips. No interleaving double-publishes.
+    *    restarts) finishes the distribution publish AND the marker
+    *    from the one record, and its catalog entries become visible
+    *    with it — the redelivered batch then sees its marker and
+    *    skips. No interleaving double-publishes.
     * This is strictly stronger than the reference's
     * record-then-publish pair (ref `lambda_function.py:46-65`), which
     * is at-least-once on both legs.
     *
-    * Cost: ONE pass over `batch` and no shuffle. The catalog entries
-    * come from the write that produced the distribution files (the
-    * Delta Lake rule: a commit's file metadata comes from its own
-    * write, not a second read) — an `Observation` collects the set of
-    * `(source, key)` pairs on that write (a set, so a retried task
-    * cannot list an object twice), and the catalog rows are built on
-    * the driver with `arrivalMs` as data, not as a literal inlined
-    * into generated code, so successive arrivals reuse one compiled
-    * plan. The rows land as one task, one file per source, and the
-    * record gives each file its size and the `ts` bounds `arrivalMs`
-    * fixes, so a range read plans from the log ([[rangeQuery]]).
+    * Cost: ONE pass over `batch`, no shuffle, and no catalog file. The
+    * catalog entries come from the write that produced the
+    * distribution files (the Delta Lake rule: a commit's file metadata
+    * comes from its own write, not a second read) — an `Observation`
+    * collects the set of `(source, key)` pairs on that write (a set,
+    * so a retried task cannot list an object twice), and the record
+    * carries one `catent` line per object with `arrivalMs`, like a
+    * Delta add action carries its file's stats. Every catalog reader
+    * folds them from the log ([[load]], [[loadAsOf]], [[rangeQuery]],
+    * [[versions]], [[checkpoint]]), so the micro-batch runs one Spark
+    * job and a range read over its entries runs none.
     *
-    * Scale bound: the key set holds one entry per object in the batch
-    * — the same order as the file list the stream's file source
-    * already holds on the driver and logs per batch. A batch with no
-    * records writes no catalog dir and claims nothing. */
+    * Scale bound: the record holds one line per object in the batch —
+    * the same order as the file list the stream's file source already
+    * holds on the driver and logs per batch. A batch with no records
+    * claims nothing. */
   def commitIngest(spark: SparkSession, layout: Layout, batch: DataFrame,
       arrivalMs: Long, batchId: Long, markerPath: Option[String]): Unit = {
     val fs = new org.apache.hadoop.fs.Path(layout.catalogDir)
@@ -627,18 +683,11 @@ object Catalog {
     // every observed record is in a staged file, so no file means no
     // key (and the observation is not waited on)
     if (distFiles.isEmpty) { fs.delete(distStage, true); return }
-    val ts = java.time.Instant.ofEpochMilli(arrivalMs)
     val entries = objects.get("keys").asInstanceOf[Seq[Row]]
-      .map(k => Row(k.getString(0), ts, arrivalMs.toString, k.getString(1)))
-    val catUuid = java.util.UUID.randomUUID().toString
-    val catStage = new org.apache.hadoop.fs.Path(s"${layout.catalogDir}/_staged/$catUuid")
-    val arrivalUs = Math.multiplyExact(arrivalMs, 1000L)
-    val catFiles = stageCatalog(fs, catStage,
-      spark.createDataFrame(entries.asJava, catalogSchema).coalesce(1),
-      ts = Some((arrivalUs, arrivalUs)))
+      .map(k => LoggedEntry(0L, arrivalMs, k.getString(0), k.getString(1)))
+      .sortBy(e => (Option(e.source), Option(e.key)))
     val rec = V2Record(batchId, System.currentTimeMillis(), markerPath,
-      Some(catUuid), catFiles.map(_._1), Some(distUuid), distFiles, Seq.empty,
-      catStats = catFiles)
+      None, Seq.empty, Some(distUuid), distFiles, Seq.empty, entries = entries)
     val seq = claimBody(fs, layout, v2Body(rec))
     finishV2(fs, layout, seq, rec)
   }
@@ -689,7 +738,7 @@ object Catalog {
     val lakeFiles = stagedFiles(fs, lakeStage)
     val catUuid = java.util.UUID.randomUUID().toString
     val catStage = new org.apache.hadoop.fs.Path(s"${layout.catalogDir}/_staged/$catUuid")
-    val catFiles = stageCatalog(fs, catStage, entries.toDF(), ts = None)
+    val catFiles = stageCatalog(fs, catStage, entries.toDF())
     if (lakeFiles.isEmpty && catFiles.isEmpty) {
       fs.delete(lakeStage, true); fs.delete(catStage, true); return
     }
@@ -3458,7 +3507,8 @@ object Catalog {
 
   /** `DESCRIBE HISTORY` for the manifest log — one row per RETAINED
     * committed version, newest last: what each commit did (files
-    * added/removed per area, DV files, evolutions, expectation
+    * added/removed per area — `n_catalog_added` counts catalog files
+    * plus logged catalog entries — DV files, evolutions, expectation
     * changes) plus its monotonized commit time and free-form note
     * (`"erase"` being the load-bearing one). Retention-bounded exactly
     * like Delta's: versions folded into a checkpoint and pruned by
@@ -3610,10 +3660,11 @@ object Catalog {
           val st = txnStatus(fs, txnDirOf(layout), id).getOrElse("pending")
           s"txn $id $st" + (if (st == "commit") "" else " (invisible)")
         }
-        // restore re-adds count as adds: history reports set movement
+        // restore re-adds count as adds: history reports set movement;
+        // the catalog adds a file per source or an entry per object
         (seq, r.claimMs, r.lake.size + r.lakeReAdds.size,
           r.lakeRemoves.size, r.dv.size + r.dvReAdds.size,
-          r.cat.size, r.dist.size,
+          r.cat.size + r.entries.size, r.dist.size,
           r.addCols.map(_._1).mkString(","),
           r.widenCols.map { case (n, t) => s"$n:$t" }.mkString(","),
           (r.renameCols.map { case (o, n) => s"$o->$n" } ++
@@ -3965,57 +4016,70 @@ object Catalog {
       .as[CatalogEntry]
   }
 
-  /** The [[CatalogEntry]] schema, spelled out: catalog reads and the
-    * driver-built ingest rows use it without deriving it by reflection. */
-  private val catalogSchema = StructType(Seq(
-    StructField("source", StringType), StructField("ts", TimestampType),
+  /** The columns a catalog file holds (`source` is its directory),
+    * and the columns every catalog read returns. */
+  private val catalogFileSchema = StructType(Seq(StructField("ts", TimestampType),
     StructField("tsRaw", StringType), StructField("key", StringType)))
-
-  /** The columns a catalog file holds; `source` is its directory. */
-  private val catalogFileSchema = StructType(catalogSchema.filterNot(_.name == "source"))
+  private val catalogReadSchema = StructType(catalogFileSchema ++ LogFileIndex.partitionSchema)
 
   /** The whole committed catalog, as of the log's head: `(ts, tsRaw,
-    * key, source)`, the inferred read's columns and types. */
+    * key, source)`, the inferred read's columns and types. The rows of
+    * catalog files ([[append]], [[commitLakeIngest]]) are read through
+    * the log-backed file index; the entries ingest records carry
+    * ([[commitIngest]]) are a local relation, unioned in. Planning it
+    * starts no Spark job. */
   def load(spark: SparkSession, layout: Layout): DataFrame =
-    readCatalogFiles(spark, layout, catalogFilesAsOf(spark, layout, Long.MaxValue))
+    loadAsOf(spark, layout, Long.MaxValue)
 
-  /** The catalog's published files as of `version`, each with what its
-    * record knows of it. */
-  private def catalogFilesAsOf(spark: SparkSession, layout: Layout,
-      version: Long): Seq[(String, Option[CatStat])] = {
+  /** The committed catalog as of `version`, from one log read: the
+    * published files, each with what its record knows of it, and the
+    * entries records carry. */
+  private def catalogAsOf(spark: SparkSession, layout: Layout,
+      version: Long): (Seq[(String, Option[CatStat])], Seq[LoggedEntry]) = {
     val state = readLog(spark, layout)
-    state.cat.collect { case (seq, live) if seq <= version => (live, state.catStatOf.get(live)) }
+    (state.cat.collect { case (seq, live) if seq <= version => (live, state.catStatOf.get(live)) },
+      state.entries.filter(_.seq <= version))
   }
 
-  /** The one catalog reader: `files` (live paths) through a
+  /** The union of the catalog frames present; none gives an empty
+    * local relation with the catalog's columns. */
+  private def unionOf(spark: SparkSession, parts: Option[DataFrame]*): DataFrame =
+    parts.flatten.reduceOption(_ union _).getOrElse(entryFrame(spark, Seq.empty))
+
+  /** Logged entries as catalog rows, a local relation built on the
+    * driver: reading it starts no Spark job and compiles no code per
+    * call. */
+  private def entryFrame(spark: SparkSession, entries: Seq[LoggedEntry]): DataFrame =
+    GraftDmlBridge.frame(spark, LocalRelation(DataTypeUtils.toAttributes(catalogReadSchema),
+      entries.map(e => InternalRow(e.micros,
+        UTF8String.fromString(e.ms.toString), UTF8String.fromString(e.key),
+        UTF8String.fromString(e.source)))))
+
+  /** The one catalog-file reader: `files` (live paths) through a
     * [[LogFileIndex]] with the fixed catalog schema, so planning lists
     * no directory, opens no footer and starts no Spark job. A file
     * whose record carries no size (written before sizes were recorded)
-    * costs one status call. No file gives an empty frame with the same
-    * columns. */
+    * costs one status call. */
   private def readCatalogFiles(spark: SparkSession, layout: Layout,
-      files: Seq[(String, Option[CatStat])]): DataFrame =
-    if (files.isEmpty)
-      spark.createDataFrame(java.util.Collections.emptyList[Row](),
-        StructType(catalogFileSchema ++ LogFileIndex.partitionSchema))
-    else {
-      val root = new org.apache.hadoop.fs.Path(layout.catalogDir)
-      val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      val qualified = fs.makeQualified(root)
-      LogFileIndex.read(spark, qualified, catalogFileSchema, files.map { case (live, st) =>
-        val path = new org.apache.hadoop.fs.Path(qualified, live)
-        st.fold(fs.getFileStatus(path))(s =>
-          new org.apache.hadoop.fs.FileStatus(s.bytes, false, 1, 0L, 0L, path))
-      })
-    }
+      files: Seq[(String, Option[CatStat])]): DataFrame = {
+    val root = new org.apache.hadoop.fs.Path(layout.catalogDir)
+    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val qualified = fs.makeQualified(root)
+    LogFileIndex.read(spark, qualified, catalogFileSchema, files.map { case (live, st) =>
+      val path = new org.apache.hadoop.fs.Path(qualified, live)
+      st.fold(fs.getFileStatus(path))(s =>
+        new org.apache.hadoop.fs.FileStatus(s.bytes, false, 1, 0L, 0L, path))
+    })
+  }
 
   /** Committed (fully published) catalog versions, ascending — the
-    * manifest log's `.commit` records that carry a `.done` marker.
+    * manifest log's `.commit` records that carry a `.done` marker and
+    * add catalog files or logged entries.
     * A crashed commit (claimed, not done) is invisible here until
     * [[recoverAppends]] finishes it, so snapshot readers never see a
     * torn commit. */
   def versions(spark: SparkSession, layout: Layout): Seq[Long] =
-    readLog(spark, layout).cat.map(_._1).distinct.sorted
+    readLog(spark, layout).catVersions
 
   /** TIMESTAMP AS OF — map a wall-clock time to the version that was
     * live then: the highest committed seq whose commit record's
@@ -4149,7 +4213,8 @@ object Catalog {
     val exrF = state.expectRms.filter(_._1 <= cap)
     val psF = state.props.filter(_._1 <= cap)
     val psrF = state.propRms.filter(_._1 <= cap)
-    val seqs = catF.map(_._1) ++ distF.map(_._1) ++ rmF.map(_._1) ++
+    val ceF = state.entries.filter(_.seq <= cap)
+    val seqs = catF.map(_._1) ++ ceF.map(_.seq) ++ distF.map(_._1) ++ rmF.map(_._1) ++
       lakeF.map(_._1) ++ lrmF.map(_._1) ++
       dvF.map(_._1) ++ dvrF.map(_._1) ++ fsF.map(_._1) ++
       exF.map(_._1) ++ exrF.map(_._1) ++
@@ -4196,7 +4261,9 @@ object Catalog {
       state.notes.filter(_._1 <= cap).sortBy(_._1)
         .map { case (s, n) => s"N $s $n" } ++
       state.catStats.filter(_._1 <= cap).sortBy(e => (e._1, e._2))
-        .map { case (s, p, st) => s"CS $s ${st.fields} $p" }
+        .map { case (s, p, st) => s"CS $s ${st.fields} $p" } ++
+      // already in seq order, and a fold can hold millions
+      ceF.map(e => s"CE ${e.seq} ${e.fields}")
     val body = (lines :+ s"#end ${lines.size}").mkString("\n")
     val tmp = new org.apache.hadoop.fs.Path(logDir(layout),
       s"_cp-${java.util.UUID.randomUUID().toString.take(12)}.tmp")
@@ -4339,8 +4406,12 @@ object Catalog {
       // for the post-commit state (same listing, different content)
       digest: String = "",
       // catalog file facts: (seq, live path, size and ts bounds)
-      catStats: Seq[(Long, String, CatStat)] = Seq.empty) {
+      catStats: Seq[(Long, String, CatStat)] = Seq.empty,
+      // catalog rows the records carry, in seq order
+      entries: Seq[LoggedEntry] = Seq.empty) {
     lazy val catStatOf: Map[String, CatStat] = catStats.map(e => e._2 -> e._3).toMap
+    // once per parsed state: a fold can hold millions of entries
+    lazy val catVersions: Seq[Long] = (cat.map(_._1) ++ entries.map(_.seq)).distinct.sorted
   }
 
   /** `_log/_last_checkpoint` — the Delta-style POINTER HINT bounding
@@ -4638,13 +4709,22 @@ object Catalog {
     val dvRemoves = Seq.newBuilder[(Long, Long, String)]
     val fileStats = Seq.newBuilder[(Long, String, String)]
     val catStats = Seq.newBuilder[(Long, String, CatStat)]
+    val entries = Vector.newBuilder[LoggedEntry]
+    // one instance per source: a fold can hold millions of entries
+    val sources = scala.collection.mutable.HashMap.empty[String, String]
+    def intern(source: String): String =
+      if (source == null) null else sources.getOrElseUpdate(source, source)
     val expects = Seq.newBuilder[(Long, String, String)]
     val expectRms = Seq.newBuilder[(Long, String)]
     val props = Seq.newBuilder[(Long, String, String)]
     val propRms = Seq.newBuilder[(Long, String)]
     val notes = Seq.newBuilder[(Long, String)]
     cpLines.filter(_.nonEmpty).foreach { l =>
-      if (l.startsWith("CS ")) {
+      if (l.startsWith("CE ")) {
+        val a = l.split(" ", 5)
+        entries += LoggedEntry(a(1).toLong, a(2).toLong,
+          intern(LoggedEntry.decode(a(3))), LoggedEntry.decode(a(4)))
+      } else if (l.startsWith("CS ")) {
         val a = l.split(" ", 6)
         catStats += ((a(1).toLong, a(5), CatStat.parse(a(2), a(3), a(4))))
       } else if (l.startsWith("N ")) {
@@ -4721,6 +4801,7 @@ object Catalog {
           r.dvReAdds.foreach(p => dv += ((seq, p)))
           r.fileStats.foreach { case (rel, json) => fileStats += ((seq, live(rel), json)) }
           r.catStats.foreach { case (rel, st) => catStats += ((seq, live(rel), st)) }
+          r.entries.foreach(e => entries += e.copy(seq = seq, source = intern(e.source)))
           r.expects.foreach { case (n, pred) => expects += ((seq, n, pred)) }
           r.expectRms.foreach(n => expectRms += ((seq, n)))
           r.props.foreach { case (k, v) => props += ((seq, k, v)) }
@@ -4737,7 +4818,7 @@ object Catalog {
       pendingTxns = pendingTxns.result(),
       txnIds = txnSeen.keys.toSeq.sorted,
       abortedTxns = abortedTxns.result(), maxSeq = maxSeq,
-      catStats = catStats.result()),
+      catStats = catStats.result(), entries = entries.result()),
       txnSeen.toMap)
   }
 
@@ -4801,28 +4882,38 @@ object Catalog {
     * Delta/Iceberg `VERSION AS OF` read, reconstructed from the
     * manifest log rather than a directory listing (so a concurrent
     * writer's in-flight files are invisible regardless of rename
-    * timing). Each qualifying `.commit` record names its published
-    * files; the snapshot is the union of those file lists for
-    * committed versions ≤ `version`, read like [[load]] (same columns,
-    * `source` partition pruning, no planning job), and a version with
-    * no catalog file is an empty frame with those columns.
+    * timing). The snapshot is every catalog file and logged entry the
+    * committed records ≤ `version` name, read like [[load]] (same
+    * columns, `source` partition pruning on the files, no planning
+    * job), and a version with neither is an empty frame with those
+    * columns.
     *
-    * Scale: the log is one tiny record per commit (driver-side list,
-    * O(commits) — the same order as Delta's log replay); the data
-    * read is a normal pruned parquet scan. */
-  def loadAsOf(spark: SparkSession, layout: Layout, version: Long): DataFrame =
-    readCatalogFiles(spark, layout, catalogFilesAsOf(spark, layout, version))
+    * Scale: the log is one small record per commit (driver-side list,
+    * O(commits) plus one line per logged entry — the same order as
+    * Delta's log replay); the file read is a normal pruned parquet
+    * scan. */
+  def loadAsOf(spark: SparkSession, layout: Layout, version: Long): DataFrame = {
+    val (files, entries) = catalogAsOf(spark, layout, version)
+    unionOf(spark, Option.when(files.nonEmpty)(readCatalogFiles(spark, layout, files)),
+      Option.when(entries.nonEmpty)(entryFrame(spark, entries)))
+  }
 
-  /** O11: `Source = s AND ts BETWEEN t0 AND t1`, planned from the log.
-    * Equality on the partition column prunes directories (DynamoDB
-    * partition-key equality). For the sort-key BETWEEN, each file's
-    * recorded `ts` bounds skip the files wholly outside the range, and
-    * the files wholly inside it are read with no row filter, so the
-    * plan inlines no bound and successive ranges reuse one compiled
-    * plan. Only files with unknown or partly overlapping bounds keep
-    * the `ts` filter. The comparison is in microseconds, the unit of
-    * the stored `ts` and of the filter's literals, so the skip is
-    * exact. No overlapping file gives an empty frame without a job. */
+  /** O11: `Source = s AND ts BETWEEN t0 AND t1` (inclusive), planned
+    * from one log read.
+    *  - Logged entries ([[commitIngest]]) are filtered on the driver,
+    *    in microseconds, and served as a local relation: no file, no
+    *    Spark job, no generated code per range.
+    *  - Catalog files: equality on the partition column prunes
+    *    directories (DynamoDB partition-key equality). For the sort-key
+    *    BETWEEN, each file's recorded `ts` bounds skip the files wholly
+    *    outside the range, and the files wholly inside it are read with
+    *    no row filter, so the plan inlines no bound and successive
+    *    ranges reuse one compiled plan. Only files with unknown or
+    *    partly overlapping bounds keep the `ts` filter.
+    * Every comparison is in microseconds, the unit of the stored `ts`
+    * and of the filter's literals, so the skip is exact; a null bound
+    * or source matches nothing, as the SQL predicate does. Nothing in
+    * range gives an empty frame without a job. */
   def rangeQuery(spark: SparkSession, layout: Layout, source: String,
       t0: java.sql.Timestamp, t1: java.sql.Timestamp): DataFrame = {
     val range = for (a <- Option(t0); b <- Option(t1))
@@ -4834,15 +4925,19 @@ object Catalog {
       inside = r0 <= lo && hi <= r1
       if inside || hi < r0 || lo > r1
     } yield inside
-    val files = catalogFilesAsOf(spark, layout, Long.MaxValue)
+    val (allFiles, allEntries) = catalogAsOf(spark, layout, Long.MaxValue)
+    val files = allFiles
       .filter { case (live, _) => LogFileIndex.sourceOf(live.takeWhile(_ != '/')).contains(source) }
       .groupBy { case (_, st) => settled(st) }
+    val entries = for {
+      (r0, r1) <- range.toSeq if source != null
+      e <- allEntries if e.source == source && r0 <= e.micros && e.micros <= r1
+    } yield e
     val ofSource = col("source") === source
-    Seq(
+    unionOf(spark,
       files.get(Some(true)).map(readCatalogFiles(spark, layout, _).filter(ofSource)),
       files.get(None).map(readCatalogFiles(spark, layout, _)
-        .filter(ofSource && col("ts").between(t0, t1))))
-      .flatten.reduceOption(_ union _)
-      .getOrElse(readCatalogFiles(spark, layout, Seq.empty))
+        .filter(ofSource && col("ts").between(t0, t1))),
+      Option.when(entries.nonEmpty)(entryFrame(spark, entries)))
   }
 }

@@ -10,8 +10,11 @@ import org.apache.spark.sql.SparkSession
   * later JVMs over the same corpus.
   *
   * Commit protocol (two builders may race): build into a private
-  * `<dir>.tmp-<uuid>`, then ATOMIC directory rename onto the final
-  * path. Exactly one rename wins; the loser observes the winner's
+  * `<parent>/.tmp-<uuid>/<name>`, then ATOMIC directory rename onto
+  * the final `<parent>/<name>`. The temp sits one level deeper than
+  * the artifact, so the glob the oracle replays read (every
+  * `*.parquet` file one directory below the parent) never matches an
+  * in-flight build. Exactly one rename wins; the loser observes the winner's
   * committed artifact (same corpus ⇒ same deterministic content) and
   * discards its temp. A crashed build leaves only an invisible temp
   * dir; a `_SUCCESS`-less final dir (pre-protocol crash) is replaced.
@@ -31,15 +34,17 @@ object Artifacts {
     val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val marker = new Path(exportDir, "_SUCCESS")
     if (fs.exists(marker)) return exportDir
-    val tmp = new Path(exportDir + ".tmp-" + java.util.UUID.randomUUID().toString.take(8))
+    val inFlight = new Path(dir.getParent, ".tmp-" + java.util.UUID.randomUUID().toString.take(8))
+    val tmp = new Path(inFlight, dir.getName)
     write(tmp.toString)
     // a committed dir carries the parquet committer's _SUCCESS; a dir
     // WITHOUT one is a crashed builder's leftover and is replaced.
     // rename is only attempted onto an ABSENT dst (Hadoop rename onto
     // an existing directory nests src inside it on some FS impls).
     if (!fs.exists(marker) && fs.exists(dir)) fs.delete(dir, true)
-    val renamed = !fs.exists(dir) && fs.rename(tmp, dir)
-    if (!renamed && fs.exists(tmp)) fs.delete(tmp, true) // lost the race — winner's is equal
+    if (!fs.exists(dir)) fs.rename(tmp, dir)
+    // the emptied temp parent, or the loser's build (the winner's is equal)
+    fs.delete(inFlight, true)
     // self-heal the rename-race pollution case: a temp nested INSIDE
     // the winner's dir would otherwise be read as extra parquet files
     val nested = new Path(dir, tmp.getName)
@@ -71,7 +76,7 @@ object Artifacts {
 
   /** Delete every committed corpus-keyed artifact under `root` whose
     * `k=<key>` is NOT in `liveKeys`. In-flight builder temps
-    * (`*.tmp-*`) are never touched — a concurrent [[commit]] finishes
+    * (`.tmp-*`) are never touched — a concurrent [[commit]] finishes
     * its rename onto a now-live or now-stale final name, and the next
     * vacuum pass judges THAT. Walks only directories, depth-bounded
     * (the layout is `<name>[/v<n>]/k=<key>`), so the listing cost is

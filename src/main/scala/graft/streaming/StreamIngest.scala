@@ -62,9 +62,10 @@ object StreamIngest {
     * batch tests exercise the same code path the stream runs — SURVEY
     * §7.4 risk 3.
     *
-    * Cost: ONE pass over the batch, with no shuffle — the tombstone
-    * gate is a filter inside that pass, and the catalog entries are
-    * observed on the distribution write
+    * Cost: ONE pass over the batch and one Spark job, with no shuffle
+    * — the tombstone gate is a filter inside that pass, and the
+    * catalog entries are observed on the distribution write and kept
+    * in the commit record, one line per object, with no catalog file
     * ([[graft.lake.Catalog.commitIngest]]). The driver holds one
     * catalog key per object in the batch, the order of the file list
     * the stream's file source already holds there.

@@ -4,8 +4,7 @@ import graft.SparkTestBase
 import graft.streaming.StreamIngest
 import java.sql.Timestamp
 import org.apache.hadoop.fs.Path
-import org.apache.spark.{CodegenAccess, ListenerBusAccess}
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.CodegenAccess
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import scala.jdk.CollectionConverters._
@@ -15,8 +14,7 @@ import scala.jdk.CollectionConverters._
   * [[Catalog.load]] and [[Catalog.loadAsOf]] read through one
   * log-backed file index. A range read lists no catalog directory,
   * opens only the files its range overlaps, inlines no bound into
-  * generated code, and returns exactly the rows the filtered directory
-  * read returns. */
+  * generated code, and returns exactly the committed rows in range. */
 class CatalogRangeSpec extends SparkTestBase {
 
   private val t0Ms = 1704067200000L
@@ -78,19 +76,7 @@ class CatalogRangeSpec extends SparkTestBase {
   private def keys(df: DataFrame): Seq[String] =
     df.select("key").collect().map(_.getString(0)).toSeq.sorted
 
-  private def jobsDuring[T](body: => T): (T, Int) = {
-    val jobs = new java.util.concurrent.atomic.AtomicInteger()
-    val counter = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
-    }
-    ListenerBusAccess.drain(spark.sparkContext)
-    spark.sparkContext.addSparkListener(counter)
-    try {
-      val out = body
-      ListenerBusAccess.drain(spark.sparkContext)
-      (out, jobs.get())
-    } finally spark.sparkContext.removeSparkListener(counter)
-  }
+  private def jobsDuring[T](body: => T): (T, Int) = QueryExecutions.jobsDuring(spark)(body)
 
   /** Stage `rows` and claim a catalog-only record for them the way a
     * writer before per-file sizes and bounds did (no `catstat` line),
@@ -144,11 +130,13 @@ class CatalogRangeSpec extends SparkTestBase {
     assert(got == rows(listedRange(layout, "clicks", lo, hi)) && got.size == 2)
   }
 
-  test("rangeQuery equals the filtered directory read over seeded random ranges") {
+  test("rangeQuery equals the committed rows over seeded random ranges") {
     val layout = Layout(tmpDir("range-random"))
     val rng = new scala.util.Random(17)
     val sources = Seq("clicks", "logs", "a b", "x=y")
     val stamps = scala.collection.mutable.ArrayBuffer.empty[Timestamp]
+    // every (source, ts, key) the test commits, as the oracle
+    val committed = scala.collection.mutable.ArrayBuffer.empty[(String, Timestamp, String)]
     // appended commits: sub-millisecond timestamps, several sources
     (0 until 4).foreach { c =>
       val batch = (0 until 12).map { i =>
@@ -157,12 +145,15 @@ class CatalogRangeSpec extends SparkTestBase {
         (sources(rng.nextInt(sources.size)), ts, s"k$c-$i")
       }
       Catalog.append(spark, layout, entries(batch))
+      committed ++= batch
     }
     // a record without sizes or bounds, finished by recovery
-    claimWithoutStats(layout, "legacy", Seq(
-      ("clicks", at(t0Ms + 700L, 5), "legacy-0"), ("logs", at(t0Ms + 2100L), "legacy-1")))
+    val legacy = Seq(
+      ("clicks", at(t0Ms + 700L, 5), "legacy-0"), ("logs", at(t0Ms + 2100L), "legacy-1"))
+    claimWithoutStats(layout, "legacy", legacy)
     Catalog.recoverAppends(spark, layout)
-    // ingest commits: every file at one arrival instant
+    committed ++= legacy
+    // ingest commits: every entry at one arrival instant
     (0 until 2).foreach { i =>
       val s = spark
       import s.implicits._
@@ -170,7 +161,15 @@ class CatalogRangeSpec extends SparkTestBase {
       stamps += new Timestamp(ms)
       StreamIngest.processBatch(Seq(("clicks", s"obj-$i", "{}"), ("logs", s"obj-$i", "{}"))
         .toDF("source", "key", "json"), layout, ms, 10L + i)
+      committed ++= Seq(("clicks", new Timestamp(ms), s"obj-$i"), ("logs", new Timestamp(ms), s"obj-$i"))
     }
+    // `ts BETWEEN lo AND hi` in microseconds, the unit of the stored
+    // `ts` and of the predicate's literals
+    def committedRange(src: String, lo: Timestamp, hi: Timestamp): Seq[String] =
+      committed.toSeq.collect { case (s, ts, key) if s == src &&
+          microsOf(lo) <= microsOf(ts) && microsOf(ts) <= microsOf(hi) =>
+        s"$ts|${ts.getTime}|$key|$s"
+      }.sorted
     def near(t: Timestamp): Timestamp = ofMicros(microsOf(t) + rng.nextInt(3) - 1)
     def endpoint(): Timestamp = rng.nextInt(4) match {
       case 0 => stamps(rng.nextInt(stamps.size))
@@ -185,9 +184,10 @@ class CatalogRangeSpec extends SparkTestBase {
       val (lo, hi) = if (rng.nextInt(8) == 0 || a.after(b)) (b, a) else (a, b)
       val src = sources(rng.nextInt(sources.size))
       assert(rows(Catalog.rangeQuery(spark, layout, src, lo, hi)) ==
-        rows(listedRange(layout, src, lo, hi)), s"$src [$lo, $hi]")
+        committedRange(src, lo, hi), s"$src [$lo, $hi]")
     }
-    assert(rows(Catalog.load(spark, layout)) == rows(spark.read.parquet(layout.catalogDir)))
+    assert(rows(Catalog.load(spark, layout)) ==
+      committed.toSeq.map { case (s, ts, key) => s"$ts|${ts.getTime}|$key|$s" }.sorted)
   }
 
   test("a record without sizes or bounds reads exactly, at one status call per file") {

@@ -13,8 +13,8 @@ import org.apache.spark.sql.types.{StringType, TimestampType}
   * read (the publish counts its own rows), nothing claimed for an
   * empty range — on both the directory ([[Replay.replay]]) and the
   * committed ([[Replay.replayCommitted]]) surface. And the catalog
-  * read those replays plan against: [[Catalog.load]]'s fixed schema
-  * keeps the columns, types and rows of the inferred read. */
+  * read those replays plan against: [[Catalog.load]] has the columns,
+  * types and rows of the entries the ingest committed. */
 class ReplaySpec extends SparkTestBase {
 
   private val arrival1 = 1704067200000L
@@ -104,8 +104,7 @@ class ReplaySpec extends SparkTestBase {
     assert(Distribution.subscribeSnapshot(spark, layout, "clicks").count() == before)
   }
 
-  test("Catalog.load: (ts, tsRaw, key, source) with the inferred read's types " +
-      "and rows, planned without a Spark job; lake_catalog sees the same") {
+  test("Catalog.load and lake_catalog: committed rows and types, no planning job") {
     val layout = ingested("catalog-load")
     val jobs = new java.util.concurrent.atomic.AtomicInteger()
     val counter = new SparkListener {
@@ -123,16 +122,21 @@ class ReplaySpec extends SparkTestBase {
     def shape(df: DataFrame) = df.schema.map(f => f.name -> f.dataType)
     val want = Seq("ts" -> TimestampType, "tsRaw" -> StringType,
       "key" -> StringType, "source" -> StringType)
-    val inferred = spark.read.parquet(layout.catalogDir)
-    assert(shape(inferred) == want, "the reference shape is the inferred read's")
+    // the rows `ingested` committed: each object at its arrival
+    val bronze = Ingest.readBronze(spark, layout)
+    def arrived(batch: DataFrame, ms: Long) =
+      Catalog.entriesFor(batch, ms).toDF().select("ts", "tsRaw", "key", "source")
+    val committed = arrived(bronze.filter(!col("key").endsWith("/o2.json")), arrival1)
+      .union(arrived(bronze.filter(col("key").endsWith("/o2.json")), arrival2))
+    assert(shape(committed) == want, "the reference shape is the committed rows'")
     assert(shape(cat) == want)
-    assert(cat.collect().toSet == inferred.collect().toSet)
+    assert(cat.collect().toSet == committed.collect().toSet)
     assert(cat.count() == 4L, "one row per object")
 
     spark.conf.set("spark.sql.catalog.replaycat", classOf[graft.sql.GraftCatalog].getName)
     spark.conf.set("spark.sql.catalog.replaycat.root", layout.root)
     val view = spark.table("replaycat.lake_catalog")
     assert(shape(view) == want)
-    assert(view.collect().toSet == inferred.collect().toSet)
+    assert(view.collect().toSet == committed.collect().toSet)
   }
 }

@@ -55,6 +55,28 @@ class ArtifactVacuumSpec extends SparkTestBase {
     assert(Artifacts.vacuum(spark, Set("222"), root) == 0L)
   }
 
+  test("an in-flight build is not matched by the committed-artifact glob") {
+    val root = tmpDir("art-inflight")
+    def globbed(): Seq[String] = Option(fs.globStatus(new Path(s"$root/*/*.parquet")))
+      .map(_.toSeq.map(_.getPath.getName)).getOrElse(Seq.empty)
+    var during = Seq("not called")
+    val dir = Artifacts.commit(spark, s"$root/k=abc") { tmp =>
+      spark.range(3).write.parquet(tmp)
+      val built = fs.listStatus(new Path(tmp)).count(_.getPath.getName.endsWith(".parquet"))
+      assert(built > 0, s"the build wrote no parquet file under $tmp")
+      during = globbed()
+      // neither erasure nor retention touches an in-flight build
+      assert(Artifacts.eraseKeys(spark, Set("abc"), root) == 0L)
+      assert(Artifacts.vacuum(spark, Set.empty, root) == 0L)
+      assert(fs.exists(new Path(tmp)))
+    }
+    assert(during.isEmpty, s"the glob matched the in-flight build: $during")
+    assert(dir == s"$root/k=abc" && globbed().nonEmpty)
+    assert(fs.listStatus(new Path(root)).map(_.getPath.getName).toSeq == Seq("k=abc"),
+      "the temp parent is gone after the commit")
+    assert(spark.read.parquet(dir).count() == 3L)
+  }
+
   test("erasing a subject then vacuuming removes every shared artifact " +
       "keyed by the pre-erase corpus") {
     // a PRIVATE corpus (text perturbed so its fingerprints collide with
