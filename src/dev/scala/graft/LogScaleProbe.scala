@@ -24,12 +24,13 @@ import org.apache.spark.sql.SparkSession
   * same contract as Delta's driver-side snapshot state.
   *
   * The same sizes are then run for a stream-built catalog, whose
-  * records carry one catalog entry per ingested object (`CE` lines in
-  * the fold, `catent` lines in a 32-record live tail of 100 objects
-  * each, 100 objects per folded commit, 8 sources, bronze-shaped
-  * keys). It measures the same cold and warm reads, one narrow
-  * `rangeQuery` collect (after one untimed), the re-fold and the
-  * prune.
+  * records carry one catalog entry per ingested object
+  * (`CE <seq> <ts µs> <tsRaw> <source> <key>` lines in the fold,
+  * `catent <ts µs> <tsRaw> <source> <key>` lines in a 32-record live
+  * tail of 100 objects each, 100 objects per folded commit, 8 sources,
+  * bronze-shaped keys). It measures the same cold and warm reads, one
+  * narrow `rangeQuery` collect (after one untimed), the re-fold and
+  * the prune.
   *
   * Run: `sbt "runMain graft.LogScaleProbe [n1,n2,...]"` (default
   * 100000,1000000). */
@@ -117,6 +118,8 @@ object LogScaleProbe {
       f"file:///data/lake/bronze/source=s${i % 8}%d/2024/01/01/00/" +
         f"ingest-1-2024-01-01-00-00-00-$seq%08x-$i%04x.json.gz"
     def arrival(seq: Int): Long = 1704067200000L + seq * 1000L
+    def entry(seq: Int, i: Int): String =
+      s"${arrival(seq) * 1000L} ${arrival(seq)} s${i % 8} ${key(seq, i)}"
     def buildEntries(n: Int): (graft.lake.Layout, Int) = {
       val root = Files.createTempDirectory(s"logscale-entries-$n").toString
       val log = Paths.get(s"$root/catalog/_log")
@@ -126,7 +129,7 @@ object LogScaleProbe {
       try {
         (1 to folded).foreach { seq =>
           (0 until perCommit).foreach(i =>
-            w.write(s"CE $seq ${arrival(seq)} s${i % 8} ${key(seq, i)}\n"))
+            w.write(s"CE $seq ${entry(seq, i)}\n"))
         }
         w.write(s"#end ${folded * perCommit}\n")
       } finally w.close()
@@ -134,7 +137,7 @@ object LogScaleProbe {
         val body = new StringBuilder(s"v2 $seq ${arrival(seq)}\ndist u$seq")
         (0 until 8).foreach(i => body ++= s"\nsource=s$i/part-00000-$seq.json")
         (0 until perCommit).foreach(i =>
-          body ++= s"\ncatent ${arrival(seq)} s${i % 8} ${key(seq, i)}")
+          body ++= s"\ncatent ${entry(seq, i)}")
         Files.write(log.resolve(f"$seq%020d.commit"), body.result().getBytes("UTF-8"))
         Files.write(log.resolve(f"$seq%020d.done"), Array.emptyByteArray)
       }

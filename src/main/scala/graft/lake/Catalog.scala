@@ -15,6 +15,12 @@ import org.apache.spark.unsafe.types.UTF8String
   * `/root/reference/serverless_datalake/serverless_datalake_stack.py:63-77`,
   * rows built at `/root/reference/src/event_recorder/lambda_function.py:16-31`).
   *
+  * Like the reference's one item per object, each row is stored once:
+  * as an entry line in the commit record that added it, written by
+  * the same commit that ingested the object (Delta Lake keeps file
+  * metadata only in its log's actions the same way). There are no
+  * catalog data files; every reader folds the entries from the log.
+  *
   * Semantics preserved (SURVEY.md §2.3):
   *  - `ts` is ARRIVAL time (the reference uses SQS SentTimestamp, not
   *    event time); `tsRaw` keeps the reference's 13-digit epoch-millis
@@ -28,88 +34,56 @@ final case class CatalogEntry(source: String, ts: java.sql.Timestamp, tsRaw: Str
 
 object Catalog {
 
-  /** O6+O7: project (source, ts, key) and append to the catalog table
-    * as one catalog-only commit record, staged as parquet files (a
-    * distributed Dataset's rows are not on the driver; a stream's
-    * micro-batch logs its entries in the record instead,
-    * [[commitIngest]]), with the STAGE → CLAIM → PUBLISH → DONE
-    * protocol and [[recoverAppends]] crash recovery. The write is
-    * distributed and uncapped (the reference's DynamoDB 25-item batch
-    * cap and its silent drop of unprocessed items have no equivalent
-    * here), concurrent appends never share committer state (each
-    * stages under its own `_staged/<uuid>/`), and the layout gives
-    * replay partition pruning on source. */
+  /** O6+O7: append `entries` to the catalog as one catalog-only
+    * commit record that carries the rows itself, one entry line per row
+    * ([[LoggedEntry]]), like every catalog commit ([[commitIngest]],
+    * [[commitLakeIngest]]). The rows reach the driver in one Spark job;
+    * the record is claimed and finished like any other, with
+    * [[recoverAppends]] crash recovery, and concurrent appends each
+    * claim their own record. Every row is kept, duplicates included,
+    * and every [[CatalogEntry]] value reads back exactly. There is no
+    * batch cap (the reference's DynamoDB 25-item batch cap and its
+    * silent drop of unprocessed items have no equivalent here). An
+    * empty Dataset claims nothing.
+    *
+    * Scale bound: one record line per row, on the driver, the bound
+    * every catalog commit has (one line per cataloged object). */
   def append(spark: SparkSession, layout: Layout, entries: Dataset[CatalogEntry]): Unit = {
+    val rows = entries.toDF()
+      .select(unix_micros(col("ts")), col("tsRaw"), col("source"), col("key")).collect()
+    if (rows.isEmpty) return
     val fs = new org.apache.hadoop.fs.Path(layout.catalogDir)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val uuid = java.util.UUID.randomUUID().toString
-    val stage = new org.apache.hadoop.fs.Path(s"${layout.catalogDir}/_staged/$uuid")
-    val staged = stageCatalog(fs, stage, entries.toDF())
-    if (staged.isEmpty) { fs.delete(stage, true); return }
-    val rec = V2Record(-1L, System.currentTimeMillis(), None,
-      Some(uuid), staged.map(_._1), None, Seq.empty, Seq.empty, catStats = staged)
+    val rec = V2Record(-1L, System.currentTimeMillis(), None, None, Seq.empty, Seq.empty,
+      entries = rows.toSeq.map(r => LoggedEntry(0L,
+        r.getAs[java.lang.Long](0), r.getString(1), r.getString(2), r.getString(3))))
     val seq = claimBody(fs, layout, v2Body(rec))
     finishV2(fs, layout, seq, rec)
   }
 
   private[lake] def stagedFiles(fs: org.apache.hadoop.fs.FileSystem,
       stage: org.apache.hadoop.fs.Path, suffix: String = ".parquet"): Seq[String] =
-    stagedSizes(fs, stage, suffix).map(_._1)
-
-  /** [[stagedFiles]] with each file's byte size, from the same listing. */
-  private def stagedSizes(fs: org.apache.hadoop.fs.FileSystem,
-      stage: org.apache.hadoop.fs.Path, suffix: String): Seq[(String, Long)] =
     fs.listStatus(stage)
       .filter(s => s.isDirectory && s.getPath.getName.startsWith("source="))
       .flatMap(d => fs.listStatus(d.getPath)
         .filter(f => f.isFile && f.getPath.getName.endsWith(suffix))
-        .map(f => (s"${d.getPath.getName}/${f.getPath.getName}", f.getLen)))
-      .toSeq.sortBy(_._1)
+        .map(f => s"${d.getPath.getName}/${f.getPath.getName}"))
+      .toSeq.sorted
 
-  /** What a commit record knows of one catalog file: its byte size and
-    * the min and max of its `ts` in microseconds (None when unknown),
-    * so a catalog read plans from the log alone ([[readCatalogFiles]],
-    * [[rangeQuery]]). */
-  private final case class CatStat(bytes: Long, ts: Option[(Long, Long)]) {
-    def fields: String = ts.fold(s"$bytes - -") { case (lo, hi) => s"$bytes $lo $hi" }
-  }
-
-  private object CatStat {
-    def parse(bytes: String, lo: String, hi: String): CatStat =
-      CatStat(bytes.toLong, lo.toLongOption.zip(hi.toLongOption))
-  }
-
-  /** Stage catalog rows under `stage`, one directory per source, and
-    * return each staged file with its [[CatStat]]: the size from the
-    * listing the record needs anyway, and the `ts` bounds an
-    * `Observation` takes on this write (no second pass). A null `ts`
-    * leaves the bounds unknown. */
-  private def stageCatalog(fs: org.apache.hadoop.fs.FileSystem,
-      stage: org.apache.hadoop.fs.Path, rows: DataFrame): Seq[(String, CatStat)] = {
-    val observed = Observation()
-    rows.observe(observed,
-      min(unix_micros(col("ts"))).as("lo"), max(unix_micros(col("ts"))).as("hi"),
-      count(lit(1)).as("rows"), count(col("ts")).as("timed"))
-      .write.mode("overwrite").partitionBy("source").parquet(stage.toString)
-    // no staged file: nothing to wait for
-    lazy val bounds = {
-      val m = observed.get
-      Option.when(m("rows") == m("timed"))(
-        (m("lo").asInstanceOf[Long], m("hi").asInstanceOf[Long]))
+  /** A catalog row as a commit record carries it: `ts` in microseconds
+    * (null when the row's is), `tsRaw`, source and key. A record holds
+    * `catent <ts> <tsRaw> <source> <key>`, a checkpoint
+    * `CE <seq> <ts> <tsRaw> <source> <key>`, each token through
+    * [[LoggedEntry.encode]], so every [[CatalogEntry]] value reads back
+    * exactly ([[entryFrame]]). `seq` is the committing record's
+    * version, 0 until the log is read. */
+  private final case class LoggedEntry(seq: Long, ts: java.lang.Long, tsRaw: String,
+      source: String, key: String) {
+    def fields: String = {
+      import LoggedEntry.encode
+      s"${encode(if (ts == null) null else ts.toString)} ${encode(tsRaw)} " +
+        s"${encode(source)} ${encode(key)}"
     }
-    stagedSizes(fs, stage, ".parquet").map { case (rel, bytes) => rel -> CatStat(bytes, bounds) }
-  }
-
-  /** A catalog row a commit record carries itself, with no catalog file
-    * behind it: one object's arrival time in epoch millis, its source
-    * and its key (`catent <ms> <source> <key>` in a record,
-    * `CE <seq> <ms> <source> <key>` in a checkpoint). `seq` is the
-    * committing record's version, 0 until the log is read. It reads
-    * back as the row `(ts, tsRaw, key, source)` a catalog file holds
-    * for the same object ([[entryFrame]]). */
-  private final case class LoggedEntry(seq: Long, ms: Long, source: String, key: String) {
-    def micros: Long = Math.multiplyExact(ms, 1000L)
-    def fields: String = s"$ms ${LoggedEntry.encode(source)} ${LoggedEntry.encode(key)}"
   }
 
   private object LoggedEntry {
@@ -141,7 +115,29 @@ object Catalog {
         }
         b.result()
       }
+
+    /** The entry whose `ts tsRaw source key` tokens end `a`, its
+      * source through `source`. A `ts` or `tsRaw` equal to `prev`'s,
+      * the entry read just before, reuses its instance: a record's
+      * entries share one arrival, and a fold holds millions. */
+    def read(seq: Long, a: Array[String], prev: LoggedEntry,
+        source: String => String = identity): LoggedEntry = {
+      val n = a.length
+      def same[T <: AnyRef](v: T, of: LoggedEntry => T): T =
+        if (prev != null && v == of(prev)) of(prev) else v
+      val ts = decode(a(n - 4))
+      LoggedEntry(seq, same(if (ts == null) null else java.lang.Long.valueOf(ts), _.ts),
+        same(decode(a(n - 3)), _.tsRaw), source(decode(a(n - 2))), decode(a(n - 1)))
+    }
   }
+
+  /** The failure for a log line this format does not have, naming the
+    * file it is in. Catalog files (`cat` and `catstat` record lines,
+    * `CS` and bare-path checkpoint lines) are such lines: the catalog
+    * keeps its rows as entries. */
+  private def unreadable(file: org.apache.hadoop.fs.Path, line: String): Nothing =
+    throw new java.io.IOException(
+      s"$file: '${line.take(80)}' is not a line of this log format")
 
   private def logDir(layout: Layout) = s"${layout.catalogDir}/_log"
 
@@ -426,7 +422,6 @@ object Catalog {
       batchId: Long,
       claimMs: Long,
       marker: Option[String],
-      catUuid: Option[String], cat: Seq[String],
       distUuid: Option[String], dist: Seq[String],
       removes: Seq[String],
       lakeUuid: Option[String] = None, lake: Seq[String] = Seq.empty,
@@ -461,18 +456,13 @@ object Catalog {
       // record is INVISIBLE until `<root>/_txn/<id>.txn` says commit —
       // the one root file is the atomic commit point for all N tables
       txn: Option[String] = None,
-      // per catalog file (staged relative path): size and `ts` bounds
-      // (`catstat <bytes> <lo> <hi> <rel>`); a record without them
-      // still reads, at one status call per file
-      catStats: Seq[(String, CatStat)] = Seq.empty,
-      // catalog rows held in the record itself ([[commitIngest]])
+      // the catalog rows of the commit, held in the record itself
       entries: Seq[LoggedEntry] = Seq.empty)
 
   private def v2Body(r: V2Record): String = {
     val b = new StringBuilder
     b ++= s"v2 ${r.batchId} ${r.claimMs}"
     r.marker.foreach(m => b ++= s"\nmarker $m")
-    r.catUuid.foreach { u => b ++= s"\ncat $u"; r.cat.foreach(f => b ++= s"\n$f") }
     r.distUuid.foreach { u => b ++= s"\ndist $u"; r.dist.foreach(f => b ++= s"\n$f") }
     if (r.removes.nonEmpty) { b ++= "\nrm"; r.removes.foreach(f => b ++= s"\n$f") }
     r.lakeUuid.foreach { u => b ++= s"\nlake $u"; r.lake.foreach(f => b ++= s"\n$f") }
@@ -486,7 +476,6 @@ object Catalog {
     if (r.lakeReAdds.nonEmpty) { b ++= "\nlakere"; r.lakeReAdds.foreach(f => b ++= s"\n$f") }
     if (r.dvReAdds.nonEmpty) { b ++= "\ndvre"; r.dvReAdds.foreach(f => b ++= s"\n$f") }
     r.fileStats.foreach { case (rel, json) => b ++= s"\nfstat $rel $json" }
-    r.catStats.foreach { case (rel, st) => b ++= s"\ncatstat ${st.fields} $rel" }
     r.entries.foreach(e => b ++= s"\ncatent ${e.fields}")
     r.expects.foreach { case (n, pred) => b ++= s"\nexpect $n $pred" }
     r.expectRms.foreach(n => b ++= s"\nexpectrm $n")
@@ -497,10 +486,9 @@ object Catalog {
     b.result()
   }
 
-  private def parseV2(lines: List[String]): V2Record = {
+  private def parseV2(path: org.apache.hadoop.fs.Path, lines: List[String]): V2Record = {
     val head = lines.head.split(' ')
     var marker: Option[String] = None
-    var catUuid: Option[String] = None; val cat = Seq.newBuilder[String]
     var distUuid: Option[String] = None; val dist = Seq.newBuilder[String]
     var lakeUuid: Option[String] = None; val lake = Seq.newBuilder[String]
     var dvUuid: Option[String] = None; val dv = Seq.newBuilder[String]
@@ -514,8 +502,8 @@ object Catalog {
     val renameCols = Seq.newBuilder[(String, String)]
     val dropCols = Seq.newBuilder[String]
     val fileStats = Seq.newBuilder[(String, String)]
-    val catStats = Seq.newBuilder[(String, CatStat)]
     val entries = Seq.newBuilder[LoggedEntry]
+    var entry: LoggedEntry = null
     val expects = Seq.newBuilder[(String, String)]
     val expectRms = Seq.newBuilder[String]
     val props = Seq.newBuilder[(String, String)]
@@ -532,13 +520,11 @@ object Catalog {
         val sp = rest.indexOf(' ')
         fileStats += ((rest.substring(0, sp), rest.substring(sp + 1)))
       }
-      else if (l.startsWith("catstat ")) {
-        val a = l.split(" ", 5)
-        catStats += ((a(4), CatStat.parse(a(1), a(2), a(3))))
-      }
       else if (l.startsWith("catent ")) {
-        val a = l.split(" ", 4)
-        entries += LoggedEntry(0L, a(1).toLong, LoggedEntry.decode(a(2)), LoggedEntry.decode(a(3)))
+        val a = l.split(" ", 5)
+        if (a.length != 5) unreadable(path, l)
+        entry = LoggedEntry.read(0L, a, entry)
+        entries += entry
       }
       else if (l.startsWith("expectrm ")) expectRms += l.stripPrefix("expectrm ")
       else if (l.startsWith("expect ")) {
@@ -552,7 +538,7 @@ object Catalog {
         val sp = rest.indexOf(' ')
         props += ((rest.substring(0, sp), rest.substring(sp + 1)))
       }
-      else if (l.startsWith("cat ")) { section = "cat"; catUuid = Some(l.stripPrefix("cat ")) }
+      else if (l.startsWith("cat ") || l.startsWith("catstat ")) unreadable(path, l)
       else if (l.startsWith("dist ")) { section = "dist"; distUuid = Some(l.stripPrefix("dist ")) }
       else if (l.startsWith("lake ")) { section = "lake"; lakeUuid = Some(l.stripPrefix("lake ")) }
       else if (l.startsWith("dv ")) { section = "dv"; dvUuid = Some(l.stripPrefix("dv ")) }
@@ -576,7 +562,6 @@ object Catalog {
       else if (l == "lakere") section = "lakere"
       else if (l == "dvre") section = "dvre"
       else if (l.nonEmpty) section match {
-        case "cat" => cat += l
         case "dist" => dist += l
         case "lake" => lake += l
         case "dv" => dv += l
@@ -589,13 +574,13 @@ object Catalog {
       }
     }
     V2Record(head(1).toLong, head(2).toLong, marker,
-      catUuid, cat.result(), distUuid, dist.result(), removes.result(),
+      distUuid, dist.result(), removes.result(),
       lakeUuid, lake.result(), lakeRemoves.result(), addCols.result(),
       widenCols.result(), renameCols.result(), dropCols.result(),
       dvUuid, dv.result(), dvRemoves.result(),
       lakeReAdds.result(), dvReAdds.result(), fileStats.result(),
       expects.result(), expectRms.result(),
-      props.result(), propRms.result(), note, txn, catStats.result(), entries.result())
+      props.result(), propRms.result(), note, txn, entries.result())
   }
 
   /** Read one `.commit` record. Every record starts with its
@@ -609,7 +594,7 @@ object Catalog {
     if (!lines.headOption.exists(_.startsWith("v2 ")))
       throw new java.io.IOException(s"commit record $path has no 'v2 ' head " +
         s"(first line: '${lines.headOption.getOrElse("").take(80)}')")
-    parseV2(lines)
+    parseV2(path, lines)
   }
 
   /** Finish a commit from its record: publish every leg (idempotent
@@ -617,7 +602,6 @@ object Catalog {
     * Safe to re-drive any number of times. */
   private def finishV2(fs: org.apache.hadoop.fs.FileSystem, layout: Layout,
       seq: Long, r: V2Record): Unit = {
-    r.catUuid.foreach(u => renameStaged(fs, layout.catalogDir, u, seq, r.cat))
     r.distUuid.foreach(u => renameStaged(fs, layout.distributionDir, u, seq, r.dist))
     r.lakeUuid.foreach(u => renameStaged(fs, layout.lakeDir, u, seq, r.lake))
     r.dvUuid.foreach(u => renameStaged(fs, layout.lakeDir, u, seq, r.dv))
@@ -627,8 +611,6 @@ object Catalog {
       fs.create(p, true).close()
     }
     fs.create(new org.apache.hadoop.fs.Path(logDir(layout), f"$seq%020d.done"), true).close()
-    r.catUuid.foreach(u =>
-      fs.delete(new org.apache.hadoop.fs.Path(s"${layout.catalogDir}/_staged/$u"), true))
     r.distUuid.foreach(u =>
       fs.delete(new org.apache.hadoop.fs.Path(s"${layout.distributionDir}/_staged/$u"), true))
     r.lakeUuid.foreach(u =>
@@ -659,9 +641,9 @@ object Catalog {
     * comes from its own write, not a second read) — an `Observation`
     * collects the set of `(source, key)` pairs on that write (a set,
     * so a retried task cannot list an object twice), and the record
-    * carries one `catent` line per object with `arrivalMs`, like a
-    * Delta add action carries its file's stats. Every catalog reader
-    * folds them from the log ([[load]], [[loadAsOf]], [[rangeQuery]],
+    * carries one entry line per object at `arrivalMs`
+    * ([[LoggedEntry]]), like a Delta add action carries its file's
+    * stats. Every catalog reader folds them from the log ([[load]], [[loadAsOf]], [[rangeQuery]],
     * [[versions]], [[checkpoint]]), so the micro-batch runs one Spark
     * job and a range read over its entries runs none.
     *
@@ -683,13 +665,20 @@ object Catalog {
     // every observed record is in a staged file, so no file means no
     // key (and the observation is not waited on)
     if (distFiles.isEmpty) { fs.delete(distStage, true); return }
-    val entries = objects.get("keys").asInstanceOf[Seq[Row]]
-      .map(k => LoggedEntry(0L, arrivalMs, k.getString(0), k.getString(1)))
-      .sortBy(e => (Option(e.source), Option(e.key)))
     val rec = V2Record(batchId, System.currentTimeMillis(), markerPath,
-      None, Seq.empty, Some(distUuid), distFiles, Seq.empty, entries = entries)
+      Some(distUuid), distFiles, Seq.empty, entries = arrived(objects.get("keys"), arrivalMs))
     val seq = claimBody(fs, layout, v2Body(rec))
     finishV2(fs, layout, seq, rec)
+  }
+
+  /** One entry per observed `(source, key)` pair, all at `arrivalMs`,
+    * sorted so the record is deterministic. */
+  private def arrived(keys: Any, arrivalMs: Long): Seq[LoggedEntry] = {
+    val ts = java.lang.Long.valueOf(Math.multiplyExact(arrivalMs, 1000L))
+    val tsRaw = arrivalMs.toString
+    keys.asInstanceOf[Seq[Row]]
+      .map(k => LoggedEntry(0L, ts, tsRaw, k.getString(0), k.getString(1)))
+      .sortBy(e => (Option(e.source), Option(e.key)))
   }
 
   /** Distribution-only manifest commit: publish `batch` into the
@@ -709,7 +698,6 @@ object Catalog {
     val staged = stagedFiles(fs, stage, suffix = ".json")
     if (staged.isEmpty && removes.isEmpty) { fs.delete(stage, true); return -1L }
     val rec = V2Record(-1L, System.currentTimeMillis(), None,
-      None, Seq.empty,
       if (staged.nonEmpty) Some(uuid) else None, staged, removes)
     val seq = claimBody(fs, layout, v2Body(rec))
     finishV2(fs, layout, seq, rec)
@@ -726,36 +714,39 @@ object Catalog {
     * cleanup can delete the other's in-flight files), and a crash
     * between the two writes leaves an uncataloged partial batch. Here a
     * reader of [[loadLakeSnapshot]] sees a batch's lake rows iff its
-    * catalog rows are visible too. */
+    * catalog rows are visible too.
+    *
+    * Cost: one pass over `lakeBatch`, as in [[commitIngest]]. The lake
+    * write observes the set of `(source, key)` pairs (a set, so a
+    * retried task cannot list an object twice) and the row count, and
+    * the record logs one entry per object at `arrivalMs`. Returns the
+    * rows written; a batch that stages no lake file claims nothing and
+    * returns 0. */
   def commitLakeIngest(spark: SparkSession, layout: Layout,
-      lakeBatch: DataFrame, entries: Dataset[CatalogEntry]): Unit = {
+      lakeBatch: DataFrame, arrivalMs: Long): Long = {
     val fs = new org.apache.hadoop.fs.Path(layout.catalogDir)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val observed = Observation()
     val lakeUuid = java.util.UUID.randomUUID().toString
     val lakeStage = new org.apache.hadoop.fs.Path(s"${layout.lakeDir}/_staged/$lakeUuid")
     widenBatch(spark, layout, lakeBatch)
+      .observe(observed, collect_set(struct(col("source"), col("key"))).as("keys"),
+        count(lit(1)).as("rows"))
       .write.mode("overwrite").partitionBy("source").parquet(lakeStage.toString)
     val lakeFiles = stagedFiles(fs, lakeStage)
-    val catUuid = java.util.UUID.randomUUID().toString
-    val catStage = new org.apache.hadoop.fs.Path(s"${layout.catalogDir}/_staged/$catUuid")
-    val catFiles = stageCatalog(fs, catStage, entries.toDF())
-    if (lakeFiles.isEmpty && catFiles.isEmpty) {
-      fs.delete(lakeStage, true); fs.delete(catStage, true); return
-    }
+    // every observed row is in a staged file, so no file means no row
+    // (and the observation is not waited on)
+    if (lakeFiles.isEmpty) { fs.delete(lakeStage, true); return 0L }
     val (declStats, declBloom) = declaredStatsCols(spark, layout)
     val stats =
-      if (lakeFiles.isEmpty || (declStats.isEmpty && declBloom.isEmpty))
-        Seq.empty[(String, String)]
+      if (declStats.isEmpty && declBloom.isEmpty) Seq.empty[(String, String)]
       else computeFileStats(spark, lakeStage.toString, declStats, declBloom)
-    val rec = V2Record(-1L, System.currentTimeMillis(), None,
-      if (catFiles.nonEmpty) Some(catUuid) else None, catFiles.map(_._1),
-      None, Seq.empty, Seq.empty,
-      if (lakeFiles.nonEmpty) Some(lakeUuid) else None, lakeFiles,
-      fileStats = stats, catStats = catFiles)
+    val rec = V2Record(-1L, System.currentTimeMillis(), None, None, Seq.empty, Seq.empty,
+      Some(lakeUuid), lakeFiles, fileStats = stats,
+      entries = arrived(observed.get("keys"), arrivalMs))
     val seq = claimBody(fs, layout, v2Body(rec))
     finishV2(fs, layout, seq, rec)
-    if (catFiles.isEmpty) fs.delete(catStage, true)
-    if (lakeFiles.isEmpty) fs.delete(lakeStage, true)
+    observed.get("rows").asInstanceOf[Long]
   }
 
   /** Lake-area sibling of [[commitDist]]: publish `batch` into the
@@ -817,7 +808,7 @@ object Catalog {
         Seq.empty[(String, String)]
       else computeFileStats(spark, stage.toString, allStats, allBloom)
     val rec = V2Record(-1L, System.currentTimeMillis(), marker,
-      None, Seq.empty, None, Seq.empty, Seq.empty,
+      None, Seq.empty, Seq.empty,
       if (staged.nonEmpty) Some(uuid) else None, staged, removes,
       fileStats = stats, note = note, txn = txn)
     val seq = claimBody(fs, layout, v2Body(rec))
@@ -2071,7 +2062,7 @@ object Catalog {
       val fs = new org.apache.hadoop.fs.Path(layout.catalogDir)
         .getFileSystem(spark.sparkContext.hadoopConfiguration)
       val rec = V2Record(-1L, System.currentTimeMillis(), None,
-        None, Seq.empty, None, Seq.empty, Seq.empty,
+        None, Seq.empty, Seq.empty,
         None, Seq.empty, Seq.empty, addCols = addCols, widenCols = widenCols,
         renameCols = renameCols, dropCols = dropCols,
         expects = expectAdds, expectRms = expectRms,
@@ -2241,7 +2232,7 @@ object Catalog {
     val fs = new org.apache.hadoop.fs.Path(layout.catalogDir)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     val rec = V2Record(-1L, System.currentTimeMillis(), None,
-      None, Seq.empty, None, Seq.empty, Seq.empty,
+      None, Seq.empty, Seq.empty,
       expects = Seq((name, predicateSql)))
     val seq = claimBody(fs, layout, v2Body(rec))
     finishV2(fs, layout, seq, rec)
@@ -2277,7 +2268,7 @@ object Catalog {
     val fs = new org.apache.hadoop.fs.Path(layout.catalogDir)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     val rec = V2Record(-1L, System.currentTimeMillis(), None,
-      None, Seq.empty, None, Seq.empty, Seq.empty,
+      None, Seq.empty, Seq.empty,
       expectRms = Seq(name))
     val seq = claimBody(fs, layout, v2Body(rec))
     finishV2(fs, layout, seq, rec)
@@ -2708,7 +2699,7 @@ object Catalog {
       spark.read.parquet(staged.map(r => s"$stage/$r"): _*).isEmpty
     if (empty) { fs.delete(stage, true); return -1L }
     val rec = V2Record(-1L, System.currentTimeMillis(), None,
-      None, Seq.empty, None, Seq.empty, Seq.empty,
+      None, Seq.empty, Seq.empty,
       dvUuid = Some(uuid), dv = staged)
     val seq = claimBody(fs, layout, v2Body(rec))
     finishV2(fs, layout, seq, rec)
@@ -2851,7 +2842,7 @@ object Catalog {
         Seq.empty[(String, String)]
       else computeFileStats(spark, lakeStage.toString, declStats, declBloom)
     val rec = V2Record(-1L, System.currentTimeMillis(), marker,
-      None, Seq.empty, None, Seq.empty, Seq.empty,
+      None, Seq.empty, Seq.empty,
       if (lakeStaged.nonEmpty) Some(lakeUuid) else None, lakeStaged,
       dvUuid = if (dvStaged.nonEmpty) Some(dvUuid) else None, dv = dvStaged,
       fileStats = stats, note = note, txn = txn)
@@ -3269,7 +3260,7 @@ object Catalog {
           // property change) interleaves between this read and the claim
           val (propSets, propRms) = propDiff()
           val rec = V2Record(-1L, System.currentTimeMillis(), None,
-            None, Seq.empty, None, Seq.empty, Seq.empty,
+            None, Seq.empty, Seq.empty,
             None, Seq.empty, lakeRemoves = lakeRm,
             dvRemoves = dvRm, lakeReAdds = lakeRe, dvReAdds = dvRe,
             props = propSets, propRms = propRms,
@@ -3362,7 +3353,7 @@ object Catalog {
           Seq.empty[(String, String)]
         else computeFileStats(spark, stage.toString, declStats, declBloom)
       val rec = V2Record(-1L, System.currentTimeMillis(), None,
-        None, Seq.empty, None, Seq.empty, Seq.empty,
+        None, Seq.empty, Seq.empty,
         if (staged.nonEmpty) Some(uuid) else None, staged,
         lakeRemoves = lockedAffected, dvRemoves = dvRm, fileStats = stats)
       val seq = claimBody(fs, layout, v2Body(rec))
@@ -3488,7 +3479,7 @@ object Catalog {
                 Seq.empty[(String, String)]
               else computeFileStats(spark, stage.toString, allStats, allBloom)
             val rec = V2Record(-1L, System.currentTimeMillis(), None,
-              None, Seq.empty, None, Seq.empty, Seq.empty,
+              None, Seq.empty, Seq.empty,
               if (staged.nonEmpty) Some(uuid) else None, staged,
               lakeRemoves = chosen, dvRemoves = dvRm, fileStats = stats)
             val seq = claimBody(fs, layout, v2Body(rec))
@@ -3507,9 +3498,8 @@ object Catalog {
 
   /** `DESCRIBE HISTORY` for the manifest log — one row per RETAINED
     * committed version, newest last: what each commit did (files
-    * added/removed per area — `n_catalog_added` counts catalog files
-    * plus logged catalog entries — DV files, evolutions, expectation
-    * changes) plus its monotonized commit time and free-form note
+    * added/removed per area — `n_catalog_added` counts logged catalog
+    * entries — DV files, evolutions, expectation changes) plus its monotonized commit time and free-form note
     * (`"erase"` being the load-bearing one). Retention-bounded exactly
     * like Delta's: versions folded into a checkpoint and pruned by
     * [[pruneLog]] no longer appear (their net effect lives in the
@@ -3574,8 +3564,7 @@ object Catalog {
       if (!fs.exists(p)) Seq.empty
       else fs.listStatus(p).map(_.getPath.getName).sorted.toSeq
     }
-    val staged = orphans(layout.lakeDir) ++ orphans(layout.catalogDir) ++
-      orphans(layout.distributionDir)
+    val staged = orphans(layout.lakeDir) ++ orphans(layout.distributionDir)
     def row(check: String, bad: Seq[String], info: Boolean = false) =
       (check, info || bad.isEmpty, bad.size.toLong,
         bad.take(3).mkString(",") +
@@ -3661,10 +3650,10 @@ object Catalog {
           s"txn $id $st" + (if (st == "commit") "" else " (invisible)")
         }
         // restore re-adds count as adds: history reports set movement;
-        // the catalog adds a file per source or an entry per object
+        // the catalog adds one entry per row
         (seq, r.claimMs, r.lake.size + r.lakeReAdds.size,
           r.lakeRemoves.size, r.dv.size + r.dvReAdds.size,
-          r.cat.size + r.entries.size, r.dist.size,
+          r.entries.size, r.dist.size,
           r.addCols.map(_._1).mkString(","),
           r.widenCols.map { case (n, t) => s"$n:$t" }.mkString(","),
           (r.renameCols.map { case (o, n) => s"$o->$n" } ++
@@ -3925,7 +3914,6 @@ object Catalog {
     val staged = if (fs.exists(stage)) stagedFiles(fs, stage, suffix = ".json") else Seq.empty
     if (staged.isEmpty && removes.isEmpty) { fs.delete(stage, true); return -1L }
     val rec = V2Record(-1L, System.currentTimeMillis(), None,
-      None, Seq.empty,
       if (staged.nonEmpty) Some(uuid) else None, staged, removes)
     val seq = claimBody(fs, layout, v2Body(rec))
     finishV2(fs, layout, seq, rec)
@@ -3957,7 +3945,6 @@ object Catalog {
     val fs = new org.apache.hadoop.fs.Path(layout.catalogDir)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     val log = new org.apache.hadoop.fs.Path(logDir(layout))
-    var claimedCat = Set.empty[String]
     var claimedDist = Set.empty[String]
     var claimedLake = Set.empty[String]
     if (fs.exists(log)) {
@@ -3969,7 +3956,6 @@ object Catalog {
       entries.filter(n => n.endsWith(".commit") && !done.contains(n.stripSuffix(".commit")))
         .sorted.foreach { rec =>
           val r = readRecord(fs, new org.apache.hadoop.fs.Path(log, rec))
-          claimedCat ++= r.catUuid
           claimedDist ++= r.distUuid
           claimedLake ++= r.lakeUuid
           claimedLake ++= r.dvUuid
@@ -3996,85 +3982,33 @@ object Catalog {
           }
           .foreach(st => fs.delete(st.getPath, true))
     }
-    sweep(layout.catalogDir, claimedCat)
     sweep(layout.distributionDir, claimedDist)
     sweep(layout.lakeDir, claimedLake)
   }
 
-  /** Derive catalog entries for a batch of ingested records that carry
-    * `source` + `key` (object path) columns; arrival time is stamped
-    * once per batch (the micro-batch is the unit of arrival, like the
-    * reference's SQS delivery). A distributed job (a `distinct`
-    * shuffle), for whole-bronze [[Ingest.ingestBatch]]; the stream's
-    * [[commitIngest]] builds the same rows from its own write. */
-  def entriesFor(batch: DataFrame, arrivalMs: Long): Dataset[CatalogEntry] = {
-    import batch.sparkSession.implicits._
-    batch.select(col("source"), col("key")).distinct()
-      .withColumn("ts", timestamp_millis(lit(arrivalMs)))
-      .withColumn("tsRaw", lit(arrivalMs.toString))
-      .select(col("source"), col("ts"), col("tsRaw"), col("key"))
-      .as[CatalogEntry]
-  }
-
-  /** The columns a catalog file holds (`source` is its directory),
-    * and the columns every catalog read returns. */
-  private val catalogFileSchema = StructType(Seq(StructField("ts", TimestampType),
-    StructField("tsRaw", StringType), StructField("key", StringType)))
-  private val catalogReadSchema = StructType(catalogFileSchema ++ LogFileIndex.partitionSchema)
+  /** The columns every catalog read returns. */
+  private val catalogSchema = StructType(Seq(StructField("ts", TimestampType),
+    StructField("tsRaw", StringType), StructField("key", StringType),
+    StructField("source", StringType)))
 
   /** The whole committed catalog, as of the log's head: `(ts, tsRaw,
-    * key, source)`, the inferred read's columns and types. The rows of
-    * catalog files ([[append]], [[commitLakeIngest]]) are read through
-    * the log-backed file index; the entries ingest records carry
-    * ([[commitIngest]]) are a local relation, unioned in. Planning it
-    * starts no Spark job. */
+    * key, source)`, every row exactly as it was committed. The rows are
+    * the entries the commit records carry, served as a local relation:
+    * planning and reading it start no Spark job. */
   def load(spark: SparkSession, layout: Layout): DataFrame =
     loadAsOf(spark, layout, Long.MaxValue)
-
-  /** The committed catalog as of `version`, from one log read: the
-    * published files, each with what its record knows of it, and the
-    * entries records carry. */
-  private def catalogAsOf(spark: SparkSession, layout: Layout,
-      version: Long): (Seq[(String, Option[CatStat])], Seq[LoggedEntry]) = {
-    val state = readLog(spark, layout)
-    (state.cat.collect { case (seq, live) if seq <= version => (live, state.catStatOf.get(live)) },
-      state.entries.filter(_.seq <= version))
-  }
-
-  /** The union of the catalog frames present; none gives an empty
-    * local relation with the catalog's columns. */
-  private def unionOf(spark: SparkSession, parts: Option[DataFrame]*): DataFrame =
-    parts.flatten.reduceOption(_ union _).getOrElse(entryFrame(spark, Seq.empty))
 
   /** Logged entries as catalog rows, a local relation built on the
     * driver: reading it starts no Spark job and compiles no code per
     * call. */
   private def entryFrame(spark: SparkSession, entries: Seq[LoggedEntry]): DataFrame =
-    GraftDmlBridge.frame(spark, LocalRelation(DataTypeUtils.toAttributes(catalogReadSchema),
-      entries.map(e => InternalRow(e.micros,
-        UTF8String.fromString(e.ms.toString), UTF8String.fromString(e.key),
-        UTF8String.fromString(e.source)))))
-
-  /** The one catalog-file reader: `files` (live paths) through a
-    * [[LogFileIndex]] with the fixed catalog schema, so planning lists
-    * no directory, opens no footer and starts no Spark job. A file
-    * whose record carries no size (written before sizes were recorded)
-    * costs one status call. */
-  private def readCatalogFiles(spark: SparkSession, layout: Layout,
-      files: Seq[(String, Option[CatStat])]): DataFrame = {
-    val root = new org.apache.hadoop.fs.Path(layout.catalogDir)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val qualified = fs.makeQualified(root)
-    LogFileIndex.read(spark, qualified, catalogFileSchema, files.map { case (live, st) =>
-      val path = new org.apache.hadoop.fs.Path(qualified, live)
-      st.fold(fs.getFileStatus(path))(s =>
-        new org.apache.hadoop.fs.FileStatus(s.bytes, false, 1, 0L, 0L, path))
-    })
-  }
+    GraftDmlBridge.frame(spark, LocalRelation(DataTypeUtils.toAttributes(catalogSchema),
+      entries.map(e => InternalRow(e.ts, UTF8String.fromString(e.tsRaw),
+        UTF8String.fromString(e.key), UTF8String.fromString(e.source)))))
 
   /** Committed (fully published) catalog versions, ascending — the
     * manifest log's `.commit` records that carry a `.done` marker and
-    * add catalog files or logged entries.
+    * log catalog entries.
     * A crashed commit (claimed, not done) is invisible here until
     * [[recoverAppends]] finishes it, so snapshot readers never see a
     * torn commit. */
@@ -4201,7 +4135,6 @@ object Catalog {
     // be reclaimed FIRST: the record this fold will let pruneLog drop
     // is the only pointer to them (review catch)
     cleanAbortedLegBytes(spark, layout, state.abortedTxns)
-    val catF = state.cat.filter(_._1 <= cap)
     val distF = state.dist.filter(_._1 <= cap)
     val rmF = state.removes.filter(_._1 <= cap)
     val lakeF = state.lake.filter(_._1 <= cap)
@@ -4214,7 +4147,7 @@ object Catalog {
     val psF = state.props.filter(_._1 <= cap)
     val psrF = state.propRms.filter(_._1 <= cap)
     val ceF = state.entries.filter(_.seq <= cap)
-    val seqs = catF.map(_._1) ++ ceF.map(_.seq) ++ distF.map(_._1) ++ rmF.map(_._1) ++
+    val seqs = ceF.map(_.seq) ++ distF.map(_._1) ++ rmF.map(_._1) ++
       lakeF.map(_._1) ++ lrmF.map(_._1) ++
       dvF.map(_._1) ++ dvrF.map(_._1) ++ fsF.map(_._1) ++
       exF.map(_._1) ++ exrF.map(_._1) ++
@@ -4239,7 +4172,6 @@ object Catalog {
     // out here would silently break time travel below the checkpoint
     val acF = state.addCols.filter(_._1 <= cap)
     val lines =
-      catF.sortBy(e => (e._1, e._2)).map { case (s, p) => s"$s $p" } ++
       distF.sortBy(e => (e._1, e._2)).map { case (s, p) => s"D $s $p" } ++
       rmF.sortBy(e => (e._1, e._3)).map { case (s, ms, p) => s"R $s $ms $p" } ++
       lakeF.sortBy(e => (e._1, e._2)).map { case (s, p) => s"L $s $p" } ++
@@ -4260,8 +4192,6 @@ object Catalog {
       psrF.sortBy(e => (e._1, e._2)).map { case (s, k) => s"PSR $s $k" } ++
       state.notes.filter(_._1 <= cap).sortBy(_._1)
         .map { case (s, n) => s"N $s $n" } ++
-      state.catStats.filter(_._1 <= cap).sortBy(e => (e._1, e._2))
-        .map { case (s, p, st) => s"CS $s ${st.fields} $p" } ++
       // already in seq order, and a fold can hold millions
       ceF.map(e => s"CE ${e.seq} ${e.fields}")
     val body = (lines :+ s"#end ${lines.size}").mkString("\n")
@@ -4356,12 +4286,11 @@ object Catalog {
     } // foldLockName
   }
 
-  /** Parsed committed log state: catalog (seq, live path), distribution
-    * adds (seq, live path), distribution removes (seq, claimMs, live
-    * path), and the lake-area equivalents. Live paths are relative to
+  /** Parsed committed log state: distribution adds (seq, live path),
+    * distribution removes (seq, claimMs, live path), the lake-area
+    * equivalents, and the catalog's entries. Live paths are relative to
     * their area root. */
   private final case class LogState(
-      cat: Seq[(Long, String)],
       dist: Seq[(Long, String)],
       removes: Seq[(Long, Long, String)],
       lake: Seq[(Long, String)] = Seq.empty,
@@ -4405,13 +4334,10 @@ object Catalog {
       // plan memoized against a pre-commit parse can never be served
       // for the post-commit state (same listing, different content)
       digest: String = "",
-      // catalog file facts: (seq, live path, size and ts bounds)
-      catStats: Seq[(Long, String, CatStat)] = Seq.empty,
       // catalog rows the records carry, in seq order
       entries: Seq[LoggedEntry] = Seq.empty) {
-    lazy val catStatOf: Map[String, CatStat] = catStats.map(e => e._2 -> e._3).toMap
     // once per parsed state: a fold can hold millions of entries
-    lazy val catVersions: Seq[Long] = (cat.map(_._1) ++ entries.map(_.seq)).distinct.sorted
+    lazy val catVersions: Seq[Long] = entries.map(_.seq).distinct.sorted
   }
 
   /** `_log/_last_checkpoint` — the Delta-style POINTER HINT bounding
@@ -4598,7 +4524,7 @@ object Catalog {
           s.nonEmpty && s != "file")) probeLogTail(fs, log)
       else None
     val statuses = probed.getOrElse {
-      if (!fs.exists(log)) return LogState(Seq.empty, Seq.empty, Seq.empty)
+      if (!fs.exists(log)) return LogState(Seq.empty, Seq.empty)
       fs.listStatus(log)
     }
     val digest = {
@@ -4696,7 +4622,6 @@ object Catalog {
       case None => (0L, List.empty[String])
     }
     maxSeq = cpSeq
-    val cat = Seq.newBuilder[(Long, String)]
     val dist = Seq.newBuilder[(Long, String)]
     val removes = Seq.newBuilder[(Long, Long, String)]
     val lake = Seq.newBuilder[(Long, String)]
@@ -4708,12 +4633,13 @@ object Catalog {
     val dv = Seq.newBuilder[(Long, String)]
     val dvRemoves = Seq.newBuilder[(Long, Long, String)]
     val fileStats = Seq.newBuilder[(Long, String, String)]
-    val catStats = Seq.newBuilder[(Long, String, CatStat)]
     val entries = Vector.newBuilder[LoggedEntry]
+    var entry: LoggedEntry = null
     // one instance per source: a fold can hold millions of entries
     val sources = scala.collection.mutable.HashMap.empty[String, String]
     def intern(source: String): String =
       if (source == null) null else sources.getOrElseUpdate(source, source)
+    lazy val cpFile = new org.apache.hadoop.fs.Path(log, f"$cpSeq%020d.checkpoint")
     val expects = Seq.newBuilder[(Long, String, String)]
     val expectRms = Seq.newBuilder[(Long, String)]
     val props = Seq.newBuilder[(Long, String, String)]
@@ -4721,12 +4647,10 @@ object Catalog {
     val notes = Seq.newBuilder[(Long, String)]
     cpLines.filter(_.nonEmpty).foreach { l =>
       if (l.startsWith("CE ")) {
-        val a = l.split(" ", 5)
-        entries += LoggedEntry(a(1).toLong, a(2).toLong,
-          intern(LoggedEntry.decode(a(3))), LoggedEntry.decode(a(4)))
-      } else if (l.startsWith("CS ")) {
         val a = l.split(" ", 6)
-        catStats += ((a(1).toLong, a(5), CatStat.parse(a(2), a(3), a(4))))
+        if (a.length != 6) unreadable(cpFile, l)
+        entry = LoggedEntry.read(a(1).toLong, a, entry, intern)
+        entries += entry
       } else if (l.startsWith("N ")) {
         val a = l.split(" ", 3); notes += ((a(1).toLong, a(2)))
       } else if (l.startsWith("PSR ")) {
@@ -4759,9 +4683,7 @@ object Catalog {
         val a = l.split(' '); renameCols += ((a(1).toLong, a(2), a(3)))
       } else if (l.startsWith("DC ")) {
         val a = l.split(' '); dropCols += ((a(1).toLong, a(2)))
-      } else {
-        val sp = l.indexOf(' '); cat += ((l.substring(0, sp).toLong, l.substring(sp + 1)))
-      }
+      } else unreadable(cpFile, l)
     }
     val done = names.filter(_.endsWith(".done")).map(_.stripSuffix(".done")).toSet
     names
@@ -4785,7 +4707,6 @@ object Catalog {
         if (txnGate.contains("abort"))
           abortedTxns += ((seq, r.txn.get))
         if (txnGate.forall(_ == "commit")) {
-          r.cat.foreach(rel => cat += ((seq, live(rel))))
           r.dist.foreach(rel => dist += ((seq, live(rel))))
           r.removes.foreach(p => removes += ((seq, r.claimMs, p)))
           r.lake.foreach(rel => lake += ((seq, live(rel))))
@@ -4800,7 +4721,6 @@ object Catalog {
           r.lakeReAdds.foreach(p => lake += ((seq, p)))
           r.dvReAdds.foreach(p => dv += ((seq, p)))
           r.fileStats.foreach { case (rel, json) => fileStats += ((seq, live(rel), json)) }
-          r.catStats.foreach { case (rel, st) => catStats += ((seq, live(rel), st)) }
           r.entries.foreach(e => entries += e.copy(seq = seq, source = intern(e.source)))
           r.expects.foreach { case (n, pred) => expects += ((seq, n, pred)) }
           r.expectRms.foreach(n => expectRms += ((seq, n)))
@@ -4809,7 +4729,7 @@ object Catalog {
           r.note.foreach(n => notes += ((seq, n)))
         }
       }
-    (LogState(cat.result(), dist.result(), removes.result(),
+    (LogState(dist.result(), removes.result(),
       lake.result(), lakeRemoves.result(), addCols.result(),
       widenCols.result(), renameCols.result(), dropCols.result(),
       dv.result(), dvRemoves.result(), fileStats.result(),
@@ -4818,7 +4738,7 @@ object Catalog {
       pendingTxns = pendingTxns.result(),
       txnIds = txnSeen.keys.toSeq.sorted,
       abortedTxns = abortedTxns.result(), maxSeq = maxSeq,
-      catStats = catStats.result(), entries = entries.result()),
+      entries = entries.result()),
       txnSeen.toMap)
   }
 
@@ -4880,64 +4800,29 @@ object Catalog {
 
   /** Time travel: the catalog exactly as of commit `version` — the
     * Delta/Iceberg `VERSION AS OF` read, reconstructed from the
-    * manifest log rather than a directory listing (so a concurrent
-    * writer's in-flight files are invisible regardless of rename
-    * timing). The snapshot is every catalog file and logged entry the
-    * committed records ≤ `version` name, read like [[load]] (same
-    * columns, `source` partition pruning on the files, no planning
-    * job), and a version with neither is an empty frame with those
-    * columns.
+    * manifest log rather than a directory listing: every entry the
+    * committed records ≤ `version` carry, read like [[load]] (same
+    * columns, no Spark job). A version with none is an empty frame
+    * with those columns.
     *
-    * Scale: the log is one small record per commit (driver-side list,
-    * O(commits) plus one line per logged entry — the same order as
-    * Delta's log replay); the file read is a normal pruned parquet
-    * scan. */
-  def loadAsOf(spark: SparkSession, layout: Layout, version: Long): DataFrame = {
-    val (files, entries) = catalogAsOf(spark, layout, version)
-    unionOf(spark, Option.when(files.nonEmpty)(readCatalogFiles(spark, layout, files)),
-      Option.when(entries.nonEmpty)(entryFrame(spark, entries)))
-  }
+    * Scale: the log is one small record per commit plus one line per
+    * entry (driver-side, the same order as Delta's log replay). */
+  def loadAsOf(spark: SparkSession, layout: Layout, version: Long): DataFrame =
+    entryFrame(spark, readLog(spark, layout).entries.filter(_.seq <= version))
 
   /** O11: `Source = s AND ts BETWEEN t0 AND t1` (inclusive), planned
-    * from one log read.
-    *  - Logged entries ([[commitIngest]]) are filtered on the driver,
-    *    in microseconds, and served as a local relation: no file, no
-    *    Spark job, no generated code per range.
-    *  - Catalog files: equality on the partition column prunes
-    *    directories (DynamoDB partition-key equality). For the sort-key
-    *    BETWEEN, each file's recorded `ts` bounds skip the files wholly
-    *    outside the range, and the files wholly inside it are read with
-    *    no row filter, so the plan inlines no bound and successive
-    *    ranges reuse one compiled plan. Only files with unknown or
-    *    partly overlapping bounds keep the `ts` filter.
-    * Every comparison is in microseconds, the unit of the stored `ts`
-    * and of the filter's literals, so the skip is exact; a null bound
-    * or source matches nothing, as the SQL predicate does. Nothing in
-    * range gives an empty frame without a job. */
+    * from one log read: the committed entries are filtered on the
+    * driver, in microseconds (the unit of the stored `ts`), and served
+    * as a local relation — no file, no Spark job, no generated code per
+    * range. A null bound, source or `ts` matches nothing, as the SQL
+    * predicate does. */
   def rangeQuery(spark: SparkSession, layout: Layout, source: String,
       t0: java.sql.Timestamp, t1: java.sql.Timestamp): DataFrame = {
-    val range = for (a <- Option(t0); b <- Option(t1))
+    val range = for (a <- Option(t0); b <- Option(t1) if source != null)
       yield (DateTimeUtils.fromJavaTimestamp(a), DateTimeUtils.fromJavaTimestamp(b))
-    // Some(inside) when the bounds settle the file, None when rows must be filtered
-    def settled(st: Option[CatStat]): Option[Boolean] = for {
-      (r0, r1) <- range
-      (lo, hi) <- st.flatMap(_.ts)
-      inside = r0 <= lo && hi <= r1
-      if inside || hi < r0 || lo > r1
-    } yield inside
-    val (allFiles, allEntries) = catalogAsOf(spark, layout, Long.MaxValue)
-    val files = allFiles
-      .filter { case (live, _) => LogFileIndex.sourceOf(live.takeWhile(_ != '/')).contains(source) }
-      .groupBy { case (_, st) => settled(st) }
-    val entries = for {
-      (r0, r1) <- range.toSeq if source != null
-      e <- allEntries if e.source == source && r0 <= e.micros && e.micros <= r1
-    } yield e
-    val ofSource = col("source") === source
-    unionOf(spark,
-      files.get(Some(true)).map(readCatalogFiles(spark, layout, _).filter(ofSource)),
-      files.get(None).map(readCatalogFiles(spark, layout, _)
-        .filter(ofSource && col("ts").between(t0, t1))),
-      Option.when(entries.nonEmpty)(entryFrame(spark, entries)))
+    entryFrame(spark, range.toSeq.flatMap { case (r0, r1) =>
+      readLog(spark, layout).entries.filter(e =>
+        e.ts != null && e.source == source && r0 <= e.ts && e.ts <= r1)
+    })
   }
 }

@@ -68,16 +68,16 @@ object Ingest {
     bronze.withColumn("event", from_json(col("json"), schema))
 
   /** Batch ingest: bronze → canonical parquet lake partitioned by
-    * source (the reference's per-source prefix layout), plus catalog
-    * entries for each ingested object — committed ATOMICALLY as one
-    * manifest-log record ([[Catalog.commitLakeIngest]]): concurrent
-    * batch ingests can't clobber each other's committer staging, a
-    * crash mid-ingest leaves no uncataloged lake rows, and
-    * [[Catalog.loadLakeSnapshot]] readers see the batch all-or-
-    * nothing. The bronze scan is persisted for the three consumers
-    * (lake stage, catalog, count) — otherwise each would re-read and
-    * re-split every object, and a file arriving mid-ingest could be
-    * cataloged without being written. */
+    * source (the reference's per-source prefix layout), plus one
+    * catalog entry per ingested object at `arrivalMs` — committed
+    * ATOMICALLY as one manifest-log record
+    * ([[Catalog.commitLakeIngest]]): concurrent batch ingests can't
+    * clobber each other's committer staging, a crash mid-ingest leaves
+    * no uncataloged lake rows, and [[Catalog.loadLakeSnapshot]] readers
+    * see the batch all-or-nothing. One pass over bronze: the lake
+    * write itself observes the objects and the row count, so nothing
+    * is cached, shuffled or read twice, and no catalog file is
+    * written. Returns the number of rows written. */
   def ingestBatch(spark: SparkSession, layout: Layout, arrivalMs: Long): Long = {
     import spark.implicits._
     // the same standing-erasure gate the streaming path applies
@@ -94,11 +94,6 @@ object Ingest {
         .filter(r => !drop(r._1, r._3))
         .toDF("source", "key", "json")
     }
-    val bronze = gated.persist()
-    try {
-      Catalog.commitLakeIngest(spark, layout, bronze,
-        Catalog.entriesFor(bronze, arrivalMs))
-      bronze.count()
-    } finally bronze.unpersist()
+    Catalog.commitLakeIngest(spark, layout, gated, arrivalMs)
   }
 }

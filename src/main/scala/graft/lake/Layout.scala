@@ -9,9 +9,9 @@ package graft.lake
   *    `bronze/<source>/<object>`; the source is carried by the path,
   *    exactly like the reference's S3 key prefix.
   *  - `lake/` — canonical parquet, `partitionBy(source)`.
-  *  - `catalog/` — the queryable metadata table (O6/O7/O11),
-  *    `partitionBy(source)` so the replay range scan prunes to one
-  *    partition like DynamoDB's partition-key equality.
+  *  - `catalog/` — the manifest log (`catalog/_log`) every commit
+  *    claims; the queryable metadata table (O6/O7/O11) is the entry
+  *    lines its records carry, with no data files of its own.
   *  - `distribution/` — per-source fan-out area (the SNS-topic
   *    equivalent, `serverless_datalake_stack.py:233-248`); subscribers
   *    are just readers of `distribution/source=<s>/`.

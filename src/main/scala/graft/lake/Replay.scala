@@ -26,16 +26,12 @@ import org.apache.spark.sql.functions._
   *  - ONE catalog query, with no shuffle: a collect bounded at
   *    `maxCollectedKeys + 1` rows, which both lists a small range and
   *    tells a big one apart. [[Catalog.rangeQuery]] plans it from one
-  *    manifest-log read. The entries a stream's ingest commits carry
-  *    in their records are filtered on the driver, so over a
-  *    stream-built catalog the collect starts no Spark job, opens no
-  *    catalog file and compiles no code for new bounds. Catalog files
-  *    (batch ingest, [[Catalog.append]]) are read only where their
-  *    `ts` bounds overlap the range, with no directory listing. An
-  *    empty range returns 0 here without a Spark job, claiming
-  *    nothing;
+  *    manifest-log read: every catalog row is an entry in a commit
+  *    record, filtered on the driver, so the collect starts no Spark
+  *    job, reads no catalog file and compiles no code for new bounds.
+  *    An empty range returns 0 here, claiming nothing;
   *  - ONE read of the matched bronze objects, by the publish itself —
-  *    the call's one Spark job over a stream-built catalog;
+  *    the call's one Spark job;
   *  - the returned count is observed on that publish write (an
   *    `Observation`), not counted by a second read.
   */

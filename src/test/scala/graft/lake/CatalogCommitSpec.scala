@@ -2,23 +2,48 @@ package graft.lake
 
 import graft.SparkTestBase
 import java.sql.Timestamp
+import org.apache.spark.sql.Dataset
+import org.apache.spark.sql.functions.{col, lit}
 
 /** The manifest-log commit behind [[Catalog.append]] (a catalog-only
   * commit record, the format every commit path writes): concurrent
-  * appends never lose each other's files (the `_temporary`-sharing
-  * hazard of a naive `mode("append")`), crashes between CLAIM and DONE
-  * are finished exactly by [[Catalog.recoverAppends]], pre-CLAIM
+  * appends never lose each other's rows, crashes between CLAIM and
+  * DONE are finished exactly by [[Catalog.recoverAppends]], pre-CLAIM
   * orphans and a done commit's leftover stage are swept once aged out,
   * and recovery over a clean log opens no record. */
 class CatalogCommitSpec extends SparkTestBase {
 
-  /** Stage-and-claim WITHOUT publishing — a writer that crashed
-    * between CLAIM and DONE. The record is the catalog-only one
-    * [[Catalog.append]] writes. */
-  private def claimCatOnly(fs: org.apache.hadoop.fs.FileSystem, layout: Layout,
-      uuid: String, staged: Seq[String]): Long =
+  /** The entry line a record logs for `e`. */
+  private def entryLine(e: CatalogEntry): String = {
+    val micros = Math.floorDiv(e.ts.getTime, 1000L) * 1000000L + e.ts.getNanos / 1000
+    s"catent $micros ${e.tsRaw} ${e.source} ${e.key}"
+  }
+
+  /** Claim WITHOUT finishing — a writer that crashed between CLAIM and
+    * DONE. The record is the catalog-only one [[Catalog.append]]
+    * writes. */
+  private def claimEntries(fs: org.apache.hadoop.fs.FileSystem, layout: Layout,
+      rows: Dataset[CatalogEntry]): Long =
     Catalog.claimBody(fs, layout,
-      (Seq(s"v2 -1 ${System.currentTimeMillis()}", s"cat $uuid") ++ staged).mkString("\n"))
+      (s"v2 -1 ${System.currentTimeMillis()}" +: rows.collect().toSeq.map(entryLine))
+        .mkString("\n"))
+
+  /** Stage `rows`' objects as distribution files under `stage`,
+    * returning the staged files. */
+  private def stageDist(fs: org.apache.hadoop.fs.FileSystem, stage: org.apache.hadoop.fs.Path,
+      rows: Dataset[CatalogEntry]): Seq[String] = {
+    rows.toDF().select(col("source"), col("key"), lit("{}").as("json"))
+      .write.mode("overwrite").partitionBy("source").format("json").save(stage.toString)
+    Catalog.stagedFiles(fs, stage, suffix = ".json")
+  }
+
+  /** Claim WITHOUT publishing the record [[Catalog.commitIngest]]
+    * writes: the distribution files staged under `uuid` and one
+    * catalog entry per row. */
+  private def claimIngest(fs: org.apache.hadoop.fs.FileSystem, layout: Layout,
+      uuid: String, staged: Seq[String], rows: Dataset[CatalogEntry]): Long =
+    Catalog.claimBody(fs, layout, (Seq(s"v2 -1 ${System.currentTimeMillis()}", s"dist $uuid") ++
+      staged ++ rows.collect().toSeq.map(entryLine)).mkString("\n"))
 
   private def entries(n: Int, offset: Int, sources: Seq[String]) = {
     val s = spark
@@ -68,17 +93,13 @@ class CatalogCommitSpec extends SparkTestBase {
     val layout = Layout(tmpDir("cat-recover"))
     Catalog.append(spark, layout, entries(10, 0, Seq("clicks")))
 
-    // simulate the crash: stage + claim a second batch, never publish
+    // simulate the crash: claim a second batch, never finish it
     val fs = new org.apache.hadoop.fs.Path(layout.catalogDir)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val uuid = "crashed-batch"
-    val stage = new org.apache.hadoop.fs.Path(s"${layout.catalogDir}/_staged/$uuid")
-    entries(5, 500, Seq("clicks", "tweets")).toDF()
-      .write.mode("overwrite").partitionBy("source").parquet(stage.toString)
-    val staged = Catalog.stagedFiles(fs, stage)
-    claimCatOnly(fs, layout, uuid, staged)
+    val seq = claimEntries(fs, layout, entries(5, 500, Seq("clicks", "tweets")))
+    val done = new org.apache.hadoop.fs.Path(s"${layout.catalogDir}/_log/${"%020d".format(seq)}.done")
 
-    // the unfinished commit's rows are invisible (staged under `_`)
+    // the unfinished commit's rows are invisible (no DONE marker)
     assert(Catalog.load(spark, layout).count() == 10)
 
     Catalog.recoverAppends(spark, layout)
@@ -87,7 +108,7 @@ class CatalogCommitSpec extends SparkTestBase {
     // idempotent: a second recovery changes nothing
     Catalog.recoverAppends(spark, layout)
     assert(Catalog.load(spark, layout).count() == 15)
-    assert(!fs.exists(stage), "the finished commit's staging dir is dropped")
+    assert(fs.exists(done), "the finished commit is marked done")
 
     // and the catalog still appends normally after recovery
     Catalog.append(spark, layout, entries(3, 900, Seq("logs")))
@@ -97,10 +118,9 @@ class CatalogCommitSpec extends SparkTestBase {
   test("recoverAppends sweeps a pre-CLAIM orphan staging dir (once aged out)") {
     val layout = Layout(tmpDir("cat-orphan"))
     Catalog.append(spark, layout, entries(4, 0, Seq("clicks")))
-    val orphan = new org.apache.hadoop.fs.Path(s"${layout.catalogDir}/_staged/orphan-uuid")
-    entries(2, 700, Seq("clicks")).toDF()
-      .write.mode("overwrite").partitionBy("source").parquet(orphan.toString)
+    val orphan = new org.apache.hadoop.fs.Path(s"${layout.distributionDir}/_staged/orphan-uuid")
     val fs = orphan.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    stageDist(fs, orphan, entries(2, 700, Seq("clicks")))
     assert(fs.exists(orphan))
     // FRESH unclaimed stage = possibly a committer between its stage
     // write and its CLAIM: the age-gated sweep must leave it alone
@@ -122,18 +142,16 @@ class CatalogCommitSpec extends SparkTestBase {
     val old = System.currentTimeMillis() - 3600_000L
     // seq 1, committed and finished; then a crash between its DONE and
     // its stage delete leaves the (published, now empty) stage behind
-    val leftover = new org.apache.hadoop.fs.Path(s"${layout.catalogDir}/_staged/done-uuid")
-    entries(4, 0, Seq("clicks")).toDF()
-      .write.mode("overwrite").partitionBy("source").parquet(leftover.toString)
-    assert(claimCatOnly(fs, layout, "done-uuid", Catalog.stagedFiles(fs, leftover)) == 1L)
+    val leftover = new org.apache.hadoop.fs.Path(s"${layout.distributionDir}/_staged/done-uuid")
+    val first = entries(4, 0, Seq("clicks"))
+    assert(claimIngest(fs, layout, "done-uuid", stageDist(fs, leftover, first), first) == 1L)
     Catalog.recoverAppends(spark, layout)
     assert(Catalog.versions(spark, layout) == Seq(1L) && !fs.exists(leftover))
     fs.mkdirs(new org.apache.hadoop.fs.Path(leftover, "source=clicks"))
     // an undone commit (seq 2) whose stage is older than the grace window
-    val undone = new org.apache.hadoop.fs.Path(s"${layout.catalogDir}/_staged/undone-uuid")
-    entries(3, 500, Seq("clicks", "tweets")).toDF()
-      .write.mode("overwrite").partitionBy("source").parquet(undone.toString)
-    assert(claimCatOnly(fs, layout, "undone-uuid", Catalog.stagedFiles(fs, undone)) == 2L)
+    val undone = new org.apache.hadoop.fs.Path(s"${layout.distributionDir}/_staged/undone-uuid")
+    val second = entries(3, 500, Seq("clicks", "tweets"))
+    assert(claimIngest(fs, layout, "undone-uuid", stageDist(fs, undone, second), second) == 2L)
     fs.setTimes(undone, old, -1L)
 
     // a fresh leftover is inside the grace window: kept; the undone
@@ -178,11 +196,11 @@ class CatalogCommitSpec extends SparkTestBase {
     // version beyond head = head; version 0 = empty table
     assert(Catalog.loadAsOf(spark, layout, 99).count() == 12)
     assert(Catalog.loadAsOf(spark, layout, 0).count() == 0)
-    // the snapshot keeps the partition column (basePath read)
+    // the snapshot keeps the source column
     val v2 = Catalog.loadAsOf(spark, layout, 2)
     assert(v2.columns.contains("source"))
     assert(v2.filter(org.apache.spark.sql.functions.col("source") === "clicks").count() == 5)
-    // snapshot at head == the live directory read, row for row
+    // snapshot at head == the head read, row for row
     val head = Catalog.load(spark, layout).select("source", "key")
       .collect().map(r => (r.getString(0), r.getString(1))).sorted.toSeq
     val asOf = Catalog.loadAsOf(spark, layout, 3).select("source", "key")
@@ -306,13 +324,10 @@ class CatalogCommitSpec extends SparkTestBase {
   test("loadAsOf never sees a claimed-but-unfinished commit; recovery promotes it") {
     val layout = Layout(tmpDir("cat-asof-crash"))
     Catalog.append(spark, layout, entries(6, 0, Seq("clicks")))
-    // simulate a crash between CLAIM and DONE: stage + claim, no publish
-    val df = entries(2, 500, Seq("tweets")).toDF()
-    val stage = new org.apache.hadoop.fs.Path(s"${layout.catalogDir}/_staged/crash-uuid")
-    df.write.mode("overwrite").partitionBy("source").parquet(stage.toString)
-    val fs = stage.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val staged = Catalog.stagedFiles(fs, stage)
-    claimCatOnly(fs, layout, "crash-uuid", staged)
+    // simulate a crash between CLAIM and DONE: claim, never finish
+    val fs = new org.apache.hadoop.fs.Path(layout.catalogDir)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    claimEntries(fs, layout, entries(2, 500, Seq("tweets")))
 
     assert(Catalog.versions(spark, layout) == Seq(1L),
       "a torn commit must not be a readable version")

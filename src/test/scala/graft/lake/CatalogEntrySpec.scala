@@ -12,7 +12,7 @@ import org.apache.spark.sql.functions._
   * ([[Catalog.commitIngest]]): it writes no catalog file, and every
   * catalog reader folds the entries from the log — [[Catalog.load]],
   * [[Catalog.loadAsOf]] and [[Catalog.rangeQuery]] serve them as a
-  * local relation next to the files [[Catalog.append]] writes,
+  * local relation, with the entries [[Catalog.append]] logs,
   * [[Catalog.versions]] and [[Catalog.lakeHistory]] count them, a
   * checkpoint folds them, and an undone record's entries stay hidden. */
 class CatalogEntrySpec extends SparkTestBase {
@@ -171,7 +171,7 @@ class CatalogEntrySpec extends SparkTestBase {
     check()
     val history = Catalog.lakeHistory(spark, layout).select("version", "n_catalog_added")
       .collect().map(r => r.getLong(0) -> r.getInt(1)).toSeq
-    assert(history == Seq(1L -> 2, 2L -> 1, 3L -> 2), "one catalog add per logged entry or file")
+    assert(history == Seq(1L -> 2, 2L -> 1, 3L -> 2), "one catalog add per logged entry")
 
     assert(Catalog.checkpoint(spark, layout) == Some(3L))
     assert(Catalog.pruneLog(spark, layout) == 6L)
@@ -194,7 +194,7 @@ class CatalogEntrySpec extends SparkTestBase {
     // before DONE; and a later commit above it
     val fs = new Path(layout.catalogDir).getFileSystem(spark.sparkContext.hadoopConfiguration)
     val torn = Catalog.claimBody(fs, layout,
-      s"v2 -1 ${System.currentTimeMillis()}\ncatent ${t0Ms + 5L} clicks torn-0")
+      s"v2 -1 ${System.currentTimeMillis()}\ncatent ${(t0Ms + 5L) * 1000L} ${t0Ms + 5L} clicks torn-0")
     ingest(layout, t0Ms + 9L, Seq(("clicks", "later-0")))
     val range = (new Timestamp(t0Ms), new Timestamp(t0Ms + 10L))
     def keys(df: DataFrame): Seq[String] = df.select("key").collect().map(_.getString(0)).toSeq.sorted
@@ -228,7 +228,7 @@ class CatalogEntrySpec extends SparkTestBase {
     // by recovery
     val fs = new Path(layout.catalogDir).getFileSystem(spark.sparkContext.hadoopConfiguration)
     Catalog.claimBody(fs, layout, s"v2 -1 ${System.currentTimeMillis()}\n" +
-      s"catent ${t0Ms + 1L} ünï%20cødé%25 k%0A鍵")
+      s"catent ${(t0Ms + 1L) * 1000L} ${t0Ms + 1L} ünï%20cødé%25 k%0A鍵")
     Catalog.recoverAppends(spark, layout)
     val committed = ingested :+ (("ünï cødé%", new Timestamp(t0Ms + 1L), "k\n鍵"))
     def check(): Unit = {

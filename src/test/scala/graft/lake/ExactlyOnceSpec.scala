@@ -25,6 +25,16 @@ class ExactlyOnceSpec extends SparkTestBase {
     rows.toDF("source", "key", "json")
   }
 
+  /** The catalog entry lines an ingest commit logs for `batch`
+    * arriving at `ms`: one per object. */
+  private def entryLines(batch: org.apache.spark.sql.DataFrame, ms: Long): Seq[String] =
+    CatalogOracle.entriesFor(batch, ms).collect().toSeq
+      .map(e => s"catent ${ms * 1000L} $ms ${e.source} ${e.key}").sorted
+
+  /** Every file or directory under the catalog directory outside its `_log`. */
+  private def catalogData(layout: Layout): Seq[String] =
+    Option(new java.io.File(layout.catalogDir).list()).toSeq.flatten.filter(_ != "_log")
+
   test("crash between CLAIM and publish: recovery finishes catalog+distribution+marker " +
       "exactly once, and the redelivered batch skips") {
     val layout = Layout(tmpDir("xo-crash"))
@@ -35,21 +45,19 @@ class ExactlyOnceSpec extends SparkTestBase {
       ("clicks", "obj-1", """{"u":"B","v":2}"""),
       ("tweets", "obj-2", """{"u":"A","v":3}""")))
 
-    // simulate the torn commit by hand: stage both legs, claim the v2
-    // record (exactly what commitIngest writes), then "crash" before
-    // any publish rename
-    val catStage = new Path(s"${layout.catalogDir}/_staged/u-cat")
-    Catalog.entriesFor(batch, 1704067200000L).toDF()
-      .write.mode("overwrite").partitionBy("source").parquet(catStage.toString)
-    val catFiles = Catalog.stagedFiles(fs, catStage)
+    // simulate the torn commit by hand: stage the distribution leg,
+    // claim the v2 record (exactly what commitIngest writes: the
+    // marker, the staged files and one catalog entry per object), then
+    // "crash" before any publish rename
+    val entries = entryLines(batch, 1704067200000L)
     val distStage = new Path(s"${layout.distributionDir}/_staged/u-dist")
     batch.write.mode("overwrite").partitionBy("source").format("json")
       .save(distStage.toString)
     val distFiles = Catalog.stagedFiles(fs, distStage, suffix = ".json")
-    assert(catFiles.nonEmpty && distFiles.nonEmpty)
+    assert(entries.nonEmpty && distFiles.nonEmpty)
     val marker = s"${layout.checkpointDir}/markers/7"
-    val body = (Seq(s"v2 7 1704067200000", s"marker $marker", "cat u-cat") ++ catFiles ++
-      Seq("dist u-dist") ++ distFiles).mkString("\n")
+    val body = (Seq(s"v2 7 1704067200000", s"marker $marker", "dist u-dist") ++ distFiles ++
+      entries).mkString("\n")
     Catalog.claimBody(fs, layout, body)
 
     // torn state: nothing visible anywhere
@@ -65,7 +73,7 @@ class ExactlyOnceSpec extends SparkTestBase {
     assert(Distribution.subscribeSnapshot(spark, layout, "clicks").count() == 2)
     assert(Distribution.subscribeSnapshot(spark, layout, "tweets").count() == 1)
     assert(fs.exists(new Path(marker)), "recovery must recreate the batch marker")
-    assert(!fs.exists(catStage) && !fs.exists(distStage))
+    assert(!fs.exists(distStage) && catalogData(layout).isEmpty)
 
     // the redelivered micro-batch (same batchId) now SKIPS on its marker
     StreamIngest.processBatch(batch, layout, 1704067300000L, 7L)
@@ -104,7 +112,7 @@ class ExactlyOnceSpec extends SparkTestBase {
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     val torn = new Path(s"${layout.catalogDir}/_log/${"%020d".format(2)}.checkpoint")
     val out = fs.create(torn, true)
-    try out.write("1 source=clicks/c00000000000000000001-bogus.parquet".getBytes("UTF-8"))
+    try out.write("CE 1 1704067200000000 1704067200000 clicks bogus".getBytes("UTF-8"))
     finally out.close()
 
     assert(Catalog.versions(spark, layout) == Seq(1L, 2L),
@@ -132,11 +140,9 @@ class ExactlyOnceSpec extends SparkTestBase {
     // claimed-but-unfinished commit at seq 2 (concurrent writer crash)
     val fs = new Path(layout.catalogDir)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val stage = new Path(s"${layout.catalogDir}/_staged/gap-uuid")
-    entries(3, 500).toDF().write.mode("overwrite").partitionBy("source")
-      .parquet(stage.toString)
-    Catalog.claimBody(fs, layout, (Seq("v2 -1 1704067200000", "cat gap-uuid") ++
-      Catalog.stagedFiles(fs, stage)).mkString("\n"))
+    Catalog.claimBody(fs, layout, ("v2 -1 1704067200000" +: (0 until 3).map { i =>
+      s"catent ${(1704067200000L + i) * 1000L} ${1704067200000L + i} clicks obj-${500 + i}"
+    }).mkString("\n"))
 
     Catalog.append(spark, layout, entries(4, 900)) // seq 3, done
 
@@ -250,17 +256,14 @@ class ExactlyOnceSpec extends SparkTestBase {
     val fs = new Path(layout.catalogDir)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     val batch = batchOf(Seq(("clicks", "k1", """{"v":1}""")))
-    // stage both legs + claim by hand (the commitLakeIngest protocol),
+    // stage the lake leg + claim by hand (the record commitLakeIngest
+    // writes: the staged files and one catalog entry per object),
     // crash before publish
     val lakeStage = new Path(s"${layout.lakeDir}/_staged/u-lake")
     batch.write.mode("overwrite").partitionBy("source").parquet(lakeStage.toString)
     val lakeFiles = Catalog.stagedFiles(fs, lakeStage)
-    val catStage = new Path(s"${layout.catalogDir}/_staged/u-cat2")
-    Catalog.entriesFor(batch, 1704067200000L).toDF()
-      .write.mode("overwrite").partitionBy("source").parquet(catStage.toString)
-    val catFiles = Catalog.stagedFiles(fs, catStage)
-    val body = (Seq("v2 -1 1704067200000", "cat u-cat2") ++ catFiles ++
-      Seq("lake u-lake") ++ lakeFiles).mkString("\n")
+    val body = (Seq("v2 -1 1704067200000", "lake u-lake") ++ lakeFiles ++
+      entryLines(batch, 1704067200000L)).mkString("\n")
     Catalog.claimBody(fs, layout, body)
 
     assert(Catalog.loadLakeSnapshot(spark, layout).count() == 0)
@@ -268,7 +271,7 @@ class ExactlyOnceSpec extends SparkTestBase {
     Catalog.recoverAppends(spark, layout)
     assert(Catalog.loadLakeSnapshot(spark, layout).count() == 1)
     assert(Catalog.load(spark, layout).count() == 1)
-    assert(!fs.exists(lakeStage) && !fs.exists(catStage))
+    assert(!fs.exists(lakeStage) && catalogData(layout).isEmpty)
   }
 
   test("distribution time travel: subscribeAsOf replays each committed version; " +

@@ -12,7 +12,7 @@ import org.apache.spark.sql.execution.exchange.Exchange
   * [[StreamIngest.processBatch]] scans bronze once, shuffles nothing,
   * and takes its catalog entries from the distribution write
   * ([[Catalog.commitIngest]]) and logs them in its commit record — the
-  * same rows [[Catalog.entriesFor]] derives, with the same tombstone gate, no
+  * same rows [[CatalogOracle.entriesFor]] derives, with the same tombstone gate, no
   * trace of an empty batch, and no per-arrival generated code. */
 class IngestCommitSpec extends SparkTestBase {
 
@@ -64,7 +64,7 @@ class IngestCommitSpec extends SparkTestBase {
     threeSources(layout)
     val batch = Ingest.readBronze(spark, layout)
     StreamIngest.processBatch(batch, layout, arrival, 0L)
-    val want = Catalog.entriesFor(batch, arrival).toDF()
+    val want = CatalogOracle.entriesFor(batch, arrival).toDF()
       .select("ts", "tsRaw", "key", "source").collect().toSet
     val got = Catalog.load(spark, layout).collect().toSet
     assert(want.size == 4, "one entry per object")

@@ -125,7 +125,7 @@ class ReplaySpec extends SparkTestBase {
     // the rows `ingested` committed: each object at its arrival
     val bronze = Ingest.readBronze(spark, layout)
     def arrived(batch: DataFrame, ms: Long) =
-      Catalog.entriesFor(batch, ms).toDF().select("ts", "tsRaw", "key", "source")
+      CatalogOracle.entriesFor(batch, ms).toDF().select("ts", "tsRaw", "key", "source")
     val committed = arrived(bronze.filter(!col("key").endsWith("/o2.json")), arrival1)
       .union(arrived(bronze.filter(col("key").endsWith("/o2.json")), arrival2))
     assert(shape(committed) == want, "the reference shape is the committed rows'")

@@ -126,8 +126,10 @@ class PlanAuditSpec extends SparkTestBase {
     }
   }
 
-  test("catalog range query prunes partitions on source") {
+  test("catalog range query plans a local relation of the one source's rows") {
     import spark.implicits._
+    import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+    import org.apache.spark.sql.execution.FileSourceScanExec
     val layout = graft.lake.Layout(tmpDir("planlake"))
     val entries = Seq(
       graft.lake.CatalogEntry("a", java.sql.Timestamp.valueOf("2024-01-01 00:00:00"), "t", "k1"),
@@ -136,9 +138,18 @@ class PlanAuditSpec extends SparkTestBase {
     val q = graft.lake.Catalog.rangeQuery(spark, layout, "a",
       java.sql.Timestamp.valueOf("2023-01-01 00:00:00"),
       java.sql.Timestamp.valueOf("2025-01-01 00:00:00"))
-    val scan = scanInfo(q)
-    // partition filter on the Hive-style source= dir, not a data filter
-    assert(scan.contains("PartitionFilters: [isnotnull(source"), scan)
+    // the source is selected while planning, on the driver: the plan's
+    // one leaf holds only that source's rows, and nothing scans a file
+    val leaves = q.queryExecution.analyzed.collectLeaves()
+    assert(leaves.size == 1, leaves.mkString("\n"))
+    val local = leaves.head match {
+      case l: LocalRelation => l
+      case other => fail(s"not a local relation: $other")
+    }
+    assert(local.data.map(_.getUTF8String(3).toString) == Seq("a"))
+    val scans = q.queryExecution.executedPlan.collect { case s: FileSourceScanExec => s }
+    assert(scans.isEmpty, scanInfo(q))
+    assert(q.select("key").as[String].collect().toSeq == Seq("k1"))
   }
 
   test("distribution subscribe prunes to the subscribed source's partition") {
