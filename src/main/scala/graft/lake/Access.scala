@@ -125,14 +125,14 @@ object Access {
   }
 
   /** Fold one UTC day's usage appends into a single file — the
-    * small-files maintenance of the edge ledger, with the SAME
-    * checked two-rename swap [[Compaction.compactSource]] uses: the
-    * folded partition is written to a `_`-prefixed sibling (invisible
-    * to readers), the live dir is moved aside, the fold swapped in,
-    * and only then is the backup deleted; every rename failure
-    * restores or preserves the original. Totals are merge-by-sum, so
-    * a gate running before, during (it sees either the old files or
-    * the fold, never both), or after compaction decides identically.
+    * small-files maintenance of the edge ledger, by a checked
+    * two-rename swap of its own: the folded partition is written to a
+    * `_`-prefixed sibling (invisible to readers), the live dir is
+    * moved aside, the fold swapped in, and only then is the backup
+    * deleted; every rename failure restores or preserves the
+    * original. Totals are merge-by-sum, so a gate running before,
+    * during (it sees either the old files or the fold, never both), or
+    * after compaction decides identically.
     * Run from the maintenance cadence, not the hot path. */
   def compactUsage(spark: SparkSession, layout: Layout, nowMs: Long): Unit = {
     val dirStr = dayDirOf(layout, nowMs)

@@ -687,14 +687,27 @@ object Catalog {
     * read surface is [[distLiveFiles]]/[[Distribution.subscribeSnapshot]];
     * physical removal is deferred to [[vacuumDist]] so an in-flight
     * reader that planned against the old snapshot never loses files
-    * mid-read. Used by replay publish and committed compaction. */
+    * mid-read. Used by replay publish and committed compaction.
+    * Returns the commit's version, or -1 when nothing was staged and
+    * nothing removed (no record is claimed). */
   def commitDist(spark: SparkSession, layout: Layout, batch: DataFrame,
       removes: Seq[String] = Seq.empty): Long = {
+    val uuid = java.util.UUID.randomUUID().toString
+    batch.write.mode("overwrite").partitionBy("source").format("json")
+      .save(s"${layout.distributionDir}/_staged/$uuid")
+    commitDistPrestaged(spark, layout, uuid, removes)
+  }
+
+  /** [[commitDist]] of an ALREADY-STAGED payload: raw files the caller
+    * placed under `distributionDir/_staged/<uuid>/source=X/` (`.json`
+    * suffix; the stage directory must exist), plus `removes`. Used
+    * directly by [[Erase]], whose byte-preserving line rewrite cannot
+    * go through a DataFrame json write. */
+  def commitDistPrestaged(spark: SparkSession, layout: Layout, uuid: String,
+      removes: Seq[String]): Long = {
     val fs = new org.apache.hadoop.fs.Path(layout.catalogDir)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val uuid = java.util.UUID.randomUUID().toString
     val stage = new org.apache.hadoop.fs.Path(s"${layout.distributionDir}/_staged/$uuid")
-    batch.write.mode("overwrite").partitionBy("source").format("json").save(stage.toString)
     val staged = stagedFiles(fs, stage, suffix = ".json")
     if (staged.isEmpty && removes.isEmpty) { fs.delete(stage, true); return -1L }
     val rec = V2Record(-1L, System.currentTimeMillis(), None,
@@ -3511,9 +3524,10 @@ object Catalog {
     * operator runs before trusting a lake after an incident, each one
     * row `(check, ok, n_bad, detail)`:
     *
-    *  - `live_files_exist` / `dv_files_exist`: every committed-live
-    *    path has bytes on disk (a missing one means an out-of-band
-    *    delete or a vacuum bug — reads of the head WILL fail);
+    *  - `live_files_exist` / `dv_files_exist` / `dist_files_exist`:
+    *    every committed-live lake, DV and distribution path has bytes
+    *    on disk (a missing one means an out-of-band delete or a vacuum
+    *    bug — reads of the head WILL fail);
     *  - `dv_targets_live`: every live DV row references a live data
     *    file (dangling rows are harmless by construction — the scan
     *    never joins them — but a growing count means materialize debt);
@@ -3531,12 +3545,13 @@ object Catalog {
     import spark.implicits._
     val fs = new org.apache.hadoop.fs.Path(layout.catalogDir)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    def missing(rels: Seq[String]): Seq[String] = rels.filterNot(rel =>
-      fs.exists(new org.apache.hadoop.fs.Path(s"${layout.lakeDir}/$rel")))
+    def missing(rels: Seq[String], dir: String = layout.lakeDir): Seq[String] =
+      rels.filterNot(rel => fs.exists(new org.apache.hadoop.fs.Path(s"$dir/$rel")))
     val live = lakeFilesAsOf(spark, layout)
     val dvLive = dvFilesAsOf(spark, layout)
     val liveMissing = missing(live)
     val dvMissing = missing(dvLive)
+    val distMissing = missing(distLiveFiles(spark, layout), layout.distributionDir)
     val dangling =
       if (dvLive.isEmpty || dvMissing.nonEmpty) Seq.empty[String]
       else {
@@ -3577,6 +3592,7 @@ object Catalog {
     Seq(
       row("live_files_exist", liveMissing),
       row("dv_files_exist", dvMissing),
+      row("dist_files_exist", distMissing),
       row("dv_targets_live", dangling, info = true),
       row("recovery_backlog", unfinished, info = true),
       row("checkpoint_valid", if (tornCheckpoint) Seq("torn") else Seq.empty),
@@ -3899,26 +3915,6 @@ object Catalog {
       }
     }
     applyWidenings(spark, layout, evolved, toVersion)
-  }
-
-  /** Commit an ALREADY-STAGED distribution payload: raw files placed
-    * by the caller under `distributionDir/_staged/<uuid>/source=X/`
-    * (`.json` suffix), plus `removes` — live relative paths dropped
-    * from the committed set. Used by [[Erase]], whose byte-preserving
-    * line rewrite cannot go through a DataFrame json write. */
-  def commitDistPrestaged(spark: SparkSession, layout: Layout, uuid: String,
-      removes: Seq[String]): Long = {
-    val fs = new org.apache.hadoop.fs.Path(layout.catalogDir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val stage = new org.apache.hadoop.fs.Path(s"${layout.distributionDir}/_staged/$uuid")
-    val staged = if (fs.exists(stage)) stagedFiles(fs, stage, suffix = ".json") else Seq.empty
-    if (staged.isEmpty && removes.isEmpty) { fs.delete(stage, true); return -1L }
-    val rec = V2Record(-1L, System.currentTimeMillis(), None,
-      if (staged.nonEmpty) Some(uuid) else None, staged, removes)
-    val seq = claimBody(fs, layout, v2Body(rec))
-    finishV2(fs, layout, seq, rec)
-    if (staged.isEmpty) fs.delete(stage, true)
-    seq
   }
 
   /** Finish or sweep interrupted appends: commits with a `.commit`

@@ -1,20 +1,29 @@
 package graft.lake
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
 
 /** Per-source fan-out — the engine form of the reference's SNS
   * topic-per-source publish (O8–O10,
-  * `/root/reference/src/event_recorder/lambda_function.py:55-65`):
-  * every record of source s is delivered once under the source's
-  * distribution path; subscribers are downstream readers (batch or
-  * `readStream`) of `distribution/source=<s>/`.
+  * `src/event_recorder/lambda_function.py:55-65`): every record of
+  * source s is delivered once under the source's distribution path
+  * `distribution/source=<s>/`.
+  *
+  * The manifest log is the one distribution surface. Every file is
+  * published by a log commit — [[Catalog.commitIngest]] (stream
+  * ingest), [[Catalog.commitDist]] ([[Replay.replayCommitted]],
+  * [[Compaction.compactSourceCommitted]]) or
+  * [[Catalog.commitDistPrestaged]] (the erase rewrite) — and every
+  * pull read takes its file set from the log ([[subscribeSnapshot]],
+  * [[subscribeAsOf]]), never from a directory listing (Delta Lake,
+  * VLDB 2020 §3). Two readers still list the source's directory:
+  * [[pushSubscribe]], a file stream, and the erase rewrite, which must
+  * reach every physical copy of a subject's records.
   *
   * The reference's per-record SNS publish loop has a shadowing bug
   * (`for content in content[source]` clobbers the dict, mis-iterating
   * multi-source batches — SURVEY.md §2.3 item 6); the *intent* — every
-  * record of every source published exactly once — is what
-  * `partitionBy(source)` gives, shuffle-free and per-record
+  * record of every source published exactly once — is what a
+  * `partitionBy(source)` commit gives, shuffle-free and per-record
   * (JSON-lines: one line = one delivered message).
   *
   * The "topic registry" (SSM parameter per source, O10) degenerates to
@@ -27,78 +36,11 @@ object Distribution {
   def topicPath(layout: Layout, source: String): String =
     s"${layout.distributionDir}/source=$source"
 
-  /** O8+O9: publish a batch of (source, …) records to the per-source
-    * distribution area. Rows with the same source co-locate by the
-    * partitionBy layout without a shuffle. */
-  def publish(batch: DataFrame, layout: Layout): Unit =
-    batch.write.mode("append").partitionBy("source").format("json")
-      .save(layout.distributionDir)
-
-  /** Subscriber view of one source's stream (the test_subscriber
-    * equivalent, `/root/reference/src/test_subscriber/lambda_function.py:8-9`).
-    *
-    * Compaction-aware, PLAN-TIME BEST-EFFORT: [[Compaction
-    * .compactSource]]'s swap is two renames, so there is a window
-    * where `source=X` is absent while a `_`-prefixed transient sibling
-    * exists. The quiescence check here runs once, when the view is
-    * constructed — it narrows the silently-empty-view race (a swap in
-    * flight NOW is detected, waited out, and fails loudly if stuck)
-    * but does not close it: the returned frame is lazy, so a swap that
-    * begins after this check and before the caller's action can still
-    * yield an empty view or a FileNotFoundException at read time.
-    * Callers that need the read itself to be consistent use
-    * [[subscribeConsistent]]. An absent partition with NO marker still
-    * means "no data yet", which stays a valid empty view. */
-  def subscribe(spark: SparkSession, layout: Layout, source: String,
-      maxWaitMs: Long = 10000L, pollMs: Long = 50L): DataFrame = {
-    Compaction.awaitQuiescent(spark, layout, source, maxWaitMs, pollMs)
-    read(spark, layout, layout.distributionDir).filter(col("source") === source)
-  }
-
-  /** Action-time-consistent subscriber view: materializes the read NOW
-    * (localCheckpoint truncates lineage, so the returned frame no
-    * longer depends on files a later compaction may delete) and
-    * re-verifies afterwards that the result is trustworthy. A snapshot
-    * is suspect only when it came back EMPTY while the partition dir
-    * or a transient compaction marker exists — i.e. the listing ran
-    * inside a swap window that opened after the plan-time check; such
-    * snapshots (and reads that die on files deleted mid-read) are
-    * retried until `maxWaitMs`, then the failure surfaces. A
-    * genuinely empty source — no partition, no marker — returns its
-    * empty view immediately, as with [[subscribe]]. */
-  def subscribeConsistent(spark: SparkSession, layout: Layout, source: String,
-      maxWaitMs: Long = 10000L, pollMs: Long = 50L): DataFrame = {
-    val deadline = System.nanoTime() + maxWaitMs * 1000000L
-    var lastFailure: Throwable = null
-    while (System.nanoTime() <= deadline) {
-      Compaction.awaitQuiescent(spark, layout, source, maxWaitMs, pollMs)
-      try {
-        val snap = read(spark, layout, layout.distributionDir)
-          .filter(col("source") === source)
-          .localCheckpoint(true)
-        if (!snap.isEmpty || !Compaction.swapSuspect(spark, layout, source))
-          return snap
-        lastFailure = new java.io.IOException(
-          s"subscribeConsistent($source): empty read raced a compaction swap")
-      } catch {
-        // a swap that starts mid-read deletes files the listing
-        // already captured — Spark surfaces that as a (wrapped)
-        // FileNotFoundException; anything else still fails after the
-        // deadline below, so a persistent real error is never masked
-        case e: Exception => lastFailure = e
-      }
-      Thread.sleep(pollMs)
-    }
-    throw new java.io.IOException(
-      s"subscribeConsistent($source): no consistent read within ${maxWaitMs} ms", lastFailure)
-  }
-
-  /** SNAPSHOT-ISOLATED subscriber view — the committed-surface read:
-    * instead of listing the partition directory (which can race a
-    * compaction's swap or double-count a not-yet-vacuumed rewrite),
-    * the file set comes from the lake manifest log
-    * ([[Catalog.distLiveFiles]]): every committed add minus every
-    * committed remove, resolved atomically at plan time. A compaction
+  /** SNAPSHOT-ISOLATED subscriber view (the reference's
+    * `src/test_subscriber/lambda_function.py:8-9`): the file set comes
+    * from the lake manifest log ([[Catalog.distLiveFiles]]): every
+    * committed add minus every committed remove, resolved atomically
+    * at plan time. A compaction
     * ([[Compaction.compactSourceCommitted]]) or replay running
     * CONCURRENTLY with this read cannot change the returned rows —
     * the reader sees either the pre- or post-compaction file set,
@@ -140,15 +82,21 @@ object Distribution {
       .load(paths: _*)
 
   /** PUSH-based subscriber delivery — the SNS→Lambda push analogue
-    * (`/root/reference/serverless_datalake/serverless_datalake_stack.py:233-265`,
-    * handler `src/test_subscriber/lambda_function.py:8-9`), closing
-    * the latency gap of the polling [[subscribe]] view: a streaming
+    * (the reference's `serverless_datalake_stack.py:233-265`, handler
+    * `src/test_subscriber/lambda_function.py:8-9`), closing the
+    * latency gap of the polling [[subscribeSnapshot]] view: a streaming
     * file source watches the source's topic partition and the handler
     * is INVOKED per micro-batch of newly published records, with
     * checkpointed offsets so each record is delivered exactly once
     * per subscription (stronger than SNS's at-least-once; a redelivery
     * after a handler crash re-invokes with the same batch, which is
     * exactly SNS retry semantics).
+    *
+    * Delivery is per FILE PATH, not per record: the stream lists the
+    * directory, not the manifest log. A commit that rewrites files —
+    * [[Compaction.compactSourceCommitted]] or an erase rewrite
+    * ([[Erase.eraseWhere]]) — adds new paths holding records already
+    * delivered, so the subscription delivers those records AGAIN.
     *
     * Scale: discovery cost is the file listing per trigger — the same
     * contract as the ingest stream; handler work is whatever the

@@ -27,9 +27,10 @@ import org.apache.hadoop.fs.Path
   *    renames are atomic, both transient names are `_`-prefixed
   *    (invisible to readers), and a crash leaves either the intact
   *    original or a finished rewrite plus sweepable `_` files — never
-  *    a partial object. The lake/distribution partition rewrites reuse
-  *    [[Compaction]]'s documented two-rename swap contract (briefly
-  *    absent, never partial).
+  *    a partial object. The lake and distribution rewrites are each
+  *    one manifest-log commit that adds the rewritten files and
+  *    removes the old ones, so a snapshot reader sees the partition
+  *    before or after, never partial.
   *  - **Schema-on-read erasure predicate.** Bronze/lake/distribution
   *    all store the payload as JSON text, and the reference never
   *    validates payloads — so the predicate is a function over the raw

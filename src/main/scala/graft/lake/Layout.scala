@@ -13,8 +13,9 @@ package graft.lake
   *    claims; the queryable metadata table (O6/O7/O11) is the entry
   *    lines its records carry, with no data files of its own.
   *  - `distribution/` — per-source fan-out area (the SNS-topic
-  *    equivalent, `serverless_datalake_stack.py:233-248`); subscribers
-  *    are just readers of `distribution/source=<s>/`.
+  *    equivalent, `serverless_datalake_stack.py:233-248`); its files
+  *    are published, read and compacted through the manifest log
+  *    ([[Distribution]]).
   */
 final case class Layout(root: String) {
   val bronzeDir: String = s"$root/bronze"
@@ -147,66 +148,21 @@ private[lake] object SourceLock {
   }
 }
 
-/** Small-file compaction for the lake's partition dirs — streaming
+/** Small-file compaction for the distribution area — streaming
   * ingest at a 60 s trigger writes one file per micro-batch per
   * source; over days that is thousands of small files per partition,
-  * and at 100 TB the file-listing + per-file open cost dominates
-  * scans. Compaction rewrites a partition to `targetFiles` files.
-  *
-  * Consistency contract (deliberately NOT claimed atomic): the swap is
-  * two directory renames, so a reader that lists `source=X` in the
-  * window between them sees the partition briefly ABSENT (never
-  * partial, never doubled). Transient dirs are `_`-prefixed siblings —
-  * Spark's file listing skips `_`/`.` paths, so whole-directory
-  * partition discovery over the distribution root can never pick them
-  * up as bogus partition values. All paths go through the Hadoop
+  * and at 100 TB the per-file open cost dominates reads. Compaction
+  * rewrites a source's committed-live files to `targetFiles` files
+  * ([[compactSourceCommitted]]). All paths go through the Hadoop
   * FileSystem API, so the same code runs against HDFS/S3A, not just
   * the local FS. */
 object Compaction {
   import org.apache.spark.sql.SparkSession
-  import org.apache.hadoop.fs.Path
 
-  private[lake] def transientPaths(layout: Layout, source: String): Seq[Path] = Seq(
-    new Path(s"${layout.distributionDir}/_compacting_source=$source"),
-    new Path(s"${layout.distributionDir}/_old_source=$source"))
-
-  /** Reader-side detection hook for the swap window: if `source=X` is
-    * absent but a transient compaction sibling exists, a swap is in
-    * flight — poll until the partition reappears (the window is two
-    * renames, normally sub-millisecond), and throw after `maxWaitMs`
-    * so a crashed compaction surfaces as an error instead of as a
-    * silently empty subscriber view. No marker + no partition is NOT
-    * an error: that is a genuinely empty source. */
-  def awaitQuiescent(spark: SparkSession, layout: Layout, source: String,
-      maxWaitMs: Long = 10000L, pollMs: Long = 50L): Unit = {
-    val dir = new Path(s"${layout.distributionDir}/source=$source")
-    val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val deadline = System.nanoTime() + maxWaitMs * 1000000L
-    while (!fs.exists(dir) && transientPaths(layout, source).exists(fs.exists)) {
-      if (System.nanoTime() > deadline)
-        throw new java.io.IOException(
-          s"subscribe($source): compaction swap appears stuck — partition absent but " +
-            s"transient compaction dirs remain after ${maxWaitMs} ms; " +
-            s"recover by renaming the surviving _old/_compacting dir back to source=$source")
-      Thread.sleep(pollMs)
-    }
-  }
-
-  /** True when an empty subscriber read is NOT trustworthy: the
-    * partition dir exists (the listing must have raced the swap's
-    * first rename) or a transient compaction sibling exists (a swap is
-    * in flight right now). No dir + no marker = genuinely empty. */
-  private[lake] def swapSuspect(spark: SparkSession, layout: Layout,
-      source: String): Boolean = {
-    val dir = new Path(s"${layout.distributionDir}/source=$source")
-    val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.exists(dir) || transientPaths(layout, source).exists(fs.exists)
-  }
-
-  /** COMMITTED compaction — the manifest-log form of [[compactSource]]
-    * with no reader-visible window at all: the compacted file is
-    * staged and committed in ONE log record that atomically adds it
-    * and removes the inputs ([[Catalog.commitDist]]), so a
+  /** COMMITTED compaction with no reader-visible window: the
+    * compacted file is staged and committed in ONE log record that
+    * atomically adds it and removes the inputs
+    * ([[Catalog.commitDist]]), so a
     * [[Distribution.subscribeSnapshot]] reader concurrent with the
     * compaction (or with a replay publishing new files) sees either
     * the old file set or the new one — byte-identical content either
@@ -235,38 +191,4 @@ object Compaction {
         n
       }
     }
-
-  def compactSource(spark: SparkSession, layout: Layout, source: String,
-      targetFiles: Int = 1): Long = {
-    val dirStr = s"${layout.distributionDir}/source=$source"
-    val df = spark.read.format("json").load(dirStr)
-    val n = df.count()
-    val dir = new Path(dirStr)
-    val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // shared with awaitQuiescent so the reader-side marker check can
-    // never drift from the writer-side transient names
-    val Seq(tmp, bak) = transientPaths(layout, source)
-    // clear leftovers of a crashed prior run BEFORE writing, so the
-    // renames below cannot fail against stale targets
-    if (fs.exists(tmp)) fs.delete(tmp, true)
-    if (fs.exists(bak)) fs.delete(bak, true)
-    df.coalesce(targetFiles).write.mode("overwrite").format("json").save(tmp.toString)
-    // every rename is checked: on failure the original data is intact
-    // (or restorable from the backup) and we fail loudly — the one
-    // unrecoverable mistake would be deleting the backup after a
-    // failed swap-in.
-    if (!fs.rename(dir, bak))
-      throw new java.io.IOException(s"compaction: cannot move $dirStr aside")
-    if (!fs.rename(tmp, dir)) {
-      // the restore itself can fail (transient FS error) — then the
-      // data sits only in the _-prefixed backup, which listings skip:
-      // say so explicitly instead of reporting just the swap failure
-      if (!fs.rename(bak, dir))
-        throw new java.io.IOException(
-          s"compaction: swap-in AND restore failed — data preserved at $bak, manual rename required")
-      throw new java.io.IOException(s"compaction: cannot swap in compacted $dirStr (restored original)")
-    }
-    fs.delete(bak, true)
-    n
-  }
 }

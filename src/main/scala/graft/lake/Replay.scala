@@ -14,7 +14,10 @@ import org.apache.spark.sql.functions._
   *  - replay does NOT re-append to the catalog (no replay storms).
   *
   * The reference's SQS hop (one message per matched item, O12)
-  * collapses: the matched key set drives the read directly.
+  * collapses: the matched key set drives the read directly. The
+  * re-publish is a manifest-log commit, like every distribution
+  * write, so [[Distribution.subscribeSnapshot]] returns the replayed
+  * records and [[Compaction.compactSourceCommitted]] compacts them.
   *
   * Scale: the matched key list is only collected when small (it is a
   * *file* list — bounded by objects-per-range, not events). Above
@@ -31,7 +34,7 @@ import org.apache.spark.sql.functions._
   *    job, reads no catalog file and compiles no code for new bounds.
   *    An empty range returns 0 here, claiming nothing;
   *  - ONE read of the matched bronze objects, by the publish itself —
-  *    the call's one Spark job;
+  *    the call's one Spark job, committed as one manifest-log record;
   *  - the returned count is observed on that publish write (an
   *    `Observation`), not counted by a second read.
   */
@@ -40,25 +43,15 @@ object Replay {
   val maxCollectedKeys = 10000
 
   /** Replay [t0, t1] of `source` into the distribution area; returns
-    * the number of re-published records. */
-  def replay(spark: SparkSession, layout: Layout, source: String,
-      t0: java.sql.Timestamp, t1: java.sql.Timestamp): Long =
-    replayImpl(spark, layout, source, t0, t1, committed = false)
-
-  /** [[replay]] onto the COMMITTED distribution surface: the
-    * re-published records land as one manifest-log commit
-    * ([[Catalog.commitDist]]), so the replay is atomic to
-    * [[Distribution.subscribeSnapshot]] readers and safe to run
-    * concurrently with [[Compaction.compactSourceCommitted]] — the
-    * log's claim order serializes the two commits, and the
+    * the number of re-published records. The re-published records land
+    * as one manifest-log commit ([[Catalog.commitDist]]), so the replay
+    * is atomic to [[Distribution.subscribeSnapshot]] readers and safe
+    * to run concurrently with [[Compaction.compactSourceCommitted]] —
+    * the log's claim order serializes the two commits, and the
     * compaction's remove set can never name the replay's file (it was
     * fixed at the compaction's own snapshot read). */
   def replayCommitted(spark: SparkSession, layout: Layout, source: String,
-      t0: java.sql.Timestamp, t1: java.sql.Timestamp): Long =
-    replayImpl(spark, layout, source, t0, t1, committed = true)
-
-  private def replayImpl(spark: SparkSession, layout: Layout, source: String,
-      t0: java.sql.Timestamp, t1: java.sql.Timestamp, committed: Boolean): Long = {
+      t0: java.sql.Timestamp, t1: java.sql.Timestamp): Long = {
     val matched = Catalog.rangeQuery(spark, layout, source, t0, t1).select(col("key"))
     // one catalog query, no shuffle: a small range needs its key list
     // anyway, and one row past the cap is enough to tell a big range
@@ -82,8 +75,7 @@ object Replay {
     val published = Observation()
     val out = records.select(col("source"), col("key"), col("json"))
       .observe(published, count(lit(1)).as("n"))
-    if (committed) Catalog.commitDist(spark, layout, out)
-    else Distribution.publish(out, layout)
+    Catalog.commitDist(spark, layout, out)
     // NOTE deliberately no Catalog.append here (§2.3 item 2).
     // Reached only after the write returned: `get` blocks until the
     // write's metrics arrive, and a failed write never sends them.

@@ -61,8 +61,8 @@ class EndToEndLoopSpec extends SparkTestBase {
 
     val cat = Catalog.load(spark, layout)
     assert(cat.count() == 3, "one catalog row per OBJECT, not per record (O6/O7)")
-    val subClicks = Distribution.subscribeConsistent(spark, layout, "clicks")
-    val subTweets = Distribution.subscribeConsistent(spark, layout, "tweets")
+    val subClicks = Distribution.subscribeSnapshot(spark, layout, "clicks")
+    val subTweets = Distribution.subscribeSnapshot(spark, layout, "tweets")
     assert(subClicks.count() == 3 && subTweets.count() == 2,
       "per-source fan-out delivers every record to its topic (O8-O10, O14)")
     assert(subClicks.select("json").collect().map(_.getString(0)).toSet
@@ -81,15 +81,15 @@ class EndToEndLoopSpec extends SparkTestBase {
     // O12/O13 — replay the range: every record of every matched OBJECT
     // is re-published (object granularity), and the catalog does NOT
     // grow (no replay storms)
-    val republished = Replay.replay(spark, layout, "clicks", lo, hi)
+    val republished = Replay.replayCommitted(spark, layout, "clicks", lo, hi)
     assert(republished == 3, "replay re-publishes whole objects' records")
     assert(Catalog.load(spark, layout).count() == 3,
       "replay must NOT re-append to the catalog (O13)")
 
     // O14 — the subscriber now sees original + replayed clicks; tweets
     // (outside the replayed source) are untouched
-    assert(Distribution.subscribeConsistent(spark, layout, "clicks").count() == 6)
-    assert(Distribution.subscribeConsistent(spark, layout, "tweets").count() == 2)
+    assert(Distribution.subscribeSnapshot(spark, layout, "clicks").count() == 6)
+    assert(Distribution.subscribeSnapshot(spark, layout, "tweets").count() == 2)
   }
 
   test("gated loop: API-keyed requests -> quota gate -> ingest -> push delivery") {

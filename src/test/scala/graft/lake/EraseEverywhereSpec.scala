@@ -155,7 +155,7 @@ class EraseEverywhereSpec extends SparkTestBase {
     writeGzObject(layout.bronzeSourceDir("clicks"), "obj2.gz",
       rec("B", 4) + rec("C", 5))
     Ingest.ingestBatch(spark, layout, arrivalMs = 1704067200000L)
-    Distribution.publish(Ingest.readBronzeSource(spark, layout, "clicks"), layout)
+    Catalog.commitDist(spark, layout, Ingest.readBronzeSource(spark, layout, "clicks"))
 
     // a typed lake batch carrying the subject with a numeric column the
     // tracked-extrema view aggregates (the ingested json rows have v
@@ -194,7 +194,7 @@ class EraseEverywhereSpec extends SparkTestBase {
       .collect().map(_.getString(0))
     assert(lake.length == 4 && !lake.exists(_.contains("\"user\":\"A\"")),
       s"B2, B4, C5 ingested + t2 typed survive: ${lake.toSeq}")
-    assert(Distribution.subscribe(spark, layout, "clicks").collect()
+    assert(Distribution.subscribeSnapshot(spark, layout, "clicks").collect()
       .map(_.toString).forall(!_.contains("\"user\":\"A\"")))
 
     // shared artifacts: the stale key's dir (the subject's derived

@@ -6,7 +6,7 @@ import java.util.zip.GZIPOutputStream
 
 /** Right-to-erasure across every storage leg: bronze objects rewritten
   * in place (keys stable, catalog untouched), lake parquet and
-  * distribution partitions filtered and swapped. Idempotent; a subject
+  * distribution files filtered and recommitted. Idempotent; a subject
   * whose records share objects with other subjects never takes their
   * records with them. */
 class EraseSpec extends SparkTestBase {
@@ -35,7 +35,7 @@ class EraseSpec extends SparkTestBase {
 
     Ingest.ingestBatch(spark, layout, arrivalMs = 1704067200000L)
     val bronze0 = Ingest.readBronzeSource(spark, layout, "clicks")
-    Distribution.publish(bronze0, layout)
+    Catalog.commitDist(spark, layout, bronze0)
     val catBefore = Catalog.load(spark, layout).count()
 
     val report = Erase.eraseWhere(spark, layout, "clicks",
@@ -60,7 +60,7 @@ class EraseSpec extends SparkTestBase {
       .select("json").collect().map(_.getString(0))
     assert(lake.length == 4 && !lake.exists(_.contains("\"user\":\"A\"")),
       s"B, B, C and the decoy D survive: ${lake.toSeq}")
-    val dist = Distribution.subscribe(spark, layout, "clicks").count()
+    val dist = Distribution.subscribeSnapshot(spark, layout, "clicks").count()
     assert(dist == 4)
 
     // catalog untouched; no transient litter
@@ -91,12 +91,12 @@ class EraseSpec extends SparkTestBase {
     writeGzObject(layout.bronzeSourceDir("clicks"), "h1.gz", rec("A", 1) + rec("B", 2))
     graft.streaming.StreamIngest.processBatch(
       Ingest.readBronzeSource(spark, layout, "clicks"), layout, 1704067200000L, 1L)
-    assert(Distribution.subscribe(spark, layout, "clicks").count() == 2)
+    assert(Distribution.subscribeSnapshot(spark, layout, "clicks").count() == 2)
 
     // the erasure request: clear history AND register the tombstone
     Erase.addTombstone(spark, layout, Erase.Tombstone("clicks", "user", "A"))
     Erase.eraseWhere(spark, layout, "clicks", Erase.jsonFieldEquals("user", "A"))
-    assert(Distribution.subscribe(spark, layout, "clicks").count() == 1)
+    assert(Distribution.subscribeSnapshot(spark, layout, "clicks").count() == 1)
 
     // future arrivals of the subject are gated at intake — B flows, A never lands
     writeGzObject(layout.bronzeSourceDir("clicks"), "h2.gz",
@@ -105,7 +105,7 @@ class EraseSpec extends SparkTestBase {
       Ingest.readBronzeSource(spark, layout, "clicks")
         .filter(org.apache.spark.sql.functions.col("key").contains("h2.gz")),
       layout, 1704067260000L, 2L)
-    val dist = Distribution.subscribe(spark, layout, "clicks")
+    val dist = Distribution.subscribeSnapshot(spark, layout, "clicks")
       .select("json").collect().map(_.getString(0)).toSeq
     assert(dist.sorted == Seq(rec("B", 2), rec("B", 4)).sorted,
       s"only B's records may exist after the gate: $dist")
@@ -140,11 +140,11 @@ class EraseSpec extends SparkTestBase {
     writeGzObject(layout.bronzeSourceDir("logs"), "o1.gz", rec("A", 1) + rec("B", 2))
     Ingest.ingestBatch(spark, layout, arrivalMs = 1704067200000L)
     Erase.eraseWhere(spark, layout, "logs", Erase.jsonFieldEquals("user", "A"))
-    val nReplayed = Replay.replay(spark, layout, "logs",
+    val nReplayed = Replay.replayCommitted(spark, layout, "logs",
       new java.sql.Timestamp(1704067200000L - 1000),
       new java.sql.Timestamp(1704067200000L + 1000))
     assert(nReplayed == 1L, "replay reads the rewritten object: only B's record")
-    val rows = Distribution.subscribe(spark, layout, "logs")
+    val rows = Distribution.subscribeSnapshot(spark, layout, "logs")
       .select("json").collect().map(_.getString(0))
     assert(rows.toSeq == Seq(rec("B", 2)),
       s"the re-published stream must not resurrect the subject: ${rows.toSeq}")

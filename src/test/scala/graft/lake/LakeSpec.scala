@@ -80,7 +80,7 @@ class LakeSpec extends SparkTestBase {
     Ingest.ingestBatch(spark, layout, t0)
     val catBefore = Catalog.load(spark, layout).count()
 
-    val n = Replay.replay(spark, layout, "clicks",
+    val n = Replay.replayCommitted(spark, layout, "clicks",
       new Timestamp(t0 - 1000), new Timestamp(t0 + 1000))
     assert(n == 3) // both clicks objects, all their records (object granularity)
 
@@ -88,10 +88,10 @@ class LakeSpec extends SparkTestBase {
     assert(Catalog.load(spark, layout).count() == catBefore)
 
     // replayed records landed under the source's distribution path (O9/O13)
-    val delivered = Distribution.subscribe(spark, layout, "clicks")
+    val delivered = Distribution.subscribeSnapshot(spark, layout, "clicks")
     assert(delivered.count() == 3)
     // and none for the other source
-    assert(Distribution.subscribe(spark, layout, "tweets").count() == 0)
+    assert(Distribution.subscribeSnapshot(spark, layout, "tweets").count() == 0)
   }
 
   test("schema-on-read parse of opaque payloads tolerates malformed records") {
@@ -128,7 +128,7 @@ class LakeSpec extends SparkTestBase {
     seedBronze(layout)
     val t0 = 1704067200123L
     Ingest.ingestBatch(spark, layout, t0)
-    val n = Replay.replay(spark, layout, "clicks",
+    val n = Replay.replayCommitted(spark, layout, "clicks",
       new Timestamp(t0 + 10000), new Timestamp(t0 + 20000))
     assert(n == 0)
   }

@@ -12,10 +12,9 @@ class PushSubscribeSpec extends SparkTestBase {
   import spark.implicits._
 
   private def publish(layout: Layout, source: String, n: Int, tag: String): Unit =
-    (1 to n).map(i => (source, s"obj-$tag-$i", s"""{"id":"$tag-$i"}"""))
-      .toDF("source", "key", "json")
-      .write.mode("append").partitionBy("source").format("json")
-      .save(layout.distributionDir)
+    Catalog.commitDist(spark, layout,
+      (1 to n).map(i => (source, s"obj-$tag-$i", s"""{"id":"$tag-$i"}"""))
+        .toDF("source", "key", "json"))
 
   test("push subscriber delivers each published record exactly once, across restarts") {
     val layout = Layout(tmpDir("push"))

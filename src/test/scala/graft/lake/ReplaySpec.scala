@@ -5,16 +5,15 @@ import graft.streaming.StreamIngest
 import java.sql.Timestamp
 import org.apache.spark.ListenerBusAccess
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{StringType, TimestampType}
 
-/** The replay's cost shape: one bounded catalog collect, ONE bronze
-  * read (the publish counts its own rows), nothing claimed for an
-  * empty range — on both the directory ([[Replay.replay]]) and the
-  * committed ([[Replay.replayCommitted]]) surface. And the catalog
-  * read those replays plan against: [[Catalog.load]] has the columns,
-  * types and rows of the entries the ingest committed. */
+/** The cost shape of [[Replay.replayCommitted]]: one bounded catalog
+  * collect, ONE bronze read (the publish counts its own rows), nothing
+  * claimed for an empty range. And the catalog read those replays plan
+  * against: [[Catalog.load]] has the columns, types and rows of the
+  * entries the ingest committed. */
 class ReplaySpec extends SparkTestBase {
 
   private val arrival1 = 1704067200000L
@@ -47,49 +46,43 @@ class ReplaySpec extends SparkTestBase {
     (out, executions.count(QueryExecutions.readsUnder(layout.bronzeDir)))
   }
 
-  private type ReplayFn = (SparkSession, Layout, String, Timestamp, Timestamp) => Long
-  private val surfaces: Seq[(String, ReplayFn, (Layout, String) => DataFrame)] = Seq(
-    ("replay", Replay.replay _,
-      (l: Layout, src: String) => Distribution.subscribe(spark, l, src)),
-    ("replayCommitted", Replay.replayCommitted _,
-      (l: Layout, src: String) => Distribution.subscribeSnapshot(spark, l, src)))
+  private def read(l: Layout, src: String): DataFrame =
+    Distribution.subscribeSnapshot(spark, l, src)
 
-  surfaces.foreach { case (name, replayFn, read) =>
-    test(s"$name: one bronze read, and the count is exactly the rows the subscriber gains") {
-      val layout = ingested(s"replay-$name")
-      val beforeRows = read(layout, "clicks").select("key", "json").collect()
-      // the arrival1 range holds two clicks objects (o0, o1), not o2
-      val (n, reads) = bronzeReadsDuring(layout) {
-        replayFn(spark, layout, "clicks",
-          new Timestamp(arrival1 - 1000L), new Timestamp(arrival1 + 1000L))
-      }
-      assert(reads == 1, s"the replay must read bronze once, read it $reads times")
-      val s = spark
-      import s.implicits._
-      val gained = read(layout, "clicks").select("key", "json")
-        .exceptAll(beforeRows.toSeq.map(r => (r.getString(0), r.getString(1)))
-          .toDF("key", "json"))
-        .as[(String, String)].collect()
-      assert(n == gained.length.toLong, s"returned $n, subscriber gained ${gained.length}")
-      assert(gained.map(_._1.split('/').last).sorted.toSeq ==
-        Seq("o0.json", "o0.json", "o1.json", "o1.json"),
-        s"object-granular: every record of each matched object, nothing else: ${gained.toSeq}")
+  test("replayCommitted: one bronze read, and the count is exactly the rows the subscriber gains") {
+    val layout = ingested("replay-committed")
+    val beforeRows = read(layout, "clicks").select("key", "json").collect()
+    // the arrival1 range holds two clicks objects (o0, o1), not o2
+    val (n, reads) = bronzeReadsDuring(layout) {
+      Replay.replayCommitted(spark, layout, "clicks",
+        new Timestamp(arrival1 - 1000L), new Timestamp(arrival1 + 1000L))
     }
+    assert(reads == 1, s"the replay must read bronze once, read it $reads times")
+    val s = spark
+    import s.implicits._
+    val gained = read(layout, "clicks").select("key", "json")
+      .exceptAll(beforeRows.toSeq.map(r => (r.getString(0), r.getString(1)))
+        .toDF("key", "json"))
+      .as[(String, String)].collect()
+    assert(n == gained.length.toLong, s"returned $n, subscriber gained ${gained.length}")
+    assert(gained.map(_._1.split('/').last).sorted.toSeq ==
+      Seq("o0.json", "o0.json", "o1.json", "o1.json"),
+      s"object-granular: every record of each matched object, nothing else: ${gained.toSeq}")
+  }
 
-    test(s"$name: a range with no catalog match returns 0 and claims nothing") {
-      val layout = ingested(s"replay-empty-$name")
-      val (records, head) = (logRecords(layout), Catalog.headVersion(spark, layout))
-      val before = read(layout, "clicks").count()
-      val (n, reads) = bronzeReadsDuring(layout) {
-        replayFn(spark, layout, "clicks",
-          new Timestamp(arrival2 + 1000L), new Timestamp(arrival2 + 2000L))
-      }
-      assert(n == 0L)
-      assert(reads == 0, "an empty range reads no bronze object")
-      assert(logRecords(layout) == records && Catalog.headVersion(spark, layout) == head,
-        "no log record claimed for an empty replay")
-      assert(read(layout, "clicks").count() == before)
+  test("replayCommitted: a range with no catalog match returns 0 and claims nothing") {
+    val layout = ingested("replay-empty-committed")
+    val (records, head) = (logRecords(layout), Catalog.headVersion(spark, layout))
+    val before = read(layout, "clicks").count()
+    val (n, reads) = bronzeReadsDuring(layout) {
+      Replay.replayCommitted(spark, layout, "clicks",
+        new Timestamp(arrival2 + 1000L), new Timestamp(arrival2 + 2000L))
     }
+    assert(n == 0L)
+    assert(reads == 0, "an empty range reads no bronze object")
+    assert(logRecords(layout) == records && Catalog.headVersion(spark, layout) == head,
+      "no log record claimed for an empty replay")
+    assert(read(layout, "clicks").count() == before)
   }
 
   test("replayCommitted of objects emptied after cataloging (an erasure's " +

@@ -5,7 +5,6 @@ import graft.streaming.StreamIngest
 import org.apache.spark.ListenerBusAccess
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
 
 /** The subscriber reads plan with the distribution files' fixed
@@ -35,26 +34,14 @@ class SubscribeReadSpec extends SparkTestBase {
   private def inferred(layout: Layout, source: String): DataFrame =
     spark.read.format("json").load(layout.distributionDir).filter(col("source") === source)
 
-  test("subscribeSnapshot, subscribe and subscribeConsistent keep the inferred " +
-      "read's columns, types and rows on a multi-file source") {
+  test("subscribeSnapshot keeps the inferred read's shape and rows") {
     val layout = published("subscribe-shape")
     assert(Catalog.distLiveFiles(spark, layout).count(_.startsWith("source=clicks/")) >= 2)
     val want = inferred(layout, "clicks")
     assert(want.columns.toSeq == Seq("json", "key", "source"))
-    def check(got: DataFrame): Unit = {
-      assert(shape(got) == shape(want))
-      assert(got.collect().toSeq.sortBy(_.toString) == want.collect().toSeq.sortBy(_.toString))
-    }
-    check(Distribution.subscribeSnapshot(spark, layout, "clicks"))
-    check(Distribution.subscribe(spark, layout, "clicks"))
-    val consistent = Distribution.subscribeConsistent(spark, layout, "clicks")
-    // released here: a local checkpoint left to the garbage collector
-    // leaves the persistent-RDD registry whenever it is collected,
-    // under whichever spec runs then
-    try check(consistent)
-    finally consistent.queryExecution.analyzed.collect {
-      case r: LogicalRDD => r.rdd.unpersist(blocking = true)
-    }
+    val got = Distribution.subscribeSnapshot(spark, layout, "clicks")
+    assert(shape(got) == shape(want))
+    assert(got.collect().toSeq.sortBy(_.toString) == want.collect().toSeq.sortBy(_.toString))
     assert(want.count() == 4L)
   }
 

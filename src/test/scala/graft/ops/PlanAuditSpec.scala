@@ -153,21 +153,20 @@ class PlanAuditSpec extends SparkTestBase {
   }
 
   test("distribution subscribe prunes to the subscribed source's partition") {
-    // subscribe loads the whole distribution root then filters — that
-    // is only scale-safe because source is a partition column (pruned
-    // at planning, so one topic-dir is listed/read); this pins it so a
+    // subscribeSnapshot plans from the manifest log's live file set,
+    // keeping only the subscribed source's files — this pins it so a
     // layout refactor can't silently regress to full-root scans
-    import org.apache.spark.sql.functions.{col, lit}
+    import org.apache.spark.sql.functions.{col, when}
     val layout = graft.lake.Layout(tmpDir("sublake"))
     val batch = spark.range(6).select(
       (col("id") % 2 === 0).cast("string").as("source"),
       col("id").cast("string").as("payload"))
-      .withColumn("source",
-        org.apache.spark.sql.functions.when(col("source") === "true", "clicks").otherwise("tweets"))
-    graft.lake.Distribution.publish(batch, layout)
-    val q = graft.lake.Distribution.subscribe(spark, layout, "clicks")
-    val scan = scanInfo(q)
-    assert(scan.contains("PartitionFilters: [isnotnull(source"), scan)
+      .withColumn("source", when(col("source") === "true", "clicks").otherwise("tweets"))
+    graft.lake.Catalog.commitDist(spark, layout, batch)
+    assert(graft.lake.Catalog.distLiveFiles(spark, layout).exists(_.startsWith("source=tweets/")))
+    val q = graft.lake.Distribution.subscribeSnapshot(spark, layout, "clicks")
+    val files = q.inputFiles.toSeq
+    assert(files.nonEmpty && files.forall(_.contains("/distribution/source=clicks/")), files)
     assert(q.count() == 3)
   }
 

@@ -1,7 +1,7 @@
 package graft.ops
 
 import graft.SparkTestBase
-import graft.lake.{Compaction, Distribution, Layout}
+import graft.lake.{Catalog, Compaction, Distribution, Layout}
 import org.apache.spark.sql.functions._
 
 /** Scale-tooling semantics: salted joins preserve results, IVF probe
@@ -68,80 +68,25 @@ class ScaleToolsSpec extends SparkTestBase {
   test("compaction reduces file count and preserves rows") {
     val layout = Layout(tmpDir("compact"))
     import spark.implicits._
-    // write several small per-source batches (as streaming would)
+    // several small per-source commits (as streaming would make)
     (1 to 5).foreach { i =>
-      Seq(("clicks", s"k$i", s"""{"n":$i}"""))
+      Catalog.commitDist(spark, layout, Seq(("clicks", s"k$i", s"""{"n":$i}"""))
         .toDF("source", "key", "json")
-        .repartition(3)
-        .write.mode("append").partitionBy("source").format("json")
-        .save(layout.distributionDir)
+        .repartition(3))
     }
+    def live() = Catalog.distLiveFiles(spark, layout).count(_.startsWith("source=clicks/"))
     val dir = new java.io.File(s"${layout.distributionDir}/source=clicks")
-    val before = dir.listFiles().count(_.getName.endsWith(".json"))
+    def onDisk() = dir.listFiles().count(_.getName.endsWith(".json"))
+    val before = live()
     assert(before >= 5)
-    val n = Compaction.compactSource(spark, layout, "clicks", targetFiles = 1)
+    val n = Compaction.compactSourceCommitted(spark, layout, "clicks", targetFiles = 1)
     assert(n == 5)
-    val after = dir.listFiles().count(_.getName.endsWith(".json"))
-    assert(after == 1, s"expected 1 file after compaction, found $after")
-    assert(Distribution.subscribe(spark, layout, "clicks").count() == 5)
-  }
-
-  test("subscribe detects a stuck compaction swap instead of returning an empty view") {
-    val layout = Layout(tmpDir("compactwin"))
-    import spark.implicits._
-    Seq(("clicks", "k1", """{"n":1}"""))
-      .toDF("source", "key", "json")
-      .write.mode("append").partitionBy("source").format("json")
-      .save(layout.distributionDir)
-    val root = new java.io.File(layout.distributionDir)
-    val live = new java.io.File(root, "source=clicks")
-    val old = new java.io.File(root, "_old_source=clicks")
-    // simulate a compaction that crashed mid-swap: partition renamed
-    // aside, compacted dir never swapped in
-    assert(live.renameTo(old))
-    val e = intercept[java.io.IOException] {
-      Distribution.subscribe(spark, layout, "clicks", maxWaitMs = 200, pollMs = 20)
-    }
-    assert(e.getMessage.contains("compaction swap appears stuck"))
-    // recovery path named in the error: rename back, subscribe works
-    assert(old.renameTo(live))
-    assert(Distribution.subscribe(spark, layout, "clicks").count() == 1)
-    // and an absent partition with NO transient marker stays a valid
-    // empty view (genuinely no data), not an error
-    assert(Distribution.subscribe(spark, layout, "nosuch").count() == 0)
-  }
-
-  test("subscribeConsistent survives a swap window that subscribe's plan-time check misses") {
-    val layout = Layout(tmpDir("consistentsub"))
-    import spark.implicits._
-    Seq(("clicks", "k1", """{"n":1}"""), ("clicks", "k2", """{"n":2}"""))
-      .toDF("source", "key", "json")
-      .write.mode("append").partitionBy("source").format("json")
-      .save(layout.distributionDir)
-    // steady state: same rows as subscribe, already materialized
-    val snap = Distribution.subscribeConsistent(spark, layout, "clicks")
-    assert(snap.count() == 2)
-    // a genuinely empty source returns immediately, like subscribe
-    assert(Distribution.subscribeConsistent(spark, layout, "nosuch").count() == 0)
-
-    // mid-swap: partition renamed aside (a compaction in flight),
-    // finishing 150 ms later on another thread — the consistent read
-    // must wait the window out and return the data, where a lazy
-    // subscribe frame planned in the window reads empty
-    val root = new java.io.File(layout.distributionDir)
-    val live = new java.io.File(root, "source=clicks")
-    val old = new java.io.File(root, "_old_source=clicks")
-    assert(live.renameTo(old))
-    val finisher = new Thread(() => { Thread.sleep(150); old.renameTo(live): Unit })
-    finisher.start()
-    val during = Distribution.subscribeConsistent(spark, layout, "clicks",
-      maxWaitMs = 5000, pollMs = 20)
-    finisher.join()
-    assert(during.count() == 2, "consistent read must wait out the swap window")
-    // and the returned frame is lineage-truncated: rows survive even
-    // if the source files vanish afterwards
-    assert(live.renameTo(old))
-    assert(during.count() == 2)
-    assert(old.renameTo(live))
+    assert(live() == 1, s"expected 1 live file after compaction, found ${live()}")
+    assert(Distribution.subscribeSnapshot(spark, layout, "clicks").count() == 5)
+    // the inputs stay on disk until vacuum, then only the compacted file is left
+    assert(onDisk() == before + 1)
+    Catalog.vacuumDist(spark, layout, graceMs = 0L)
+    assert(onDisk() == 1, s"expected 1 file on disk after vacuum, found ${onDisk()}")
+    assert(Distribution.subscribeSnapshot(spark, layout, "clicks").count() == 5)
   }
 }

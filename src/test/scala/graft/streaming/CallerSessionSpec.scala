@@ -64,9 +64,9 @@ class CallerSessionSpec extends SparkTestBase {
     }
 
     val layout = Layout(tmpDir("caller-push"))
-    Seq(("clicks", "k1", """{"id":1}"""), ("clicks", "k2", """{"id":2}"""))
-      .toDF("source", "key", "json")
-      .write.partitionBy("source").format("json").save(layout.distributionDir)
+    Catalog.commitDist(spark, layout,
+      Seq(("clicks", "k1", """{"id":1}"""), ("clicks", "k2", """{"id":2}"""))
+        .toDF("source", "key", "json"))
     Distribution.pushSubscribe(spark, layout, "clicks", "isolated",
       Trigger.AvailableNow())(record).awaitTermination(60000)
 

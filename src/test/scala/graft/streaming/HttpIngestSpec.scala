@@ -113,7 +113,7 @@ class HttpIngestSpec extends SparkTestBase {
     // the unchanged downstream loop: catalog + per-source delivery
     StreamIngest.start(spark, layout, Trigger.AvailableNow()).awaitTermination()
     assert(Catalog.load(spark, layout).count() >= 1)
-    val clicks = Distribution.subscribeConsistent(spark, layout, "clicks")
+    val clicks = Distribution.subscribeSnapshot(spark, layout, "clicks")
     assert(clicks.count() == 3)
     assert(clicks.select("json").collect().map(_.getString(0)).toSet
       .contains("""{"click_id":2,"page":"}{"}"""),
@@ -122,7 +122,7 @@ class HttpIngestSpec extends SparkTestBase {
     // the reference's second endpoint: POST /{source}/replay (202
     // async, 400 on bad input, no api key — matching the stack)
     val rf = new HttpIngestFront(0, "localhost", 1, reg, Map.empty,
-      replayHandler = Some((src, lo, hi) => graft.lake.Replay.replay(
+      replayHandler = Some((src, lo, hi) => graft.lake.Replay.replayCommitted(
         spark, layout, src, new java.sql.Timestamp(lo), new java.sql.Timestamp(hi))))
     try {
       val catalogBefore = Catalog.load(spark, layout).count()
@@ -130,9 +130,9 @@ class HttpIngestSpec extends SparkTestBase {
       val body = s"""{"Source":"clicks","IntervalStart":"${now - 3600000L}","IntervalEnd":"${now + 3600000L}"}"""
       assert(post(rf.portBound, "/clicks/replay", body, None)._1 == 202)
       val deadline2 = System.currentTimeMillis() + 60000
-      while (Distribution.subscribeConsistent(spark, layout, "clicks").count() < 6 &&
+      while (Distribution.subscribeSnapshot(spark, layout, "clicks").count() < 6 &&
         System.currentTimeMillis() < deadline2) Thread.sleep(200)
-      assert(Distribution.subscribeConsistent(spark, layout, "clicks").count() == 6,
+      assert(Distribution.subscribeSnapshot(spark, layout, "clicks").count() == 6,
         "replayed objects re-publish every record to the subscriber")
       assert(Catalog.load(spark, layout).count() == catalogBefore,
         "replay must not re-append to the catalog")

@@ -124,12 +124,12 @@ class SocketIngestSpec extends SparkTestBase {
     // the unchanged downstream loop picks the socket-written objects up
     StreamIngest.start(spark, layout, Trigger.AvailableNow()).awaitTermination()
     assert(Catalog.load(spark, layout).count() >= 1)
-    val clicks = Distribution.subscribeConsistent(spark, layout, "clicks")
+    val clicks = Distribution.subscribeSnapshot(spark, layout, "clicks")
     assert(clicks.count() == 2)
     assert(clicks.select("json").collect().map(_.getString(0)).toSet
       .contains("""{"click_id":2,"page":"}{"}"""),
       "the pathological body survives the socket edge end-to-end")
-    assert(Distribution.subscribeConsistent(spark, layout, "tweets").count() == 1)
+    assert(Distribution.subscribeSnapshot(spark, layout, "tweets").count() == 1)
   }
 
   test("relay fans many frontends into the one socket-source connection") {

@@ -25,8 +25,8 @@ class StreamIngestSpec extends SparkTestBase {
     val q = StreamIngest.start(spark, layout, Trigger.AvailableNow())
     q.awaitTermination(60000)
 
-    assert(Distribution.subscribe(spark, layout, "clicks").count() == 2)
-    assert(Distribution.subscribe(spark, layout, "tweets").count() == 1)
+    assert(Distribution.subscribeSnapshot(spark, layout, "clicks").count() == 2)
+    assert(Distribution.subscribeSnapshot(spark, layout, "tweets").count() == 1)
     val cat = Catalog.load(spark, layout)
     assert(cat.count() == 2) // one entry per object
     assert(cat.filter(col("source") === "clicks").count() == 1)
@@ -42,7 +42,7 @@ class StreamIngestSpec extends SparkTestBase {
 
     val q1 = StreamIngest.start(spark, layout, Trigger.AvailableNow())
     q1.awaitTermination(60000)
-    assert(Distribution.subscribe(spark, layout, "clicks").count() == 2)
+    assert(Distribution.subscribeSnapshot(spark, layout, "clicks").count() == 2)
     assert(Catalog.load(spark, layout).count() == 1)
 
     // restart over the SAME checkpoint: the already-processed object
@@ -50,14 +50,14 @@ class StreamIngestSpec extends SparkTestBase {
     // path is at-least-once; this is the strict upgrade, SURVEY §2.3.7)
     val q2 = StreamIngest.start(spark, layout, Trigger.AvailableNow())
     q2.awaitTermination(60000)
-    assert(Distribution.subscribe(spark, layout, "clicks").count() == 2)
+    assert(Distribution.subscribeSnapshot(spark, layout, "clicks").count() == 2)
     assert(Catalog.load(spark, layout).count() == 1)
 
     // but a NEW object after restart is picked up
     write(layout.bronzeSourceDir("clicks"), "b.json", """{"click_id":3}""")
     val q3 = StreamIngest.start(spark, layout, Trigger.AvailableNow())
     q3.awaitTermination(60000)
-    assert(Distribution.subscribe(spark, layout, "clicks").count() == 3)
+    assert(Distribution.subscribeSnapshot(spark, layout, "clicks").count() == 3)
     assert(Catalog.load(spark, layout).count() == 2)
   }
 
