@@ -29,14 +29,25 @@ import org.apache.spark.sql.SparkSession
   * `catent <ts µs> <tsRaw> <source> <key>` lines in a 32-record live
   * tail of 100 objects each, 100 objects per folded commit, 8 sources,
   * bronze-shaped keys). It measures the same cold and warm reads, one
-  * narrow `rangeQuery` collect (after one untimed), the re-fold and
-  * the prune.
+  * narrow `rangeQuery` collect, the re-fold and the prune. The first
+  * `rangeQuery` of a parsed log builds its per-source `ts` index; it
+  * is timed apart, after a query that warms the session.
+  *
+  * Last, the same sizes as distribution file facts, the shape stream
+  * ingest commits: 8 sources, one file per source per commit, each a
+  * sized `D <seq> <bytes> <path>` line plus the commit's
+  * `DN <seq> <rows> <source dir>` rows line in the fold, and a
+  * 32-record tail of sized `dist` lines with `distrows` lines. It
+  * measures the cold read, heap, planning one source's subscription
+  * and answering its `count()` from the log (the files are never
+  * written: neither touches them), the re-fold and the prune.
   *
   * Run: `sbt "runMain graft.LogScaleProbe [n1,n2,...]"` (default
   * 100000,1000000). */
 object LogScaleProbe {
   def main(args: Array[String]): Unit = {
     val spark = SparkSession.builder().master("local[8]")
+      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
       .config("spark.sql.shuffle.partitions", "8")
       .config("spark.ui.enabled", "false").getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
@@ -156,16 +167,74 @@ object LogScaleProbe {
       val (_, warm) = ms(graft.lake.Catalog.versions(spark, layout))
       def oneArrival(seq: Int): Int = graft.lake.Catalog.rangeQuery(spark, layout, "s3",
         new java.sql.Timestamp(arrival(seq)), new java.sql.Timestamp(arrival(seq))).collect().length
-      oneArrival(head - 41) // the JVM's first Spark query pays the session's warm-up
+      spark.range(1).collect() // the JVM's first Spark query pays the session's warm-up
+      val (_, firstRange) = ms(oneArrival(head - 41)) // builds the index
       val (keys, range) = ms(oneArrival(head - 40))
+      // the same log read and local-relation collect, with no entry to find
+      val (_, emptyRange) = ms(graft.lake.Catalog.rangeQuery(spark, layout, "nobody",
+        new java.sql.Timestamp(arrival(head - 40)), new java.sql.Timestamp(arrival(head - 40))).collect())
       val (folded, fold) = ms(graft.lake.Catalog.checkpoint(spark, layout))
       val (pruned, prune) = ms(graft.lake.Catalog.pruneLog(spark, layout))
       val cpBytes = Files.size(Paths.get(s"${layout.catalogDir}/_log/" + f"$head%020d.checkpoint"))
       println(f"[logscale-entries] n=${head * perCommit}%d versions=$versions%d " +
         f"coldReadMs=$cold%.0f warmReadMs=$warm%.2f rangeKeys=$keys%d " +
-        f"rangeQueryMs=$range%.0f refoldMs=$fold%.0f pruneMs=$prune%.0f " +
+        f"firstRangeQueryMs=$firstRange%.0f rangeQueryMs=$range%.1f " +
+        f"emptyRangeQueryMs=$emptyRange%.1f " +
+        f"refoldMs=$fold%.0f pruneMs=$prune%.0f " +
         f"(folded=$folded pruned=$pruned) cpMb=${cpBytes / 1e6}%.1f " +
         f"heapDeltaMb=${h1 - h0}%.0f")
+    }
+
+    val sources = 8
+    def distFile(seq: Int, i: Int): String =
+      f"source=s$i%d/c$seq%020d-part-0000$i%d-$seq%08x.c000.json"
+    def buildDist(n: Int): (graft.lake.Layout, Int) = {
+      val root = Files.createTempDirectory(s"logscale-dist-$n").toString
+      val log = Paths.get(s"$root/catalog/_log")
+      Files.createDirectories(log)
+      val folded = n / sources
+      val w = Files.newBufferedWriter(log.resolve(f"$folded%020d.checkpoint"))
+      try {
+        (1 to folded).foreach { seq =>
+          (0 until sources).foreach { i =>
+            w.write(s"D $seq ${4000 + i} ${distFile(seq, i)}\n")
+            w.write(s"DN $seq 12 source=s$i\n")
+          }
+        }
+        w.write(s"#end ${folded * sources * 2}\n")
+      } finally w.close()
+      (folded + 1 to folded + 32).foreach { seq =>
+        val body = new StringBuilder(s"v2 $seq ${arrival(seq)}\ndist u$seq")
+        (0 until sources).foreach(i => body ++= s"\n${4000 + i} source=s$i/part-0000$i.c000.json")
+        (0 until sources).foreach(i => body ++= s"\ndistrows 12 source=s$i")
+        Files.write(log.resolve(f"$seq%020d.commit"), body.result().getBytes("UTF-8"))
+        Files.write(log.resolve(f"$seq%020d.done"), Array.emptyByteArray)
+      }
+      (graft.lake.Layout(root), folded + 32)
+    }
+
+    args.headOption.map(_.split(',').map(_.toInt).toSeq)
+      .getOrElse(Seq(100000, 1000000)).foreach { n =>
+      val (layout, head) = buildDist(n)
+      val h0 = heapMb()
+      val (live, cold) = ms(graft.lake.Catalog.distLiveFiles(spark, layout).size)
+      val h1 = heapMb()
+      val (df, plan) = ms {
+        val df = graft.lake.Distribution.subscribeSnapshot(spark, layout, "s3")
+        df.queryExecution.executedPlan
+        df
+      }
+      val (rows, count) = ms(df.count())
+      val (_, replan) = ms(graft.lake.Distribution.subscribeSnapshot(spark, layout, "s5")
+        .queryExecution.executedPlan)
+      val (folded, fold) = ms(graft.lake.Catalog.checkpoint(spark, layout))
+      val (pruned, prune) = ms(graft.lake.Catalog.pruneLog(spark, layout))
+      val cpBytes = Files.size(Paths.get(s"${layout.catalogDir}/_log/" + f"$head%020d.checkpoint"))
+      println(f"[logscale-dist] files=$live%d coldReadMs=$cold%.0f " +
+        f"subscribePlanMs=$plan%.0f countMs=$count%.1f rows=$rows%d " +
+        f"secondSourcePlanMs=$replan%.0f " +
+        f"refoldMs=$fold%.0f pruneMs=$prune%.0f (folded=$folded pruned=$pruned) " +
+        f"cpMb=${cpBytes / 1e6}%.1f heapDeltaMb=${h1 - h0}%.0f")
     }
     spark.stop()
   }

@@ -21,6 +21,15 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
   * connector API that reuses a driver-side commit protocol, so the
   * rule+command wiring Delta uses is the (c)-tier escape hatch; the
   * DataFrame surface plus the expressions cover everything else.)
+  *
+  * It also injects one optimizer rule,
+  * [[graft.lake.LogFileIndex.CountFromLog]] (pre-CBO, run once, pruned
+  * to plans holding an aggregate): a plain `count(*)` of a
+  * distribution subscription ([[graft.lake.Distribution.subscribeSnapshot]])
+  * becomes the row count its commits logged, a metadata-only answer
+  * with no scan and no Spark job, as Delta answers `COUNT(*)` from its
+  * add actions. A session without this extension counts the same view
+  * by scanning it, with the same answer.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
@@ -38,6 +47,11 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     // Spark's grammar lacks; a delegating parser (the DeltaSqlParser
     // pattern) adds the verb and passes everything else through
     ext.injectParser((_, delegate) => new graft.sql.GraftSqlParser(delegate))
+    // count(*) of a distribution subscription from the rows its commits
+    // logged: a one-row local relation, no scan and no Spark job
+    // (graft.lake.LogFileIndex.CountFromLog). Without this extension
+    // the same count scans the files.
+    ext.injectPreCBORule(_ => graft.lake.LogFileIndex.CountFromLog)
   }
 }
 

@@ -63,12 +63,17 @@ object Catalog {
 
   private[lake] def stagedFiles(fs: org.apache.hadoop.fs.FileSystem,
       stage: org.apache.hadoop.fs.Path, suffix: String = ".parquet"): Seq[String] =
+    stagedSizes(fs, stage, suffix).map(_._1)
+
+  /** [[stagedFiles]] with each file's byte size, from the same listing. */
+  private[lake] def stagedSizes(fs: org.apache.hadoop.fs.FileSystem,
+      stage: org.apache.hadoop.fs.Path, suffix: String): Seq[(String, Long)] =
     fs.listStatus(stage)
       .filter(s => s.isDirectory && s.getPath.getName.startsWith("source="))
       .flatMap(d => fs.listStatus(d.getPath)
         .filter(f => f.isFile && f.getPath.getName.endsWith(suffix))
-        .map(f => s"${d.getPath.getName}/${f.getPath.getName}"))
-      .toSeq.sorted
+        .map(f => (s"${d.getPath.getName}/${f.getPath.getName}", f.getLen)))
+      .toSeq.sortBy(_._1)
 
   /** A catalog row as a commit record carries it: `ts` in microseconds
     * (null when the row's is), `tsRaw`, source and key. A record holds
@@ -422,7 +427,9 @@ object Catalog {
       batchId: Long,
       claimMs: Long,
       marker: Option[String],
-      distUuid: Option[String], dist: Seq[String],
+      // published files with their byte sizes, -1 where a record written
+      // before sizes were logged gives none
+      distUuid: Option[String], dist: Seq[(String, Long)],
       removes: Seq[String],
       lakeUuid: Option[String] = None, lake: Seq[String] = Seq.empty,
       lakeRemoves: Seq[String] = Seq.empty,
@@ -457,13 +464,20 @@ object Catalog {
       // the one root file is the atomic commit point for all N tables
       txn: Option[String] = None,
       // the catalog rows of the commit, held in the record itself
-      entries: Seq[LoggedEntry] = Seq.empty)
+      entries: Seq[LoggedEntry] = Seq.empty,
+      // rows the `dist` files hold, per source directory, observed on
+      // the write that produced them
+      distRows: Seq[(String, Long)] = Seq.empty)
 
   private def v2Body(r: V2Record): String = {
     val b = new StringBuilder
     b ++= s"v2 ${r.batchId} ${r.claimMs}"
     r.marker.foreach(m => b ++= s"\nmarker $m")
-    r.distUuid.foreach { u => b ++= s"\ndist $u"; r.dist.foreach(f => b ++= s"\n$f") }
+    r.distUuid.foreach { u =>
+      b ++= s"\ndist $u"
+      r.dist.foreach { case (f, n) => b ++= (if (n < 0) s"\n$f" else s"\n$n $f") }
+    }
+    r.distRows.foreach { case (dir, n) => b ++= s"\ndistrows $n $dir" }
     if (r.removes.nonEmpty) { b ++= "\nrm"; r.removes.foreach(f => b ++= s"\n$f") }
     r.lakeUuid.foreach { u => b ++= s"\nlake $u"; r.lake.foreach(f => b ++= s"\n$f") }
     if (r.lakeRemoves.nonEmpty) { b ++= "\nlakerm"; r.lakeRemoves.foreach(f => b ++= s"\n$f") }
@@ -489,7 +503,8 @@ object Catalog {
   private def parseV2(path: org.apache.hadoop.fs.Path, lines: List[String]): V2Record = {
     val head = lines.head.split(' ')
     var marker: Option[String] = None
-    var distUuid: Option[String] = None; val dist = Seq.newBuilder[String]
+    var distUuid: Option[String] = None; val dist = Seq.newBuilder[(String, Long)]
+    val distRows = Seq.newBuilder[(String, Long)]
     var lakeUuid: Option[String] = None; val lake = Seq.newBuilder[String]
     var dvUuid: Option[String] = None; val dv = Seq.newBuilder[String]
     val removes = Seq.newBuilder[String]
@@ -519,6 +534,11 @@ object Catalog {
         val rest = l.stripPrefix("fstat ")
         val sp = rest.indexOf(' ')
         fileStats += ((rest.substring(0, sp), rest.substring(sp + 1)))
+      }
+      else if (l.startsWith("distrows ")) {
+        val a = l.split(" ", 3)
+        if (a.length != 3) unreadable(path, l)
+        distRows += ((a(2), a(1).toLong))
       }
       else if (l.startsWith("catent ")) {
         val a = l.split(" ", 5)
@@ -562,7 +582,7 @@ object Catalog {
       else if (l == "lakere") section = "lakere"
       else if (l == "dvre") section = "dvre"
       else if (l.nonEmpty) section match {
-        case "dist" => dist += l
+        case "dist" => dist += sizedPath(l)
         case "lake" => lake += l
         case "dv" => dv += l
         case "rm" => removes += l
@@ -580,8 +600,17 @@ object Catalog {
       dvUuid, dv.result(), dvRemoves.result(),
       lakeReAdds.result(), dvReAdds.result(), fileStats.result(),
       expects.result(), expectRms.result(),
-      props.result(), propRms.result(), note, txn, entries.result())
+      props.result(), propRms.result(), note, txn, entries.result(), distRows.result())
   }
+
+  /** A `<bytes> <path>` line, or a bare `<path>` (size -1) as records
+    * and checkpoints written before sizes were logged have it. A
+    * published path starts `source=`, never with a digit. */
+  private def sizedPath(l: String): (String, Long) =
+    if (l.nonEmpty && Character.isDigit(l.charAt(0))) {
+      val sp = l.indexOf(' ')
+      (l.substring(sp + 1), l.substring(0, sp).toLong)
+    } else (l, -1L)
 
   /** Read one `.commit` record. Every record starts with its
     * `v2 <batchId> <claimMs>` head; a file without one is not a record
@@ -602,7 +631,7 @@ object Catalog {
     * Safe to re-drive any number of times. */
   private def finishV2(fs: org.apache.hadoop.fs.FileSystem, layout: Layout,
       seq: Long, r: V2Record): Unit = {
-    r.distUuid.foreach(u => renameStaged(fs, layout.distributionDir, u, seq, r.dist))
+    r.distUuid.foreach(u => renameStaged(fs, layout.distributionDir, u, seq, r.dist.map(_._1)))
     r.lakeUuid.foreach(u => renameStaged(fs, layout.lakeDir, u, seq, r.lake))
     r.dvUuid.foreach(u => renameStaged(fs, layout.lakeDir, u, seq, r.dv))
     r.marker.foreach { m =>
@@ -659,14 +688,16 @@ object Catalog {
     val distUuid = java.util.UUID.randomUUID().toString
     val distStage = new org.apache.hadoop.fs.Path(s"${layout.distributionDir}/_staged/$distUuid")
     batch.select("source", "key", "json")
-      .observe(objects, collect_set(struct(col("source"), col("key"))).as("keys"))
+      .observe(objects, collect_set(struct(col("source"), col("key"))).as("keys"),
+        RowsPerSource.observed)
       .write.mode("overwrite").partitionBy("source").format("json").save(distStage.toString)
-    val distFiles = stagedFiles(fs, distStage, suffix = ".json")
+    val distFiles = stagedSizes(fs, distStage, suffix = ".json")
     // every observed record is in a staged file, so no file means no
     // key (and the observation is not waited on)
     if (distFiles.isEmpty) { fs.delete(distStage, true); return }
     val rec = V2Record(batchId, System.currentTimeMillis(), markerPath,
-      Some(distUuid), distFiles, Seq.empty, entries = arrived(objects.get("keys"), arrivalMs))
+      Some(distUuid), distFiles, Seq.empty, entries = arrived(objects.get("keys"), arrivalMs),
+      distRows = RowsPerSource.byDir(objects.get("rows")))
     val seq = claimBody(fs, layout, v2Body(rec))
     finishV2(fs, layout, seq, rec)
   }
@@ -688,34 +719,54 @@ object Catalog {
     * physical removal is deferred to [[vacuumDist]] so an in-flight
     * reader that planned against the old snapshot never loses files
     * mid-read. Used by replay publish and committed compaction.
-    * Returns the commit's version, or -1 when nothing was staged and
-    * nothing removed (no record is claimed). */
+    *
+    * The write observes its own rows per source, and the record logs
+    * them with each file's size, so a subscriber's `count(*)` is
+    * answered from the log ([[LogFileIndex.CountFromLog]]) and callers
+    * take the count from here instead of reading the batch twice.
+    * Returns the rows written; nothing staged and nothing removed
+    * claims no record. */
   def commitDist(spark: SparkSession, layout: Layout, batch: DataFrame,
       removes: Seq[String] = Seq.empty): Long = {
     val uuid = java.util.UUID.randomUUID().toString
-    batch.write.mode("overwrite").partitionBy("source").format("json")
+    val written = Observation()
+    batch.observe(written, RowsPerSource.observed)
+      .write.mode("overwrite").partitionBy("source").format("json")
       .save(s"${layout.distributionDir}/_staged/$uuid")
-    commitDistPrestaged(spark, layout, uuid, removes)
+    // every observed row is in a staged file, so no file means no row
+    // (and the observation is not waited on)
+    commitStagedDist(spark, layout, uuid, removes, () => RowsPerSource.byDir(written.get("rows")))._2
   }
 
   /** [[commitDist]] of an ALREADY-STAGED payload: raw files the caller
     * placed under `distributionDir/_staged/<uuid>/source=X/` (`.json`
-    * suffix; the stage directory must exist), plus `removes`. Used
-    * directly by [[Erase]], whose byte-preserving line rewrite cannot
-    * go through a DataFrame json write. */
+    * suffix; the stage directory must exist), plus `removes`, with the
+    * `(source directory, rows)` the staged files hold where the caller
+    * knows them. Used directly by [[Erase]], whose byte-preserving line
+    * rewrite cannot go through a DataFrame json write. Returns the
+    * commit's version, or -1 when nothing was staged and nothing
+    * removed (no record is claimed). */
   def commitDistPrestaged(spark: SparkSession, layout: Layout, uuid: String,
-      removes: Seq[String]): Long = {
+      removes: Seq[String], rows: Seq[(String, Long)] = Seq.empty): Long =
+    commitStagedDist(spark, layout, uuid, removes, () => rows)._1
+
+  /** Claim and finish the record of a staged distribution payload;
+    * `rows` is asked for only when a file was staged. Returns the
+    * commit's version (-1 when none is claimed) and the rows logged. */
+  private def commitStagedDist(spark: SparkSession, layout: Layout, uuid: String,
+      removes: Seq[String], rows: () => Seq[(String, Long)]): (Long, Long) = {
     val fs = new org.apache.hadoop.fs.Path(layout.catalogDir)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     val stage = new org.apache.hadoop.fs.Path(s"${layout.distributionDir}/_staged/$uuid")
-    val staged = stagedFiles(fs, stage, suffix = ".json")
-    if (staged.isEmpty && removes.isEmpty) { fs.delete(stage, true); return -1L }
+    val staged = stagedSizes(fs, stage, suffix = ".json")
+    if (staged.isEmpty && removes.isEmpty) { fs.delete(stage, true); return (-1L, 0L) }
+    val logged = if (staged.isEmpty) Seq.empty else rows()
     val rec = V2Record(-1L, System.currentTimeMillis(), None,
-      if (staged.nonEmpty) Some(uuid) else None, staged, removes)
+      if (staged.nonEmpty) Some(uuid) else None, staged, removes, distRows = logged)
     val seq = claimBody(fs, layout, v2Body(rec))
     finishV2(fs, layout, seq, rec)
     if (staged.isEmpty) fs.delete(stage, true)
-    seq
+    (seq, logged.map(_._2).sum)
   }
 
   /** ATOMIC batch ingest: the canonical LAKE parquet and the catalog
@@ -4132,6 +4183,7 @@ object Catalog {
     // is the only pointer to them (review catch)
     cleanAbortedLegBytes(spark, layout, state.abortedTxns)
     val distF = state.dist.filter(_._1 <= cap)
+    val dnF = state.distRows.filter(_._1 <= cap)
     val rmF = state.removes.filter(_._1 <= cap)
     val lakeF = state.lake.filter(_._1 <= cap)
     val lrmF = state.lakeRemoves.filter(_._1 <= cap)
@@ -4143,7 +4195,7 @@ object Catalog {
     val psF = state.props.filter(_._1 <= cap)
     val psrF = state.propRms.filter(_._1 <= cap)
     val ceF = state.entries.filter(_.seq <= cap)
-    val seqs = ceF.map(_.seq) ++ distF.map(_._1) ++ rmF.map(_._1) ++
+    val seqs = ceF.map(_.seq) ++ distF.map(_._1) ++ dnF.map(_._1) ++ rmF.map(_._1) ++
       lakeF.map(_._1) ++ lrmF.map(_._1) ++
       dvF.map(_._1) ++ dvrF.map(_._1) ++ fsF.map(_._1) ++
       exF.map(_._1) ++ exrF.map(_._1) ++
@@ -4168,7 +4220,9 @@ object Catalog {
     // out here would silently break time travel below the checkpoint
     val acF = state.addCols.filter(_._1 <= cap)
     val lines =
-      distF.sortBy(e => (e._1, e._2)).map { case (s, p) => s"D $s $p" } ++
+      distF.sortBy(e => (e._1, e._2)).map { case (s, p, n) =>
+        if (n < 0) s"D $s $p" else s"D $s $n $p" } ++
+      dnF.sortBy(e => (e._1, e._2)).map { case (s, dir, n) => s"DN $s $n $dir" } ++
       rmF.sortBy(e => (e._1, e._3)).map { case (s, ms, p) => s"R $s $ms $p" } ++
       lakeF.sortBy(e => (e._1, e._2)).map { case (s, p) => s"L $s $p" } ++
       lrmF.sortBy(e => (e._1, e._3)).map { case (s, ms, p) => s"LR $s $ms $p" } ++
@@ -4282,12 +4336,13 @@ object Catalog {
     } // foldLockName
   }
 
-  /** Parsed committed log state: distribution adds (seq, live path),
-    * distribution removes (seq, claimMs, live path), the lake-area
-    * equivalents, and the catalog's entries. Live paths are relative to
-    * their area root. */
+  /** Parsed committed log state: distribution adds (seq, live path,
+    * bytes or -1), the rows each commit logged per distribution source
+    * directory (seq, directory, rows), distribution removes (seq,
+    * claimMs, live path), the lake-area equivalents, and the catalog's
+    * entries. Live paths are relative to their area root. */
   private final case class LogState(
-      dist: Seq[(Long, String)],
+      dist: Seq[(Long, String, Long)],
       removes: Seq[(Long, Long, String)],
       lake: Seq[(Long, String)] = Seq.empty,
       lakeRemoves: Seq[(Long, Long, String)] = Seq.empty,
@@ -4331,9 +4386,24 @@ object Catalog {
       // for the post-commit state (same listing, different content)
       digest: String = "",
       // catalog rows the records carry, in seq order
-      entries: Seq[LoggedEntry] = Seq.empty) {
+      entries: Seq[LoggedEntry] = Seq.empty,
+      distRows: Seq[(Long, String, Long)] = Seq.empty) {
     // once per parsed state: a fold can hold millions of entries
     lazy val catVersions: Seq[Long] = entries.map(_.seq).distinct.sorted
+    lazy val distRowsOf: Map[(Long, String), Long] =
+      distRows.iterator.map { case (seq, dir, n) => ((seq, dir), n) }.toMap
+    /** Distribution adds per source directory, and the version that
+      * first removed each removed path: a subscriber plans one source
+      * without a pass over every file ([[distSourceAsOf]]). */
+    lazy val distByDir: Map[String, Seq[(Long, String, Long)]] =
+      dist.groupBy { case (_, p, _) => p.substring(0, p.indexOf('/')) }
+    lazy val distRemovedAt: Map[String, Long] =
+      removes.reverseIterator.map { case (seq, _, p) => (p, seq) }.toMap // earliest wins
+    /** Every entry with a source and a `ts`, per source, sorted by `ts`
+      * and then log order: [[rangeQuery]]'s index. */
+    lazy val entriesBySource: Map[String, Array[LoggedEntry]] =
+      entries.iterator.filter(e => e.ts != null && e.source != null).toArray
+        .groupBy(_.source).map { case (src, es) => src -> es.sortBy(_.ts.longValue) }
   }
 
   /** `_log/_last_checkpoint` — the Delta-style POINTER HINT bounding
@@ -4618,7 +4688,8 @@ object Catalog {
       case None => (0L, List.empty[String])
     }
     maxSeq = cpSeq
-    val dist = Seq.newBuilder[(Long, String)]
+    val dist = Seq.newBuilder[(Long, String, Long)]
+    val distRows = Seq.newBuilder[(Long, String, Long)]
     val removes = Seq.newBuilder[(Long, Long, String)]
     val lake = Seq.newBuilder[(Long, String)]
     val lakeRemoves = Seq.newBuilder[(Long, Long, String)]
@@ -4664,7 +4735,11 @@ object Catalog {
       } else if (l.startsWith("DV ")) {
         val a = l.split(' '); dv += ((a(1).toLong, a(2)))
       } else if (l.startsWith("D ")) {
-        val a = l.split(' '); dist += ((a(1).toLong, a(2)))
+        val a = l.split(" ", 3)
+        val (p, n) = sizedPath(a(2))
+        dist += ((a(1).toLong, p, n))
+      } else if (l.startsWith("DN ")) {
+        val a = l.split(" ", 4); distRows += ((a(1).toLong, a(3), a(2).toLong))
       } else if (l.startsWith("R ")) {
         val a = l.split(' '); removes += ((a(1).toLong, a(2).toLong, a(3)))
       } else if (l.startsWith("L ")) {
@@ -4703,7 +4778,8 @@ object Catalog {
         if (txnGate.contains("abort"))
           abortedTxns += ((seq, r.txn.get))
         if (txnGate.forall(_ == "commit")) {
-          r.dist.foreach(rel => dist += ((seq, live(rel))))
+          r.dist.foreach { case (rel, n) => dist += ((seq, live(rel), n)) }
+          r.distRows.foreach { case (dir, n) => distRows += ((seq, dir, n)) }
           r.removes.foreach(p => removes += ((seq, r.claimMs, p)))
           r.lake.foreach(rel => lake += ((seq, live(rel))))
           r.lakeRemoves.foreach(p => lakeRemoves += ((seq, r.claimMs, p)))
@@ -4734,7 +4810,7 @@ object Catalog {
       pendingTxns = pendingTxns.result(),
       txnIds = txnSeen.keys.toSeq.sorted,
       abortedTxns = abortedTxns.result(), maxSeq = maxSeq,
-      entries = entries.result()),
+      entries = entries.result(), distRows = distRows.result()),
       txnSeen.toMap)
   }
 
@@ -4755,10 +4831,37 @@ object Catalog {
     * the Delta VACUUM retention trade, stated rather than hidden. */
   def distFilesAsOf(spark: SparkSession, layout: Layout, version: Long): Seq[String] = {
     val state = readLog(spark, layout)
-    val removed = state.removes.collect { case (seq, _, p) if seq <= version => p }.toSet
     state.dist.collect {
-      case (seq, p) if seq <= version && !removed.contains(p) => p
+      case (seq, p, _) if seq <= version && !state.distRemovedAt.get(p).exists(_ <= version) => p
     }.sorted
+  }
+
+  /** One source's committed distribution files as of `version`, each
+    * with its byte size (-1 when its record predates logged sizes),
+    * and the rows they hold when the log knows them. A file belongs to
+    * `source` when its directory's unescaped partition value is
+    * `source` ([[LogFileIndex.sourceOf]]). The rows are known when
+    * every live file belongs to a (commit, source directory) group
+    * that logged a count, and every file of that group is still live
+    * — so a compaction or erase that removed part of a group makes
+    * its count unknown rather than wrong. */
+  private[lake] def distSourceAsOf(spark: SparkSession, layout: Layout, source: String,
+      version: Long): (Seq[(String, Long)], Option[Long]) = {
+    val state = readLog(spark, layout)
+    // null and "" both live in Hive's default partition, whose value is None
+    val want = Option(source).filter(_.nonEmpty)
+    // (seq, directory, path, bytes) of every add of the source up to `version`
+    val adds = state.distByDir.toSeq.collect {
+      case (dir, files) if LogFileIndex.sourceOf(dir) == want =>
+        files.collect { case (seq, p, n) if seq <= version => (seq, dir, p, n) }
+    }.flatten
+    val (live, gone) = adds.partition(a => !state.distRemovedAt.get(a._3).exists(_ <= version))
+    val groups = live.map(a => (a._1, a._2)).distinct
+    val broken = gone.iterator.map(a => (a._1, a._2)).toSet
+    val rows =
+      if (groups.exists(broken)) None
+      else groups.foldLeft(Option(0L))((acc, g) => acc.flatMap(n => state.distRowsOf.get(g).map(n + _)))
+    (live.map(a => (a._3, a._4)).sortBy(_._1), rows)
   }
 
   /** Relative paths of distribution files REMOVED from the committed
@@ -4807,18 +4910,30 @@ object Catalog {
     entryFrame(spark, readLog(spark, layout).entries.filter(_.seq <= version))
 
   /** O11: `Source = s AND ts BETWEEN t0 AND t1` (inclusive), planned
-    * from one log read: the committed entries are filtered on the
+    * from one log read: the committed entries are looked up on the
     * driver, in microseconds (the unit of the stored `ts`), and served
     * as a local relation — no file, no Spark job, no generated code per
-    * range. A null bound, source or `ts` matches nothing, as the SQL
-    * predicate does. */
+    * range. The lookup is two binary searches in the source's
+    * `ts`-sorted entries ([[LogState.entriesBySource]], built once per
+    * parsed log), so a call costs O(log n + k) for k rows, which come
+    * in `ts` order and then log order. A null bound, source or `ts`
+    * matches nothing, as the SQL predicate does. */
   def rangeQuery(spark: SparkSession, layout: Layout, source: String,
       t0: java.sql.Timestamp, t1: java.sql.Timestamp): DataFrame = {
     val range = for (a <- Option(t0); b <- Option(t1) if source != null)
       yield (DateTimeUtils.fromJavaTimestamp(a), DateTimeUtils.fromJavaTimestamp(b))
     entryFrame(spark, range.toSeq.flatMap { case (r0, r1) =>
-      readLog(spark, layout).entries.filter(e =>
-        e.ts != null && e.source == source && r0 <= e.ts && e.ts <= r1)
+      val es = readLog(spark, layout).entriesBySource.getOrElse(source, Array.empty[LoggedEntry])
+      // the first index whose ts satisfies `p`, which holds on a suffix
+      def first(p: Long => Boolean): Int = {
+        var (lo, hi) = (0, es.length)
+        while (lo < hi) {
+          val mid = (lo + hi) >>> 1
+          if (p(es(mid).ts.longValue)) hi = mid else lo = mid + 1
+        }
+        lo
+      }
+      scala.collection.immutable.ArraySeq.unsafeWrapArray(es.slice(first(_ >= r0), first(_ > r1)))
     })
   }
 }

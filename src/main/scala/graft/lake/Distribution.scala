@@ -1,6 +1,9 @@
 package graft.lake
 
+import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.json.JsonFileFormat
+import org.apache.spark.sql.types.StructType
 
 /** Per-source fan-out — the engine form of the reference's SNS
   * topic-per-source publish (O8–O10,
@@ -12,9 +15,10 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * published by a log commit — [[Catalog.commitIngest]] (stream
   * ingest), [[Catalog.commitDist]] ([[Replay.replayCommitted]],
   * [[Compaction.compactSourceCommitted]]) or
-  * [[Catalog.commitDistPrestaged]] (the erase rewrite) — and every
-  * pull read takes its file set from the log ([[subscribeSnapshot]],
-  * [[subscribeAsOf]]), never from a directory listing (Delta Lake,
+  * [[Catalog.commitDistPrestaged]] (the erase rewrite), each logging
+  * its files' sizes and its rows per source — and every pull read
+  * plans from the log ([[subscribeSnapshot]], [[subscribeAsOf]]),
+  * never from a directory listing, and counts from it (Delta Lake,
   * VLDB 2020 §3). Two readers still list the source's directory:
   * [[pushSubscribe]], a file stream, and the erase rewrite, which must
   * reach every physical copy of a subject's records.
@@ -32,15 +36,15 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   */
 object Distribution {
 
-  /** O10: topic-ARN equivalent for a source. */
+  /** O10: topic-ARN equivalent for a source: its escaped
+    * `source=<v>` directory ([[Layout.sourceDir]]). */
   def topicPath(layout: Layout, source: String): String =
-    s"${layout.distributionDir}/source=$source"
+    s"${layout.distributionDir}/${Layout.sourceDir(source)}"
 
   /** SNAPSHOT-ISOLATED subscriber view (the reference's
     * `src/test_subscriber/lambda_function.py:8-9`): the file set comes
-    * from the lake manifest log ([[Catalog.distLiveFiles]]): every
-    * committed add minus every committed remove, resolved atomically
-    * at plan time. A compaction
+    * from the lake manifest log: every committed add minus every
+    * committed remove, resolved atomically at plan time. A compaction
     * ([[Compaction.compactSourceCommitted]]) or replay running
     * CONCURRENTLY with this read cannot change the returned rows —
     * the reader sees either the pre- or post-compaction file set,
@@ -48,38 +52,57 @@ object Distribution {
     * [[Catalog.vacuumDist]] so even an in-flight read of the old
     * snapshot completes.
     *
-    * Scale: the log read is O(commits-since-checkpoint) tiny driver
-    * records (the Delta replay bound); the data read is a normal
-    * parquet-style pruned scan over exactly the live files. */
+    * Planning reads only the log: the files, their sizes and their
+    * `source` values come from its records through a [[LogFileIndex]],
+    * so it lists no `distribution/` directory, makes no status call
+    * (one per file of a record written before sizes were logged) and
+    * starts no Spark job. The data read is a JSON scan of exactly the
+    * source's live files.
+    *
+    * `count()` of the view, in a session with
+    * [[graft.functions.GraftExtensions]], is answered on the driver
+    * from the rows each commit logged ([[LogFileIndex.CountFromLog]]):
+    * no file is opened and no Spark job runs. Where the log does not
+    * know the rows (a record written before rows were logged, or a
+    * commit group that is only partly live) or the session lacks the
+    * extension, the count scans. Like Delta's metadata-only count, the
+    * answer is the snapshot's: a live file deleted behind the log's
+    * back still counts, while `collect()` fails on it and `lake_fsck`'s
+    * `dist_files_exist` reports it. */
   def subscribeSnapshot(spark: SparkSession, layout: Layout, source: String): DataFrame =
     subscribeAsOf(spark, layout, source, Long.MaxValue)
 
   /** [[subscribeSnapshot]] at an historical commit version — the
-    * distribution-side `VERSION AS OF` ([[Catalog.distFilesAsOf]]).
-    * Physical reach is bounded by [[Catalog.vacuumDist]]'s grace. */
+    * distribution-side `VERSION AS OF`, planned and counted the same
+    * way from the records at or below `version`. Physical reach is
+    * bounded by [[Catalog.vacuumDist]]'s grace. */
   def subscribeAsOf(spark: SparkSession, layout: Layout, source: String,
       version: Long): DataFrame = {
-    val live = Catalog.distFilesAsOf(spark, layout, version)
-      .filter(_.startsWith(s"source=$source/"))
-    if (live.isEmpty) {
-      import spark.implicits._
-      return Seq.empty[(String, String, String)].toDF("json", "key", "source")
-    }
-    read(spark, layout, live.map(rel => s"${layout.distributionDir}/$rel"): _*)
+    val (files, rows) = Catalog.distSourceAsOf(spark, layout, source, version)
+    read(spark, layout, files, rows)
   }
 
   /** The record schema of a distribution file, in the column order an
     * inferred read gives. */
-  private[lake] val recordSchema = "json STRING, key STRING"
+  private[lake] val recordSchema = StructType.fromDDL("json STRING, key STRING")
 
-  /** Distribution files under `paths`, read with [[recordSchema]] plus
-    * the discovered `source` partition column — the
-    * `(json, key, source)` of an inferred read, without the inference
-    * job that would read every file before the caller's own action. */
-  private[lake] def read(spark: SparkSession, layout: Layout, paths: String*): DataFrame =
-    spark.read.option("basePath", layout.distributionDir)
-      .schema(recordSchema).format("json")
-      .load(paths: _*)
+  /** Distribution files (paths relative to the area, with their byte
+    * sizes, -1 where unknown) read with [[recordSchema]] plus the
+    * `source` partition column — the `(json, key, source)` of an
+    * inferred read — through a [[LogFileIndex]] that knows `rows`. A
+    * file of unknown size costs one status call; no file gives an
+    * empty frame with the same columns. */
+  private[lake] def read(spark: SparkSession, layout: Layout, files: Seq[(String, Long)],
+      rows: Option[Long]): DataFrame = {
+    val root = new Path(layout.distributionDir)
+    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val qualified = fs.makeQualified(root)
+    LogFileIndex.read(spark, qualified, new JsonFileFormat, recordSchema, files.map {
+      case (rel, bytes) =>
+        val path = new Path(qualified, rel)
+        if (bytes < 0) fs.getFileStatus(path) else new FileStatus(bytes, false, 1, 0L, 0L, path)
+    }, rows)
+  }
 
   /** PUSH-based subscriber delivery — the SNS→Lambda push analogue
     * (the reference's `serverless_datalake_stack.py:233-265`, handler

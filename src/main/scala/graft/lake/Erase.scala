@@ -261,10 +261,9 @@ object Erase {
     val (lakeDropped, distDropped) =
       SourceLock.withLock(spark, layout, source, waitMs = 10 * 60 * 1000L) {
         val lk = eraseLake(spark, layout, source, matches)
+        val distDir = new Path(Distribution.topicPath(layout, source))
         val dist =
-          if (new Path(s"${layout.distributionDir}/source=$source")
-              .getFileSystem(spark.sparkContext.hadoopConfiguration)
-              .exists(new Path(s"${layout.distributionDir}/source=$source")))
+          if (distDir.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(distDir))
             eraseDistribution(spark, layout, source, matches)
           else 0L
         (lk, dist)
@@ -422,8 +421,8 @@ object Erase {
     * compacted file. Returns records dropped. */
   private def eraseDistribution(spark: SparkSession, layout: Layout, source: String,
       matches: String => Boolean): Long = {
-    val dirStr = s"${layout.distributionDir}/source=$source"
-    val dir = new Path(dirStr)
+    val part = Layout.sourceDir(source)
+    val dir = new Path(s"${layout.distributionDir}/$part")
     val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
     // snapshot the physical file list: the content read, the log
     // removes, and the deletion all operate on exactly this set.
@@ -437,7 +436,7 @@ object Erase {
       .filter(st => st.isFile && !st.getPath.getName.startsWith("_") &&
         !st.getPath.getName.startsWith("."))
       .map(_.getPath)
-      .partition(p => removed.contains(s"source=$source/${p.getName}"))
+      .partition(p => removed.contains(s"$part/${p.getName}"))
     dead.foreach(p => fs.delete(p, false)) // finish the interrupted delete
     if (oldFiles.isEmpty) return 0L
     val lineMatches = new DistLineMatches(matches)
@@ -450,7 +449,7 @@ object Erase {
     // stage kept lines byte-identically as source=X/*.json
     val uuid = java.util.UUID.randomUUID().toString
     val stageTmp = new Path(s"${layout.distributionDir}/_staged/$uuid-txt")
-    val stagePart = new Path(s"${layout.distributionDir}/_staged/$uuid/source=$source")
+    val stagePart = new Path(s"${layout.distributionDir}/_staged/$uuid/$part")
     keptDf.write.mode("overwrite").text(stageTmp.toString)
     fs.mkdirs(stagePart)
     fs.listStatus(stageTmp)
@@ -461,8 +460,9 @@ object Erase {
           throw new java.io.IOException(s"erase: cannot stage ${st.getPath}")
       }
     fs.delete(stageTmp, true)
-    val removes = oldFiles.map(p => s"source=$source/${p.getName}").toSeq
-    Catalog.commitDistPrestaged(spark, layout, uuid, removes)
+    val removes = oldFiles.map(p => s"$part/${p.getName}").toSeq
+    // the kept count is the rewrite's rows: a subscriber counts from the log
+    Catalog.commitDistPrestaged(spark, layout, uuid, removes, rows = Seq(part -> keptCount))
     // erasure deletes NOW (no vacuum grace): the subject's bytes must go
     oldFiles.foreach(p => fs.delete(p, false))
     total - keptCount
@@ -480,7 +480,8 @@ object Erase {
   private def eraseLake(spark: SparkSession, layout: Layout, source: String,
       matches: String => Boolean): Long = {
     import spark.implicits._
-    val dirStr = s"${layout.lakeDir}/source=$source"
+    val part = Layout.sourceDir(source)
+    val dirStr = s"${layout.lakeDir}/$part"
     val dir = new Path(dirStr)
     val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(dir)) return 0L
@@ -491,7 +492,7 @@ object Erase {
       .filter(st => st.isFile && !st.getPath.getName.startsWith("_") &&
         !st.getPath.getName.startsWith("."))
       .map(_.getPath)
-      .partition(p => removed.contains(s"source=$source/${p.getName}"))
+      .partition(p => removed.contains(s"$part/${p.getName}"))
     dead.foreach(p => fs.delete(p, false))
     if (oldFiles.isEmpty) return 0L
     // read through committed deletion vectors: this rewrite copies
@@ -504,7 +505,7 @@ object Erase {
     // post-WIDENING files cannot go through plain mergeSchema at all —
     // the epoch-merged explicit-schema read covers both, and the
     // rewrite lands wide
-    val rels = oldFiles.map(p => s"source=$source/${p.getName}").toIndexedSeq
+    val rels = oldFiles.map(p => s"$part/${p.getName}").toIndexedSeq
     // name map: the rewrite lands in the new name epoch, so the staged
     // files must carry the column names in force NOW
     val df = Catalog.applyNameMap(spark, layout,
@@ -520,7 +521,7 @@ object Erase {
       !matches(r.getAs[String]("json")))
     val keptCount = keptDf.count()
     if (keptCount == total) return 0L
-    val removes = oldFiles.map(p => s"source=$source/${p.getName}").toSeq
+    val removes = oldFiles.map(p => s"$part/${p.getName}").toSeq
     // note = "erase": the ONE rewrite kind the change feed cannot make
     // view-preserving — incremental consumers detect it via
     // [[Catalog.commitNotes]] and rebuild instead of refreshing across

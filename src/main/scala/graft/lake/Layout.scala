@@ -27,6 +27,19 @@ final case class Layout(root: String) {
   def bronzeSourceDir(source: String): String = s"$bronzeDir/$source"
 }
 
+object Layout {
+
+  /** The directory, relative to its area, that a `partitionBy("source")`
+    * write puts `source`'s files in: `source=<v>`, with `v` escaped the
+    * way Spark escapes partition values (`a:b` is `source=a%3Ab`; null
+    * and the empty string go to Hive's default partition). Every
+    * reader, lock and rewrite that names a source's directory builds
+    * it here. */
+  def sourceDir(source: String): String =
+    org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
+      .getPartitionPathString("source", source)
+}
+
 /** Thrown when a [[SourceLock]] acquisition times out because another
   * maintenance job holds the mutex — the BENIGN contention outcome.
   * A typed class (not an error-message substring) so best-effort
@@ -99,7 +112,9 @@ private[lake] object SourceLock {
       waitMs: Long = 0L)(body: => T): T = {
     val lockDir = new Path(s"${layout.catalogDir}/_log")
     fs.mkdirs(lockDir)
-    val lock = new Path(lockDir, s"_compact-$source.lock")
+    // the source escaped like its directory: a raw `a:b` is no file name
+    val name = Layout.sourceDir(source).stripPrefix("source=")
+    val lock = new Path(lockDir, s"_compact-$name.lock")
     def atomicCreate(p: Path): Boolean =
       // seam dispatch (local hard-link / HDFS create / registered
       // committer / LOUD UnsupportedOperationException — propagated).
@@ -112,7 +127,7 @@ private[lake] object SourceLock {
       try Some(fs.getFileStatus(p).getModificationTime)
       catch { case _: java.io.IOException => None }
     def trySteal(staleMtime: Long): Unit = {
-      val marker = new Path(lockDir, s"_compact-$source.steal-$staleMtime")
+      val marker = new Path(lockDir, s"_compact-$name.steal-$staleMtime")
       if (atomicCreate(marker)) {
         try {
           // delete ONLY the incarnation the marker names: a fresh lock
@@ -175,20 +190,21 @@ object Compaction {
     * inputs would otherwise both commit adds for the same content —
     * doubled records); concurrent PUBLISHES need no lock: a file
     * committed between this compaction's snapshot read and its commit
-    * is simply not in the remove set and stays live. Returns records
+    * is simply not in the remove set and stays live.
+    *
+    * One read of the inputs: the live files are planned from the log
+    * ([[Distribution.read]]; no listing), and the returned count is
+    * the one the write observes ([[Catalog.commitDist]]), which the
+    * record also logs as the new file's rows, so a subscriber's
+    * `count(*)` stays a log lookup after compaction. Returns records
     * compacted (0 when already at or under `targetFiles`). */
   def compactSourceCommitted(spark: SparkSession, layout: Layout, source: String,
       targetFiles: Int = 1, lockTtlMs: Long = 10 * 60 * 1000L): Long =
     SourceLock.withLock(spark, layout, source, lockTtlMs) {
-      val live = Catalog.distLiveFiles(spark, layout)
-        .filter(_.startsWith(s"source=$source/"))
+      val (live, _) = Catalog.distSourceAsOf(spark, layout, source, Long.MaxValue)
       if (live.size <= targetFiles) 0L
-      else {
-        val df = Distribution.read(spark, layout,
-          live.map(rel => s"${layout.distributionDir}/$rel"): _*)
-        val n = df.count()
-        Catalog.commitDist(spark, layout, df.coalesce(targetFiles), removes = live)
-        n
-      }
+      else Catalog.commitDist(spark, layout,
+        Distribution.read(spark, layout, live, rows = None).coalesce(targetFiles),
+        removes = live.map(_._1))
     }
 }

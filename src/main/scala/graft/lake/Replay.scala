@@ -1,6 +1,6 @@
 package graft.lake
 
-import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Time-range replay — the engine form of the reference's
@@ -35,8 +35,11 @@ import org.apache.spark.sql.functions._
   *    An empty range returns 0 here, claiming nothing;
   *  - ONE read of the matched bronze objects, by the publish itself —
   *    the call's one Spark job, committed as one manifest-log record;
-  *  - the returned count is observed on that publish write (an
-  *    `Observation`), not counted by a second read.
+  *  - the returned count is observed on that publish write
+  *    ([[Catalog.commitDist]]'s one observation), not counted by a
+  *    second read; the record logs it per source, so a subscriber's
+  *    `count(*)` over the replayed rows is answered from the log
+  *    (in a session with [[graft.functions.GraftExtensions]]).
   */
 object Replay {
 
@@ -71,15 +74,10 @@ object Replay {
         all.join(matched.withColumnRenamed("key", "mkey"),
             col("key") === col("mkey"), "left_semi")
       }
-    // one bronze read: the publish counts its own rows as it writes
-    val published = Observation()
-    val out = records.select(col("source"), col("key"), col("json"))
-      .observe(published, count(lit(1)).as("n"))
-    Catalog.commitDist(spark, layout, out)
+    // one bronze read: the publish counts its own rows as it writes,
+    // and logs them, so a subscriber counts the replayed rows from the log.
     // NOTE deliberately no Catalog.append here (§2.3 item 2).
-    // Reached only after the write returned: `get` blocks until the
-    // write's metrics arrive, and a failed write never sends them.
-    published.get("n").asInstanceOf[Long]
+    Catalog.commitDist(spark, layout, records.select(col("source"), col("key"), col("json")))
   }
 
   /** Re-read whole objects by key (replay unit = object). */

@@ -17,7 +17,8 @@ import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
   *    source) back to a `DataFrame`, so the engine's one commit path
   *    ([[graft.lake.Merge]]) executes the user's source query as a
   *    plain frame; it also turns the catalog's logged entries (a
-  *    local relation) into a frame;
+  *    local relation) and the distribution's log-backed relation
+  *    ([[graft.lake.LogFileIndex]]) into frames;
   *  - [[column]] — a resolved catalyst `Expression` (a merge
   *    condition / assignment, rewritten to alias-qualified form) as a
   *    `Column`, so clause evaluation composes with the public

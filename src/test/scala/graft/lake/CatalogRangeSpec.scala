@@ -21,7 +21,8 @@ class CatalogRangeSpec extends SparkTestBase {
   private def entries(rows: Seq[(String, Timestamp, String)]) = {
     val s = spark
     import s.implicits._
-    rows.map { case (src, ts, key) => CatalogEntry(src, ts, ts.getTime.toString, key) }.toDS()
+    rows.map { case (src, ts, key) =>
+      CatalogEntry(src, ts, Option(ts).map(_.getTime.toString).orNull, key) }.toDS()
   }
 
   private def ofMicros(us: Long): Timestamp = {
@@ -133,6 +134,42 @@ class CatalogRangeSpec extends SparkTestBase {
     }
     assert(rows(Catalog.load(spark, layout)) ==
       committed.toSeq.map { case (s, ts, key) => s"$ts|${ts.getTime}|$key|$s" }.sorted)
+  }
+
+  test("rangeQuery's per-source index equals the linear filter, order included") {
+    val layout = Layout(tmpDir("range-index"))
+    val rng = new scala.util.Random(29)
+    val sources = Seq("clicks", "logs", "a b", null)
+    // few distinct instants, so many entries tie on `ts`
+    val instants = (0 until 12).map(i => at(t0Ms + i * 7L, rng.nextInt(3)))
+    def anyTs(): Timestamp = if (rng.nextInt(10) == 0) null else instants(rng.nextInt(instants.size))
+    (0 until 5).foreach { c =>
+      Catalog.append(spark, layout, entries((0 until 40).map(i =>
+        (sources(rng.nextInt(sources.size)), anyTs(), s"k$c-$i"))))
+      // a fold between commits: the index spans checkpoint and tail
+      if (c == 2) assert(Catalog.checkpoint(spark, layout).isDefined)
+    }
+    // the oracle: every committed entry in log order, filtered
+    // linearly, then stably ordered by `ts`
+    val all = Catalog.load(spark, layout).select("ts", "tsRaw", "key", "source").collect().toSeq
+    def linear(src: String, lo: Timestamp, hi: Timestamp): Seq[String] =
+      if (src == null || lo == null || hi == null) Seq.empty
+      else all.filter { r =>
+        val ts = r.getAs[Timestamp]("ts")
+        ts != null && r.getAs[String]("source") == src &&
+          microsOf(lo) <= microsOf(ts) && microsOf(ts) <= microsOf(hi)
+      }.sortBy(r => microsOf(r.getAs[Timestamp]("ts"))).map(_.mkString("|"))
+    def endpoint(): Timestamp = rng.nextInt(5) match {
+      case 0 => null
+      case 1 => ofMicros(microsOf(instants(rng.nextInt(instants.size))) + rng.nextInt(3) - 1)
+      case _ => instants(rng.nextInt(instants.size)) // exactly on an edge: inclusive
+    }
+    (0 until 200).foreach { _ =>
+      val (lo, hi, src) = (endpoint(), endpoint(), sources(rng.nextInt(sources.size)))
+      val got = Catalog.rangeQuery(spark, layout, src, lo, hi)
+        .select("ts", "tsRaw", "key", "source").collect().toSeq.map(_.mkString("|"))
+      assert(got == linear(src, lo, hi), s"$src [$lo, $hi]")
+    }
   }
 
   test("an empty range and a 40-entry catalog read start no Spark job") {

@@ -12,7 +12,9 @@ import org.apache.hadoop.fs.{FSDataInputStream, FileStatus, Path, RawLocalFileSy
   * whose entry count grows with retained history. Registered via
   * `fs.countfs.impl` in the Hadoop conf; being non-`file`-schemed it
   * exercises exactly the [[Catalog]] probe path an s3a deployment
-  * would. */
+  * would. It also records the path of every top-level list, status
+  * and open request, so a spec can check which data directories and
+  * files a read touched. */
 class CountingLocalFs extends RawLocalFileSystem {
   override def getScheme: String = "countfs"
   override def getUri: URI = URI.create("countfs:///")
@@ -30,6 +32,7 @@ class CountingLocalFs extends RawLocalFileSystem {
 
   override def listStatus(p: Path): Array[FileStatus] = {
     val r = topLevel(super.listStatus(p))
+    if (!nested.get()) CountingLocalFs.listed.add(p.toUri.getPath)
     if (p.toString.endsWith("/_log") && !nested.get()) {
       CountingLocalFs.logLists.incrementAndGet()
       CountingLocalFs.logListedEntries.addAndGet(r.length)
@@ -38,12 +41,14 @@ class CountingLocalFs extends RawLocalFileSystem {
   }
 
   override def getFileStatus(p: Path): FileStatus = {
+    if (!nested.get()) CountingLocalFs.statted.add(p.toUri.getPath)
     if (p.toString.contains("/_log/") && !nested.get())
       CountingLocalFs.logStats.incrementAndGet()
     topLevel(super.getFileStatus(p))
   }
 
   override def open(p: Path, bufferSize: Int): FSDataInputStream = {
+    if (!nested.get()) CountingLocalFs.opened.add(p.toUri.getPath)
     if (p.toString.contains("/_log/") && !nested.get())
       CountingLocalFs.logOpens.incrementAndGet()
     topLevel(super.open(p, bufferSize))
@@ -55,7 +60,9 @@ object CountingLocalFs {
   val logListedEntries = new java.util.concurrent.atomic.AtomicLong(0L)
   val logStats = new java.util.concurrent.atomic.AtomicInteger(0)
   val logOpens = new java.util.concurrent.atomic.AtomicInteger(0)
+  val listed, statted, opened = new java.util.concurrent.ConcurrentLinkedQueue[String]()
   def reset(): Unit = {
     logLists.set(0); logListedEntries.set(0); logStats.set(0); logOpens.set(0)
+    listed.clear(); statted.clear(); opened.clear()
   }
 }
