@@ -40,7 +40,9 @@ import org.apache.spark.sql.SparkSession
   * 32-record tail of sized `dist` lines with `distrows` lines. It
   * measures the cold read, heap, planning one source's subscription
   * and answering its `count()` from the log (the files are never
-  * written: neither touches them), the re-fold and the prune.
+  * written: neither touches them), planning a second source's and
+  * then that subscription again at the same head, the re-fold and the
+  * prune.
   *
   * Run: `sbt "runMain graft.LogScaleProbe [n1,n2,...]"` (default
   * 100000,1000000). */
@@ -227,12 +229,14 @@ object LogScaleProbe {
       val (rows, count) = ms(df.count())
       val (_, replan) = ms(graft.lake.Distribution.subscribeSnapshot(spark, layout, "s5")
         .queryExecution.executedPlan)
+      val (_, repeat) = ms(graft.lake.Distribution.subscribeSnapshot(spark, layout, "s5")
+        .queryExecution.executedPlan)
       val (folded, fold) = ms(graft.lake.Catalog.checkpoint(spark, layout))
       val (pruned, prune) = ms(graft.lake.Catalog.pruneLog(spark, layout))
       val cpBytes = Files.size(Paths.get(s"${layout.catalogDir}/_log/" + f"$head%020d.checkpoint"))
       println(f"[logscale-dist] files=$live%d coldReadMs=$cold%.0f " +
         f"subscribePlanMs=$plan%.0f countMs=$count%.1f rows=$rows%d " +
-        f"secondSourcePlanMs=$replan%.0f " +
+        f"secondSourcePlanMs=$replan%.0f repeatPlanMs=$repeat%.0f " +
         f"refoldMs=$fold%.0f pruneMs=$prune%.0f (folded=$folded pruned=$pruned) " +
         f"cpMb=${cpBytes / 1e6}%.1f heapDeltaMb=${h1 - h0}%.0f")
     }

@@ -465,8 +465,8 @@ object Catalog {
       txn: Option[String] = None,
       // the catalog rows of the commit, held in the record itself
       entries: Seq[LoggedEntry] = Seq.empty,
-      // rows the `dist` files hold, per source directory, observed on
-      // the write that produced them
+      // rows the `dist` files hold, per source directory, as the write
+      // that produced them reported them
       distRows: Seq[(String, Long)] = Seq.empty)
 
   private def v2Body(r: V2Record): String = {
@@ -664,17 +664,18 @@ object Catalog {
     * record-then-publish pair (ref `lambda_function.py:46-65`), which
     * is at-least-once on both legs.
     *
-    * Cost: ONE pass over `batch`, no shuffle, and no catalog file. The
-    * catalog entries come from the write that produced the
-    * distribution files (the Delta Lake rule: a commit's file metadata
-    * comes from its own write, not a second read) — an `Observation`
-    * collects the set of `(source, key)` pairs on that write (a set,
-    * so a retried task cannot list an object twice), and the record
-    * carries one entry line per object at `arrivalMs`
-    * ([[LoggedEntry]]), like a Delta add action carries its file's
-    * stats. Every catalog reader folds them from the log ([[load]], [[loadAsOf]], [[rangeQuery]],
-    * [[versions]], [[checkpoint]]), so the micro-batch runs one Spark
-    * job and a range read over its entries runs none.
+    * Cost: ONE pass over `batch` in one Spark job ([[DistWrite]]), no
+    * shuffle, and no catalog file. The job's tasks write the
+    * distribution files and return them with their sizes, their rows
+    * per source and the distinct `(source, key)` pairs they wrote (the
+    * Delta Lake rule: a commit's file metadata comes from its own
+    * write, not a second read). The record carries one entry line per
+    * object at `arrivalMs` ([[LoggedEntry]]), like a Delta add action
+    * carries its file's stats. Every catalog reader folds them from
+    * the log ([[load]], [[loadAsOf]], [[rangeQuery]], [[versions]],
+    * [[checkpoint]]), so a range read over them runs no job. The
+    * stage is neither listed nor observed, and no output committer
+    * runs.
     *
     * Scale bound: the record holds one line per object in the batch —
     * the same order as the file list the stream's file source already
@@ -682,33 +683,26 @@ object Catalog {
     * claims nothing. */
   def commitIngest(spark: SparkSession, layout: Layout, batch: DataFrame,
       arrivalMs: Long, batchId: Long, markerPath: Option[String]): Unit = {
-    val fs = new org.apache.hadoop.fs.Path(layout.catalogDir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val objects = Observation()
     val distUuid = java.util.UUID.randomUUID().toString
-    val distStage = new org.apache.hadoop.fs.Path(s"${layout.distributionDir}/_staged/$distUuid")
-    batch.select("source", "key", "json")
-      .observe(objects, collect_set(struct(col("source"), col("key"))).as("keys"),
-        RowsPerSource.observed)
-      .write.mode("overwrite").partitionBy("source").format("json").save(distStage.toString)
-    val distFiles = stagedSizes(fs, distStage, suffix = ".json")
-    // every observed record is in a staged file, so no file means no
-    // key (and the observation is not waited on)
-    if (distFiles.isEmpty) { fs.delete(distStage, true); return }
+    val staged = DistWrite(batch.select("source", "key", "json"),
+      new org.apache.hadoop.fs.Path(s"${layout.distributionDir}/_staged/$distUuid"),
+      distUuid, keys = true)
+    // a task opens a file only for a row, so no file means no row and no stage
+    if (staged.files.isEmpty) return
+    val fs = distFs(spark, layout)
     val rec = V2Record(batchId, System.currentTimeMillis(), markerPath,
-      Some(distUuid), distFiles, Seq.empty, entries = arrived(objects.get("keys"), arrivalMs),
-      distRows = RowsPerSource.byDir(objects.get("rows")))
+      Some(distUuid), staged.files, Seq.empty, entries = arrived(staged.keys, arrivalMs),
+      distRows = staged.rows)
     val seq = claimBody(fs, layout, v2Body(rec))
     finishV2(fs, layout, seq, rec)
   }
 
-  /** One entry per observed `(source, key)` pair, all at `arrivalMs`,
-    * sorted so the record is deterministic. */
-  private def arrived(keys: Any, arrivalMs: Long): Seq[LoggedEntry] = {
+  /** One entry per `(source, key)` pair, all at `arrivalMs`, sorted so
+    * the record is deterministic. */
+  private def arrived(keys: Iterable[(String, String)], arrivalMs: Long): Seq[LoggedEntry] = {
     val ts = java.lang.Long.valueOf(Math.multiplyExact(arrivalMs, 1000L))
     val tsRaw = arrivalMs.toString
-    keys.asInstanceOf[Seq[Row]]
-      .map(k => LoggedEntry(0L, ts, tsRaw, k.getString(0), k.getString(1)))
+    keys.toSeq.map { case (source, key) => LoggedEntry(0L, ts, tsRaw, source, key) }
       .sortBy(e => (Option(e.source), Option(e.key)))
   }
 
@@ -720,22 +714,19 @@ object Catalog {
     * reader that planned against the old snapshot never loses files
     * mid-read. Used by replay publish and committed compaction.
     *
-    * The write observes its own rows per source, and the record logs
-    * them with each file's size, so a subscriber's `count(*)` is
-    * answered from the log ([[LogFileIndex.CountFromLog]]) and callers
-    * take the count from here instead of reading the batch twice.
-    * Returns the rows written; nothing staged and nothing removed
-    * claims no record. */
+    * The write is [[DistWrite]]: one Spark job whose tasks return the
+    * files they wrote, each file's size and its rows, and the record
+    * logs them, so a subscriber's `count(*)` is answered from the log
+    * ([[LogFileIndex.CountFromLog]]) and callers take the count from
+    * here instead of reading the batch twice. The stage is not listed
+    * and no output committer runs. Returns the rows written; nothing
+    * staged and nothing removed claims no record. */
   def commitDist(spark: SparkSession, layout: Layout, batch: DataFrame,
       removes: Seq[String] = Seq.empty): Long = {
     val uuid = java.util.UUID.randomUUID().toString
-    val written = Observation()
-    batch.observe(written, RowsPerSource.observed)
-      .write.mode("overwrite").partitionBy("source").format("json")
-      .save(s"${layout.distributionDir}/_staged/$uuid")
-    // every observed row is in a staged file, so no file means no row
-    // (and the observation is not waited on)
-    commitStagedDist(spark, layout, uuid, removes, () => RowsPerSource.byDir(written.get("rows")))._2
+    val staged = DistWrite(batch,
+      new org.apache.hadoop.fs.Path(s"${layout.distributionDir}/_staged/$uuid"), uuid, keys = false)
+    commitStagedDist(distFs(spark, layout), layout, uuid, staged.files, removes, staged.rows)._2
   }
 
   /** [[commitDist]] of an ALREADY-STAGED payload: raw files the caller
@@ -743,24 +734,31 @@ object Catalog {
     * suffix; the stage directory must exist), plus `removes`, with the
     * `(source directory, rows)` the staged files hold where the caller
     * knows them. Used directly by [[Erase]], whose byte-preserving line
-    * rewrite cannot go through a DataFrame json write. Returns the
+    * rewrite cannot go through a DataFrame json write; the staged files
+    * and their sizes come from one listing of the stage. Returns the
     * commit's version, or -1 when nothing was staged and nothing
     * removed (no record is claimed). */
   def commitDistPrestaged(spark: SparkSession, layout: Layout, uuid: String,
-      removes: Seq[String], rows: Seq[(String, Long)] = Seq.empty): Long =
-    commitStagedDist(spark, layout, uuid, removes, () => rows)._1
+      removes: Seq[String], rows: Seq[(String, Long)] = Seq.empty): Long = {
+    val fs = distFs(spark, layout)
+    val staged = stagedSizes(fs,
+      new org.apache.hadoop.fs.Path(s"${layout.distributionDir}/_staged/$uuid"), suffix = ".json")
+    commitStagedDist(fs, layout, uuid, staged, removes, rows)._1
+  }
 
-  /** Claim and finish the record of a staged distribution payload;
-    * `rows` is asked for only when a file was staged. Returns the
-    * commit's version (-1 when none is claimed) and the rows logged. */
-  private def commitStagedDist(spark: SparkSession, layout: Layout, uuid: String,
-      removes: Seq[String], rows: () => Seq[(String, Long)]): (Long, Long) = {
-    val fs = new org.apache.hadoop.fs.Path(layout.catalogDir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+  private def distFs(spark: SparkSession, layout: Layout): org.apache.hadoop.fs.FileSystem =
+    new org.apache.hadoop.fs.Path(layout.catalogDir).getFileSystem(spark.sparkContext.hadoopConfiguration)
+
+  /** Claim and finish the record of `staged` distribution files
+    * (`(source dir/file, bytes)` under the stage) with their `rows` per
+    * source directory. Returns the commit's version (-1 when none is
+    * claimed) and the rows logged. */
+  private def commitStagedDist(fs: org.apache.hadoop.fs.FileSystem, layout: Layout, uuid: String,
+      staged: Seq[(String, Long)], removes: Seq[String],
+      rows: Seq[(String, Long)]): (Long, Long) = {
     val stage = new org.apache.hadoop.fs.Path(s"${layout.distributionDir}/_staged/$uuid")
-    val staged = stagedSizes(fs, stage, suffix = ".json")
     if (staged.isEmpty && removes.isEmpty) { fs.delete(stage, true); return (-1L, 0L) }
-    val logged = if (staged.isEmpty) Seq.empty else rows()
+    val logged = if (staged.isEmpty) Seq.empty else rows
     val rec = V2Record(-1L, System.currentTimeMillis(), None,
       if (staged.nonEmpty) Some(uuid) else None, staged, removes, distRows = logged)
     val seq = claimBody(fs, layout, v2Body(rec))
@@ -807,7 +805,8 @@ object Catalog {
       else computeFileStats(spark, lakeStage.toString, declStats, declBloom)
     val rec = V2Record(-1L, System.currentTimeMillis(), None, None, Seq.empty, Seq.empty,
       Some(lakeUuid), lakeFiles, fileStats = stats,
-      entries = arrived(observed.get("keys"), arrivalMs))
+      entries = arrived(observed.get("keys").asInstanceOf[Seq[Row]]
+        .map(k => (k.getString(0), k.getString(1))), arrivalMs))
     val seq = claimBody(fs, layout, v2Body(rec))
     finishV2(fs, layout, seq, rec)
     observed.get("rows").asInstanceOf[Long]
@@ -4399,6 +4398,9 @@ object Catalog {
       dist.groupBy { case (_, p, _) => p.substring(0, p.indexOf('/')) }
     lazy val distRemovedAt: Map[String, Long] =
       removes.reverseIterator.map { case (seq, _, p) => (p, seq) }.toMap // earliest wins
+    /** [[distSourceAsOf]]'s answers per `(source, version)`, built once
+      * per parsed state. */
+    val distSources = new java.util.concurrent.ConcurrentHashMap[(String, Long), DistSource]()
     /** Every entry with a source and a `ts`, per source, sorted by `ts`
       * and then log order: [[rangeQuery]]'s index. */
     lazy val entriesBySource: Map[String, Array[LoggedEntry]] =
@@ -4836,32 +4838,50 @@ object Catalog {
     }.sorted
   }
 
-  /** One source's committed distribution files as of `version`, each
-    * with its byte size (-1 when its record predates logged sizes),
-    * and the rows they hold when the log knows them. A file belongs to
+  /** One source's committed distribution files as of a version: each
+    * as `(relative path, bytes)` (-1 when its record predates logged
+    * sizes), its status under the area's qualified root (with that
+    * size, or read once when unknown), and the rows they hold when the
+    * log knows them. */
+  private[lake] final case class DistSource(files: Seq[(String, Long)],
+      statuses: Seq[org.apache.hadoop.fs.FileStatus], rows: Option[Long])
+
+  /** `source`'s [[DistSource]] as of `version`. A file belongs to
     * `source` when its directory's unescaped partition value is
     * `source` ([[LogFileIndex.sourceOf]]). The rows are known when
     * every live file belongs to a (commit, source directory) group
     * that logged a count, and every file of that group is still live
     * — so a compaction or erase that removed part of a group makes
-    * its count unknown rather than wrong. */
+    * its count unknown rather than wrong. Kept on the parsed log state
+    * per `(source, version)`, so a repeated subscription at the same
+    * head builds no path or status again. */
   private[lake] def distSourceAsOf(spark: SparkSession, layout: Layout, source: String,
-      version: Long): (Seq[(String, Long)], Option[Long]) = {
+      version: Long): DistSource = {
     val state = readLog(spark, layout)
-    // null and "" both live in Hive's default partition, whose value is None
-    val want = Option(source).filter(_.nonEmpty)
-    // (seq, directory, path, bytes) of every add of the source up to `version`
-    val adds = state.distByDir.toSeq.collect {
-      case (dir, files) if LogFileIndex.sourceOf(dir) == want =>
-        files.collect { case (seq, p, n) if seq <= version => (seq, dir, p, n) }
-    }.flatten
-    val (live, gone) = adds.partition(a => !state.distRemovedAt.get(a._3).exists(_ <= version))
-    val groups = live.map(a => (a._1, a._2)).distinct
-    val broken = gone.iterator.map(a => (a._1, a._2)).toSet
-    val rows =
-      if (groups.exists(broken)) None
-      else groups.foldLeft(Option(0L))((acc, g) => acc.flatMap(n => state.distRowsOf.get(g).map(n + _)))
-    (live.map(a => (a._3, a._4)).sortBy(_._1), rows)
+    state.distSources.computeIfAbsent((source, version), _ => {
+      // null and "" both live in Hive's default partition, whose value is None
+      val want = Option(source).filter(_.nonEmpty)
+      // (seq, directory, path, bytes) of every add of the source up to `version`
+      val adds = state.distByDir.toSeq.collect {
+        case (dir, files) if LogFileIndex.sourceOf(dir) == want =>
+          files.collect { case (seq, p, n) if seq <= version => (seq, dir, p, n) }
+      }.flatten
+      val (live, gone) = adds.partition(a => !state.distRemovedAt.get(a._3).exists(_ <= version))
+      val groups = live.map(a => (a._1, a._2)).distinct
+      val broken = gone.iterator.map(a => (a._1, a._2)).toSet
+      val rows =
+        if (groups.exists(broken)) None
+        else groups.foldLeft(Option(0L))((acc, g) => acc.flatMap(n => state.distRowsOf.get(g).map(n + _)))
+      val files = live.map(a => (a._3, a._4)).sortBy(_._1)
+      val root = new org.apache.hadoop.fs.Path(layout.distributionDir)
+      val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      val qualified = fs.makeQualified(root)
+      DistSource(files, files.map { case (rel, bytes) =>
+        val path = new org.apache.hadoop.fs.Path(qualified, rel)
+        if (bytes < 0) fs.getFileStatus(path)
+        else new org.apache.hadoop.fs.FileStatus(bytes, false, 1, 0L, 0L, path)
+      }, rows)
+    })
   }
 
   /** Relative paths of distribution files REMOVED from the committed

@@ -16,10 +16,13 @@ import org.apache.spark.sql.types.StructType
   * ingest), [[Catalog.commitDist]] ([[Replay.replayCommitted]],
   * [[Compaction.compactSourceCommitted]]) or
   * [[Catalog.commitDistPrestaged]] (the erase rewrite), each logging
-  * its files' sizes and its rows per source — and every pull read
-  * plans from the log ([[subscribeSnapshot]], [[subscribeAsOf]]),
-  * never from a directory listing, and counts from it (Delta Lake,
-  * VLDB 2020 §3). Two readers still list the source's directory:
+  * its files' sizes and its rows per source. The first two take them
+  * from the tasks that wrote the files ([[DistWrite]]: one Spark job,
+  * no output committer, no listing); the erase rewrite lists its
+  * stage. Every pull read plans from the log ([[subscribeSnapshot]],
+  * [[subscribeAsOf]]), never from a directory listing, and counts
+  * from it (Delta Lake, VLDB 2020 §3). Two readers still list the
+  * source's directory:
   * [[pushSubscribe]], a file stream, and the erase rewrite, which must
   * reach every physical copy of a subject's records.
   *
@@ -56,8 +59,10 @@ object Distribution {
     * `source` values come from its records through a [[LogFileIndex]],
     * so it lists no `distribution/` directory, makes no status call
     * (one per file of a record written before sizes were logged) and
-    * starts no Spark job. The data read is a JSON scan of exactly the
-    * source's live files.
+    * starts no Spark job. The statuses are built once per parsed log
+    * and `(source, version)` ([[Catalog.distSourceAsOf]]), so a repeated
+    * subscription at the same head builds none. The data read is a
+    * JSON scan of exactly the source's live files.
     *
     * `count()` of the view, in a session with
     * [[graft.functions.GraftExtensions]], is answered on the driver
@@ -78,30 +83,25 @@ object Distribution {
     * bounded by [[Catalog.vacuumDist]]'s grace. */
   def subscribeAsOf(spark: SparkSession, layout: Layout, source: String,
       version: Long): DataFrame = {
-    val (files, rows) = Catalog.distSourceAsOf(spark, layout, source, version)
-    read(spark, layout, files, rows)
+    val live = Catalog.distSourceAsOf(spark, layout, source, version)
+    read(spark, layout, source, live.statuses, live.rows)
   }
 
   /** The record schema of a distribution file, in the column order an
     * inferred read gives. */
   private[lake] val recordSchema = StructType.fromDDL("json STRING, key STRING")
 
-  /** Distribution files (paths relative to the area, with their byte
-    * sizes, -1 where unknown) read with [[recordSchema]] plus the
-    * `source` partition column — the `(json, key, source)` of an
-    * inferred read — through a [[LogFileIndex]] that knows `rows`. A
-    * file of unknown size costs one status call; no file gives an
-    * empty frame with the same columns. */
-  private[lake] def read(spark: SparkSession, layout: Layout, files: Seq[(String, Long)],
-      rows: Option[Long]): DataFrame = {
+  /** `source`'s distribution files (statuses under the area's
+    * qualified root, [[Catalog.DistSource]]) read with [[recordSchema]]
+    * plus the `source` partition column — the `(json, key, source)` of
+    * an inferred read — through a [[LogFileIndex]] that knows `rows`.
+    * No file gives an empty frame with the same columns. */
+  private[lake] def read(spark: SparkSession, layout: Layout, source: String,
+      files: Seq[FileStatus], rows: Option[Long]): DataFrame = {
     val root = new Path(layout.distributionDir)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val qualified = fs.makeQualified(root)
-    LogFileIndex.read(spark, qualified, new JsonFileFormat, recordSchema, files.map {
-      case (rel, bytes) =>
-        val path = new Path(qualified, rel)
-        if (bytes < 0) fs.getFileStatus(path) else new FileStatus(bytes, false, 1, 0L, 0L, path)
-    }, rows)
+    val qualified = root.getFileSystem(spark.sparkContext.hadoopConfiguration).makeQualified(root)
+    LogFileIndex.read(spark, qualified, new JsonFileFormat, recordSchema,
+      Option(source).filter(_.nonEmpty), files, rows)
   }
 
   /** PUSH-based subscriber delivery — the SNS→Lambda push analogue

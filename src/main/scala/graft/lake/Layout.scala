@@ -194,17 +194,17 @@ object Compaction {
     *
     * One read of the inputs: the live files are planned from the log
     * ([[Distribution.read]]; no listing), and the returned count is
-    * the one the write observes ([[Catalog.commitDist]]), which the
+    * the rows its write tasks report ([[Catalog.commitDist]]), which the
     * record also logs as the new file's rows, so a subscriber's
     * `count(*)` stays a log lookup after compaction. Returns records
     * compacted (0 when already at or under `targetFiles`). */
   def compactSourceCommitted(spark: SparkSession, layout: Layout, source: String,
       targetFiles: Int = 1, lockTtlMs: Long = 10 * 60 * 1000L): Long =
     SourceLock.withLock(spark, layout, source, lockTtlMs) {
-      val (live, _) = Catalog.distSourceAsOf(spark, layout, source, Long.MaxValue)
-      if (live.size <= targetFiles) 0L
+      val live = Catalog.distSourceAsOf(spark, layout, source, Long.MaxValue)
+      if (live.files.size <= targetFiles) 0L
       else Catalog.commitDist(spark, layout,
-        Distribution.read(spark, layout, live, rows = None).coalesce(targetFiles),
-        removes = live.map(_._1))
+        Distribution.read(spark, layout, source, live.statuses, rows = None).coalesce(targetFiles),
+        removes = live.files.map(_._1))
     }
 }

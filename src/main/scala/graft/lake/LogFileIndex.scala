@@ -17,18 +17,16 @@ import org.apache.spark.unsafe.types.UTF8String
   * from the manifest log, not from a listing: planning a read over it
   * lists no directory, makes no status call and starts no Spark job
   * (the Delta Lake rule, VLDB 2020 §3–4: a snapshot is the log's add
-  * actions). Every path is a published file under `root`,
-  * `source=<v>/<name>`; the one partition column is the string
-  * `source`. `rows` is the files' row count when the log knows it
+  * actions). Every path is a published file of one source under
+  * `root`, `source=<v>/<name>`; the one partition column is the string
+  * `source`, whose value is `source` (None for Hive's default
+  * partition). `rows` is the files' row count when the log knows it
   * ([[LogFileIndex.CountFromLog]] answers `count(*)` from it). */
-private[graft] final class LogFileIndex(root: Path, files: Seq[FileStatus],
+private[graft] final class LogFileIndex(root: Path, source: Option[String], files: Seq[FileStatus],
     val rows: Option[Long]) extends FileIndex {
 
-  private val bySource: Seq[(InternalRow, Seq[FileStatusWithMetadata])] =
-    files.groupBy(f => LogFileIndex.sourceOf(f.getPath.getParent.getName)).toSeq
-      .map { case (src, fs) =>
-        (InternalRow(src.map(UTF8String.fromString).orNull), fs.map(FileStatusWithMetadata(_)))
-      }
+  private val partition = PartitionDirectory(
+    InternalRow(source.map(UTF8String.fromString).orNull), files.map(FileStatusWithMetadata(_)))
 
   override def rootPaths: Seq[Path] = Seq(root)
 
@@ -42,7 +40,7 @@ private[graft] final class LogFileIndex(root: Path, files: Seq[FileStatus],
       partitionFilters.reduceOption(And).getOrElse(Literal(true)).transform {
         case _: AttributeReference => BoundReference(0, StringType, nullable = true)
       })
-    bySource.collect { case (values, fs) if keep.eval(values) => PartitionDirectory(values, fs) }
+    if (files.nonEmpty && keep.eval(partition.values)) Seq(partition) else Seq.empty
   }
 
   override def inputFiles: Array[String] = files.map(_.getPath.toString).toArray
@@ -62,11 +60,11 @@ private[graft] object LogFileIndex {
     Some(ExternalCatalogUtils.unescapePathName(dirName.stripPrefix("source=")))
       .filter(_ != ExternalCatalogUtils.DEFAULT_PARTITION_NAME)
 
-  /** A `format` read of `files` with `dataSchema` plus `source`,
-    * planned from the given statuses alone. */
+  /** A `format` read of one source's files with `dataSchema` plus
+    * `source`, planned from the given statuses alone. */
   def read(spark: SparkSession, root: Path, format: FileFormat, dataSchema: StructType,
-      files: Seq[FileStatus], rows: Option[Long]): DataFrame = {
-    val relation = HadoopFsRelation(new LogFileIndex(root, files, rows), partitionSchema,
+      source: Option[String], files: Seq[FileStatus], rows: Option[Long]): DataFrame = {
+    val relation = HadoopFsRelation(new LogFileIndex(root, source, files, rows), partitionSchema,
       dataSchema, None, format, Map.empty)(spark)
     GraftDmlBridge.frame(spark, LogicalRelation(relation))
   }

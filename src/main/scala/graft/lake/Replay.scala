@@ -34,10 +34,12 @@ import org.apache.spark.sql.functions._
   *    job, reads no catalog file and compiles no code for new bounds.
   *    An empty range returns 0 here, claiming nothing;
   *  - ONE read of the matched bronze objects, by the publish itself —
-  *    the call's one Spark job, committed as one manifest-log record;
-  *  - the returned count is observed on that publish write
-  *    ([[Catalog.commitDist]]'s one observation), not counted by a
-  *    second read; the record logs it per source, so a subscriber's
+  *    the call's one Spark job ([[DistWrite]]), whose tasks write the
+  *    distribution files with no output committer, committed as one
+  *    manifest-log record;
+  *  - the returned count is the rows those tasks report writing
+  *    ([[Catalog.commitDist]]), not counted by a second read or an
+  *    observation; the record logs it per source, so a subscriber's
   *    `count(*)` over the replayed rows is answered from the log
   *    (in a session with [[graft.functions.GraftExtensions]]).
   */

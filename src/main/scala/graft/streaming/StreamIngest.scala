@@ -63,8 +63,10 @@ object StreamIngest {
     * §7.4 risk 3.
     *
     * Cost: ONE pass over the batch and one Spark job, with no shuffle
-    * — the tombstone gate is a filter inside that pass, and the
-    * catalog entries are observed on the distribution write and kept
+    * — the tombstone gate is a filter inside that pass. The job's
+    * tasks write the distribution files themselves, with no output
+    * committer ([[graft.lake.DistWrite]]), and return the files, their
+    * rows and the batch's objects; the catalog entries are kept
     * in the commit record, one line per object, with no catalog file
     * ([[graft.lake.Catalog.commitIngest]]). The driver holds one
     * catalog key per object in the batch, the order of the file list

@@ -1,7 +1,11 @@
 package org.apache.spark.sql
 
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.json.{JSONOptions, JacksonGenerator}
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.internal.SQLConf
+import org.apache.spark.sql.types.StructType
 
 /** The SQL-DML seam into Spark's `private[sql]` surface — the exact
   * two constructors every out-of-tree lakehouse with SQL
@@ -41,4 +45,29 @@ object GraftDmlBridge {
     * pattern matching. */
   def expression(c: Column): Expression =
     org.apache.spark.sql.classic.ColumnNodeToExpressionConverter(c.node)
+
+  /** Runs `body` under `spark`'s job artifact state, as Spark runs each
+    * SQL execution of the session: the jobs it submits run on the
+    * session's executor class loader, so code generated for the
+    * session's plans is reused there instead of compiled again. */
+  def withArtifacts[T](spark: SparkSession)(body: => T): T =
+    spark.asInstanceOf[classic.SparkSession].artifactManager.withResources(body)
+
+  /** The options the JSON data source writes with in `spark` when the
+    * writer sets none. */
+  def jsonWriteOptions(spark: SparkSession): JSONOptions = {
+    val conf = spark.asInstanceOf[classic.SparkSession].sessionState.conf
+    SQLConf.withExistingConf(conf)(
+      new JSONOptions(Map.empty[String, String], conf.sessionLocalTimeZone,
+        conf.columnNameOfCorruptRecord))
+  }
+
+  /** The JSON data source's line writer: each row of `schema` as the
+    * line `df.write.json` writes for it, into `writer`. */
+  final class JsonLines(schema: StructType, writer: java.io.Writer, options: JSONOptions) {
+    private val gen = new JacksonGenerator(schema, writer, options)
+    def write(row: InternalRow): Unit = { gen.write(row); gen.writeLineEnding() }
+    def flush(): Unit = gen.flush()
+    def close(): Unit = { gen.close(); writer.close() }
+  }
 }

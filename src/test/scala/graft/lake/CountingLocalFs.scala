@@ -2,7 +2,9 @@ package graft.lake
 
 import java.net.URI
 
-import org.apache.hadoop.fs.{FSDataInputStream, FileStatus, Path, RawLocalFileSystem}
+import org.apache.hadoop.fs.{FSDataInputStream, FSDataOutputStream, FileStatus, Path, RawLocalFileSystem}
+import org.apache.hadoop.fs.permission.FsPermission
+import org.apache.hadoop.util.Progressable
 
 /** A local filesystem masquerading as an object-store scheme
   * (`countfs:`) that COUNTS metadata requests against `_log`
@@ -14,7 +16,8 @@ import org.apache.hadoop.fs.{FSDataInputStream, FileStatus, Path, RawLocalFileSy
   * exercises exactly the [[Catalog]] probe path an s3a deployment
   * would. It also records the path of every top-level list, status
   * and open request, so a spec can check which data directories and
-  * files a read touched. */
+  * files a read touched, and of every file or directory created, so a
+  * spec can check what a write left behind. */
 class CountingLocalFs extends RawLocalFileSystem {
   override def getScheme: String = "countfs"
   override def getUri: URI = URI.create("countfs:///")
@@ -53,6 +56,27 @@ class CountingLocalFs extends RawLocalFileSystem {
       CountingLocalFs.logOpens.incrementAndGet()
     topLevel(super.open(p, bufferSize))
   }
+
+  private def made(p: Path): Unit = if (!nested.get()) CountingLocalFs.created.add(p.toUri.getPath)
+
+  override def create(p: Path, overwrite: Boolean, bufferSize: Int, replication: Short,
+      blockSize: Long, progress: Progressable): FSDataOutputStream = {
+    made(p)
+    topLevel(super.create(p, overwrite, bufferSize, replication, blockSize, progress))
+  }
+
+  override def create(p: Path, permission: FsPermission, overwrite: Boolean, bufferSize: Int,
+      replication: Short, blockSize: Long, progress: Progressable): FSDataOutputStream = {
+    made(p)
+    topLevel(super.create(p, permission, overwrite, bufferSize, replication, blockSize, progress))
+  }
+
+  override def mkdirs(p: Path): Boolean = { made(p); topLevel(super.mkdirs(p)) }
+
+  override def mkdirs(p: Path, permission: FsPermission): Boolean = {
+    made(p)
+    topLevel(super.mkdirs(p, permission))
+  }
 }
 
 object CountingLocalFs {
@@ -60,9 +84,9 @@ object CountingLocalFs {
   val logListedEntries = new java.util.concurrent.atomic.AtomicLong(0L)
   val logStats = new java.util.concurrent.atomic.AtomicInteger(0)
   val logOpens = new java.util.concurrent.atomic.AtomicInteger(0)
-  val listed, statted, opened = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+  val listed, statted, opened, created = new java.util.concurrent.ConcurrentLinkedQueue[String]()
   def reset(): Unit = {
     logLists.set(0); logListedEntries.set(0); logStats.set(0); logOpens.set(0)
-    listed.clear(); statted.clear(); opened.clear()
+    listed.clear(); statted.clear(); opened.clear(); created.clear()
   }
 }

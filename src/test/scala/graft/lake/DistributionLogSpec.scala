@@ -5,8 +5,9 @@ import org.apache.spark.sql.DataFrame
 
 /** The manifest log is the one distribution surface: a subscriber's
   * snapshot frame keeps its rows across a committed compaction and its
-  * vacuum, and `fsckLake` audits the committed-live distribution
-  * files. */
+  * vacuum, a repeated subscription at the same head reuses the file
+  * statuses the first one built, and `fsckLake` audits the
+  * committed-live distribution files. */
 class DistributionLogSpec extends SparkTestBase {
   import spark.implicits._
 
@@ -53,5 +54,20 @@ class DistributionLogSpec extends SparkTestBase {
     val victim = Catalog.distLiveFiles(spark, layout).head
     assert(new java.io.File(s"${layout.distributionDir}/$victim").delete())
     assert(check() == ((false, 1L)))
+  }
+
+  test("a repeated subscription at the same head builds no file status again") {
+    val layout = committed("dist-memo", 3)
+    val first = Catalog.distSourceAsOf(spark, layout, "clicks", Long.MaxValue)
+    assert(first.statuses.size == 3 && first.rows.contains(3L))
+    assert(Catalog.distSourceAsOf(spark, layout, "clicks", Long.MaxValue) eq first)
+    assert(Catalog.distSourceAsOf(spark, layout, "clicks", 2L).statuses.size == 2)
+    assert(rows(Distribution.subscribeSnapshot(spark, layout, "clicks")).size == 3)
+    // a commit changes the head: the next subscription sees its file
+    Catalog.commitDist(spark, layout,
+      Seq(("clicks", "k4", """{"n":4}""")).toDF("source", "key", "json"))
+    val next = Catalog.distSourceAsOf(spark, layout, "clicks", Long.MaxValue)
+    assert(!(next eq first) && next.statuses.size == 4 && next.rows.contains(4L))
+    assert(rows(Distribution.subscribeSnapshot(spark, layout, "clicks")).size == 4)
   }
 }

@@ -4,9 +4,6 @@ import graft.SparkTestBase
 import graft.streaming.StreamIngest
 import org.apache.spark.CodegenAccess
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.execution.QueryExecution
-import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
-import org.apache.spark.sql.execution.exchange.Exchange
 
 /** The stream's ingest commit is one pass over the micro-batch:
   * [[StreamIngest.processBatch]] scans bronze once, shuffles nothing,
@@ -33,10 +30,10 @@ class IngestCommitSpec extends SparkTestBase {
     writeBronze(layout, "tweets", "t0", rec("G", 6), rec("H", 7))
   }
 
-  private object Plans extends AdaptiveSparkPlanHelper
-
-  private def exchanges(qe: QueryExecution): Seq[String] =
-    Plans.collectWithSubqueries(qe.executedPlan) { case e: Exchange => e.nodeName }
+  /** The bytes of every bronze object in `layout`. */
+  private def bronzeBytes(layout: Layout): Long =
+    java.nio.file.Files.walk(java.nio.file.Paths.get(layout.bronzeDir)).filter(java.nio.file.Files.isRegularFile(_))
+      .mapToLong(java.nio.file.Files.size(_)).sum()
 
   private def stagedLeft(dir: String): Seq[String] =
     Option(new java.io.File(dir, "_staged").list()).map(_.toSeq).getOrElse(Seq.empty)
@@ -47,12 +44,16 @@ class IngestCommitSpec extends SparkTestBase {
   test("one processBatch of a three-source batch is one bronze scan and no shuffle") {
     val layout = Layout(tmpDir("ingest-one-pass"))
     threeSources(layout)
-    val (_, executions) = QueryExecutions.during(spark) {
+    // the commit's write is a plain Spark job, not a reported query
+    // execution, so the scan is seen from its jobs: the one job that
+    // reads input reads every bronze object once, in one stage
+    val (_, jobs) = QueryExecutions.jobsOf(spark) {
       StreamIngest.processBatch(Ingest.readBronze(spark, layout), layout, arrival, 0L)
     }
-    val scans = executions.count(QueryExecutions.readsUnder(layout.bronzeDir))
-    assert(scans == 1, s"the commit must scan bronze once, scanned it $scans times")
-    val shuffles = executions.flatMap(exchanges)
+    val scans = jobs.filter(_.inputBytes > 0)
+    assert(scans.size == 1, s"the commit must scan bronze once, scanned it ${scans.size} times")
+    assert(scans.head.inputBytes == bronzeBytes(layout), s"$jobs")
+    val shuffles = jobs.filter(_.stages > 1)
     assert(shuffles.isEmpty, s"the commit must not shuffle: $shuffles")
     Seq("clicks" -> 4, "logs" -> 2, "tweets" -> 2).foreach { case (src, n) =>
       assert(Distribution.subscribeSnapshot(spark, layout, src).count() == n.toLong, src)
