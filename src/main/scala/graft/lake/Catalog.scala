@@ -82,7 +82,7 @@ object Catalog {
     * [[LoggedEntry.encode]], so every [[CatalogEntry]] value reads back
     * exactly ([[entryFrame]]). `seq` is the committing record's
     * version, 0 until the log is read. */
-  private final case class LoggedEntry(seq: Long, ts: java.lang.Long, tsRaw: String,
+  private[lake] final case class LoggedEntry(seq: Long, ts: java.lang.Long, tsRaw: String,
       source: String, key: String) {
     def fields: String = {
       import LoggedEntry.encode
@@ -722,10 +722,15 @@ object Catalog {
     * and no output committer runs. Returns the rows written; nothing
     * staged and nothing removed claims no record. */
   def commitDist(spark: SparkSession, layout: Layout, batch: DataFrame,
-      removes: Seq[String] = Seq.empty): Long = {
+      removes: Seq[String] = Seq.empty): Long =
+    commitDistWith(spark, layout, removes)(DistWrite(batch, _, _, keys = false))
+
+  /** [[commitDist]] of what `write` stages under the stage path and
+    * uuid it is given. */
+  private[lake] def commitDistWith(spark: SparkSession, layout: Layout, removes: Seq[String])(
+      write: (org.apache.hadoop.fs.Path, String) => DistWrite.Staged): Long = {
     val uuid = java.util.UUID.randomUUID().toString
-    val staged = DistWrite(batch,
-      new org.apache.hadoop.fs.Path(s"${layout.distributionDir}/_staged/$uuid"), uuid, keys = false)
+    val staged = write(new org.apache.hadoop.fs.Path(s"${layout.distributionDir}/_staged/$uuid"), uuid)
     commitStagedDist(distFs(spark, layout), layout, uuid, staged.files, removes, staged.rows)._2
   }
 
@@ -4931,18 +4936,23 @@ object Catalog {
 
   /** O11: `Source = s AND ts BETWEEN t0 AND t1` (inclusive), planned
     * from one log read: the committed entries are looked up on the
-    * driver, in microseconds (the unit of the stored `ts`), and served
-    * as a local relation — no file, no Spark job, no generated code per
-    * range. The lookup is two binary searches in the source's
-    * `ts`-sorted entries ([[LogState.entriesBySource]], built once per
-    * parsed log), so a call costs O(log n + k) for k rows, which come
-    * in `ts` order and then log order. A null bound, source or `ts`
-    * matches nothing, as the SQL predicate does. */
+    * driver ([[rangeEntries]]) and served as a local relation — no
+    * file, no Spark job, no generated code per range. */
   def rangeQuery(spark: SparkSession, layout: Layout, source: String,
-      t0: java.sql.Timestamp, t1: java.sql.Timestamp): DataFrame = {
+      t0: java.sql.Timestamp, t1: java.sql.Timestamp): DataFrame =
+    entryFrame(spark, rangeEntries(spark, layout, source, t0, t1))
+
+  /** [[rangeQuery]]'s entries, compared in microseconds (the unit of
+    * the stored `ts`). The lookup is two binary searches in the
+    * source's `ts`-sorted entries ([[LogState.entriesBySource]], built
+    * once per parsed log), so a call costs O(log n + k) for k entries,
+    * which come in `ts` order and then log order. A null bound, source
+    * or `ts` matches nothing, as the SQL predicate does. */
+  private[lake] def rangeEntries(spark: SparkSession, layout: Layout, source: String,
+      t0: java.sql.Timestamp, t1: java.sql.Timestamp): Seq[LoggedEntry] = {
     val range = for (a <- Option(t0); b <- Option(t1) if source != null)
       yield (DateTimeUtils.fromJavaTimestamp(a), DateTimeUtils.fromJavaTimestamp(b))
-    entryFrame(spark, range.toSeq.flatMap { case (r0, r1) =>
+    range.toSeq.flatMap { case (r0, r1) =>
       val es = readLog(spark, layout).entriesBySource.getOrElse(source, Array.empty[LoggedEntry])
       // the first index whose ts satisfies `p`, which holds on a suffix
       def first(p: Long => Boolean): Int = {
@@ -4954,6 +4964,6 @@ object Catalog {
         lo
       }
       scala.collection.immutable.ArraySeq.unsafeWrapArray(es.slice(first(_ >= r0), first(_ > r1)))
-    })
+    }
   }
 }

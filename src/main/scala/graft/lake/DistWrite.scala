@@ -4,7 +4,8 @@ import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FSDataOutputStream, Path}
 import org.apache.spark.TaskContext
 import org.apache.spark.graft.ConfBridge
-import org.apache.spark.sql.{DataFrame, GraftDmlBridge}
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.{DataFrame, GraftDmlBridge, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.catalyst.json.JSONOptions
@@ -14,8 +15,9 @@ import org.apache.spark.unsafe.types.UTF8String
 import scala.jdk.CollectionConverters._
 
 /** The distribution publish's write ([[Catalog.commitIngest]],
-  * [[Catalog.commitDist]]): one Spark job over a batch with a `source`
-  * column whose tasks write each row's other columns as a JSON line
+  * [[Catalog.commitDist]], [[Replay]]): one Spark job over rows with a
+  * `source` column — a batch's planned rows, or the records a replay's
+  * tasks read — whose tasks write each row's other columns as a JSON line
   * straight into the commit's stage, `<stage>/<source dir>/`, one file
   * per source directory a task meets, and return what they wrote. The record's
   * files, sizes, rows per source directory and catalog entries come
@@ -55,28 +57,37 @@ private[lake] object DistWrite {
 
   /** Write `batch` into `stage` (`distribution/_staged/<uuid>`),
     * partitioned by its `source` column, collecting the `(source, key)`
-    * pairs of its `key` column when `keys` is set. The job runs under
-    * the batch session's artifact state, with a description naming the
-    * stage, and its tasks read the session's Hadoop configuration from
-    * one broadcast.
+    * pairs of its `key` column when `keys` is set: [[apply]] over the
+    * rows the batch's plan produces, `source` first. */
+  def apply(batch: DataFrame, stage: Path, uuid: String, keys: Boolean): Staged = {
+    // a line holds every column but `source`, in the batch's order
+    val line = StructType(batch.schema.filter(_.name != "source"))
+    val columns = line.fieldNames.toSeq.map(n => col(s"`${n.replace("`", "``")}`"))
+    apply(batch.sparkSession, line, stage, uuid, keys)(_ =>
+      batch.select(col("source").cast("string") +: columns: _*).queryExecution.toRdd)
+  }
+
+  /** Write the rows `rows` makes — a string `source`, then the columns
+    * of `line` — into `stage`, collecting the `(source, key)` pairs of
+    * `line`'s `key` column when `keys` is set. `rows` is made, and its
+    * one job run, under `spark`'s artifact state, with a description
+    * naming the stage; its tasks read the session's Hadoop
+    * configuration from one broadcast, which `rows` is given to read
+    * it from too.
     * A task that fails fails the write: nothing is returned, and what
     * the stage holds is left to the sweep. */
-  def apply(batch: DataFrame, stage: Path, uuid: String, keys: Boolean): Staged = {
-    val spark = batch.sparkSession
+  def apply(spark: SparkSession, line: StructType, stage: Path, uuid: String, keys: Boolean)(
+      rows: (() => Configuration) => RDD[InternalRow]): Staged = {
     val sc = spark.sparkContext
     val options = GraftDmlBridge.jsonWriteOptions(spark)
     val root = stage.toString
-    // a line holds every column but `source`, in the batch's order
-    val line = StructType(batch.schema.filter(_.name != "source"))
     val keyAt = if (keys) line.fieldIndex("key") else -1
     val conf = sc.broadcast(ConfBridge.serializable(sc.hadoopConfiguration))
     val description = sc.getLocalProperty("spark.job.description")
     sc.setJobDescription(s"distribution publish _staged/$uuid")
     val out = try GraftDmlBridge.withArtifacts(spark) {
-      val columns = line.fieldNames.toSeq.map(n => col(s"`${n.replace("`", "``")}`"))
-      sc.runJob(batch.select(col("source").cast("string") +: columns: _*).queryExecution.toRdd,
-        (ctx: TaskContext, rows: Iterator[InternalRow]) =>
-          writeTask(ctx, rows, root, uuid, conf.value.value, options, line, keyAt))
+      sc.runJob(rows(() => conf.value.value), (ctx: TaskContext, it: Iterator[InternalRow]) =>
+        writeTask(ctx, it, root, uuid, conf.value.value, options, line, keyAt))
     } finally {
       sc.setLocalProperty("spark.job.description", description)
       conf.destroy()

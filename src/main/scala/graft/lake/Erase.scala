@@ -20,8 +20,7 @@ import org.apache.hadoop.fs.Path
   *    data and is untouched.
   *  - **Bounded driver state.** The affected-object search is a
   *    distributed scan; only the matched KEYS are collected, capped at
-  *    `maxAffectedObjects` with a loud failure (the [[Replay]]
-  *    `maxCollectedKeys` rule).
+  *    `maxAffectedObjects` with a loud failure.
   *  - **Atomic per object.** Each bronze rewrite is
   *    write-temp → original→trash → temp→original → drop trash; file
   *    renames are atomic, both transient names are `_`-prefixed

@@ -1,7 +1,16 @@
 package graft.lake
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
+import java.nio.charset.StandardCharsets.UTF_8
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.io.compress.CompressionCodecFactory
+import org.apache.spark.TaskContext
+import org.apache.spark.graft.ConfBridge
+import org.apache.spark.paths.SparkPath
+import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.execution.datasources.{FilePartition, PartitionDirectory, PartitionedFile}
+import org.apache.spark.sql.types.{StringType, StructField, StructType}
+import org.apache.spark.unsafe.types.UTF8String
 
 /** Time-range replay — the engine form of the reference's
   * event_replayer + Replay branch (O11–O13,
@@ -19,24 +28,25 @@ import org.apache.spark.sql.functions._
   * write, so [[Distribution.subscribeSnapshot]] returns the replayed
   * records and [[Compaction.compactSourceCommitted]] compacts them.
   *
-  * Scale: the matched key list is only collected when small (it is a
-  * *file* list — bounded by objects-per-range, not events). Above
-  * [[maxCollectedKeys]] the replay switches to reading the source's
-  * bronze partition and semi-joining on `input_file_name()` — no
-  * driver materialization at any range size.
-  *
   * Cost per call, one pass:
-  *  - ONE catalog query, with no shuffle: a collect bounded at
-  *    `maxCollectedKeys + 1` rows, which both lists a small range and
-  *    tells a big one apart. [[Catalog.rangeQuery]] plans it from one
-  *    manifest-log read: every catalog row is an entry in a commit
-  *    record, filtered on the driver, so the collect starts no Spark
-  *    job, reads no catalog file and compiles no code for new bounds.
-  *    An empty range returns 0 here, claiming nothing;
+  *  - the matched keys come from the log's per-source `ts` index
+  *    ([[Catalog.rangeEntries]]): no catalog file, no Spark job, no
+  *    query plan. The driver holds one key per matched object, as it
+  *    holds every logged entry. An empty range returns 0 here,
+  *    claiming nothing;
+  *  - one status call per matched object, on the driver, which packs
+  *    the objects into tasks by Spark's own file-scan rule
+  *    ([[FilePartition.getFilePartitions]]): a replay runs as many
+  *    tasks, and writes as many files, as a scan of the same objects
+  *    would. A missing object fails the call here, before anything is
+  *    written or claimed;
   *  - ONE read of the matched bronze objects, by the publish itself —
-  *    the call's one Spark job ([[DistWrite]]), whose tasks write the
+  *    the call's one Spark job ([[DistWrite]]), with no SQL execution:
+  *    its tasks open each object, decompress it by its extension,
+  *    split its records ([[ConcatJson.split]]) and write the
   *    distribution files with no output committer, committed as one
-  *    manifest-log record;
+  *    manifest-log record. The tasks report what they read as task
+  *    input, as a file scan does;
   *  - the returned count is the rows those tasks report writing
   *    ([[Catalog.commitDist]]), not counted by a second read or an
   *    observation; the record logs it per source, so a subscriber's
@@ -45,7 +55,8 @@ import org.apache.spark.sql.functions._
   */
 object Replay {
 
-  val maxCollectedKeys = 10000
+  /** The columns a replayed record is published with, after its source. */
+  private val line = StructType(Seq(StructField("key", StringType), StructField("json", StringType)))
 
   /** Replay [t0, t1] of `source` into the distribution area; returns
     * the number of re-published records. The re-published records land
@@ -57,40 +68,55 @@ object Replay {
     * fixed at the compaction's own snapshot read). */
   def replayCommitted(spark: SparkSession, layout: Layout, source: String,
       t0: java.sql.Timestamp, t1: java.sql.Timestamp): Long = {
-    val matched = Catalog.rangeQuery(spark, layout, source, t0, t1).select(col("key"))
-    // one catalog query, no shuffle: a small range needs its key list
-    // anyway, and one row past the cap is enough to tell a big range
-    // apart. The rows are deduplicated here, on the driver; counting
-    // duplicates toward the cap only sends a range to the semi-join
-    // early, which tolerates them.
-    val rows = matched.limit(maxCollectedKeys + 1).collect().map(_.getString(0))
-    if (rows.isEmpty) return 0L
-
-    val records: DataFrame =
-      if (rows.length <= maxCollectedKeys) readObjects(spark, rows.distinct, source)
-      else {
-        // big range: list/scan ONLY this source's bronze partition
-        // (path-level pruning — a filter above the split flatMap would
-        // not reach the file listing), keep matched files via semi-join
-        val all = Ingest.readBronzeSource(spark, layout, source)
-        all.join(matched.withColumnRenamed("key", "mkey"),
-            col("key") === col("mkey"), "left_semi")
-      }
-    // one bronze read: the publish counts its own rows as it writes,
-    // and logs them, so a subscriber counts the replayed rows from the log.
+    // each matched object once; a null key names no object to re-read
+    val keys = Catalog.rangeEntries(spark, layout, source, t0, t1).iterator
+      .map(_.key).filter(_ != null).distinct.toSeq
+    if (keys.isEmpty) return 0L
+    val tasks = packed(spark, keys)
     // NOTE deliberately no Catalog.append here (§2.3 item 2).
-    Catalog.commitDist(spark, layout, records.select(col("source"), col("key"), col("json")))
+    Catalog.commitDistWith(spark, layout, Seq.empty)(DistWrite(spark, line, _, _, keys = false)(conf =>
+      spark.sparkContext.parallelize(tasks, tasks.size).mapPartitions(records(source, conf))))
   }
 
-  /** Re-read whole objects by key (replay unit = object). */
-  private def readObjects(spark: SparkSession, keys: Array[String], source: String): DataFrame = {
-    import spark.implicits._
-    val raw = spark.read.option("wholetext", "true")
-      .textFile(scala.collection.immutable.ArraySeq.unsafeWrapArray(keys): _*)
-      .withColumn("key", input_file_name())
-    raw.select(col("key"), col("value")).as[(String, String)]
-      .flatMap { case (key, content) =>
-        ConcatJson.split(content).map(json => (source, key, json)) }
-      .toDF("source", "key", "json")
+  /** `keys` grouped into tasks as a scan of whole objects groups them:
+    * largest first, packed up to Spark's split size. */
+  private def packed(spark: SparkSession, keys: Seq[String]): Seq[Array[String]] = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    val paths = keys.map(SparkPath.fromUrlString)
+    val statuses = paths.map { p =>
+      val path = p.toPath
+      path.getFileSystem(conf).getFileStatus(path)
+    }
+    val files = paths.zip(statuses).map { case (p, st) =>
+      PartitionedFile(InternalRow.empty, p, 0L, st.getLen, Array.empty[String],
+        st.getModificationTime, st.getLen)
+    }.sortBy(-_.length)
+    val maxSplit = FilePartition.maxSplitBytes(spark,
+      Seq(PartitionDirectory(InternalRow.empty, statuses.toArray)))
+    FilePartition.getFilePartitions(spark, files, maxSplit).map(_.files.map(_.filePath.urlEncoded))
+  }
+
+  /** The `(source, key, json)` records of the objects a task reads,
+    * counted as its input. */
+  private def records(source: String, conf: () => Configuration)(
+      tasks: Iterator[Array[String]]): Iterator[InternalRow] = {
+    val hconf = conf()
+    val codecs = new CompressionCodecFactory(hconf)
+    val counted = ConfBridge.inputCounter(TaskContext.get())
+    val src = UTF8String.fromString(source)
+    tasks.flatMap(_.iterator).flatMap { key =>
+      val path = SparkPath.fromUrlString(key).toPath
+      val raw = path.getFileSystem(hconf).open(path)
+      val bytes = try {
+        val codec = codecs.getCodec(path)
+        val in = if (codec == null) raw else codec.createInputStream(raw)
+        try in.readAllBytes() finally in.close()
+      } finally raw.close()
+      counted()
+      val k = UTF8String.fromString(key)
+      // invalid UTF-8 decodes to U+FFFD, as the text source's string does
+      ConcatJson.split(new String(bytes, UTF_8)).iterator
+        .map(json => InternalRow(src, k, UTF8String.fromString(json)))
+    }
   }
 }

@@ -376,9 +376,8 @@ object Dedup {
 
   /** Edge-count threshold below which the component computation runs
     * as driver-side union-find (a few MB of ids) instead of the
-    * distributed fixpoint — the same small-side escape hatch as
-    * [[graft.lake.Replay.maxCollectedKeys]]. Components and results
-    * are identical either way (min-id representative). */
+    * distributed fixpoint — a small-side escape hatch. Components and
+    * results are identical either way (min-id representative). */
   val maxCollectedEdges: Long = 1000000L
 
   /** Transitive near-dup CLUSTERS: connected components over the

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, GraftDmlBridge, SparkSession}
 
 /** Runs a `foreachBatch` body on the session that started the stream.
   *
@@ -10,11 +10,12 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * that runs on the clone compiles its plans afresh for every stream
   * start, even when the code is byte-identical to the previous
   * start's; the JVM then JIT-compiles each new class again. Re-binding
-  * the micro-batch to the caller's session with
-  * `createDataFrame(batch.rdd, batch.schema)` runs the body's jobs
-  * under the caller's session id, whose class loader and codegen cache
-  * outlive each stream. The added cost is one `Row` round trip per
-  * record.
+  * the micro-batch to the caller's session runs the body's jobs under
+  * the caller's session id, whose class loader and codegen cache
+  * outlive each stream. The re-bound batch is a scan of the rows the
+  * clone planned for the batch ([[GraftDmlBridge.rebind]]), with the
+  * batch's columns: the batch is planned once, and its rows are not
+  * converted to `Row`s and back.
   *
   * The saving exists only for a stream that is started once per
   * arrival (`Trigger.AvailableNow`): a long-running stream keeps one
@@ -37,5 +38,5 @@ object CallerSession {
 
   /** `body`, called with each micro-batch re-bound to `spark`. */
   def apply(spark: SparkSession)(body: (DataFrame, Long) => Unit): (DataFrame, Long) => Unit =
-    (batch, batchId) => body(spark.createDataFrame(batch.rdd, batch.schema), batchId)
+    (batch, batchId) => body(GraftDmlBridge.rebind(spark, batch), batchId)
 }

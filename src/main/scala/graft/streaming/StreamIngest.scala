@@ -1,8 +1,7 @@
 package graft.streaming
 
-import graft.lake.{Catalog, ConcatJson, Ingest, Layout}
+import graft.lake.{Catalog, Ingest, Layout}
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 /** Streaming ingest — the reference's stages 3–9 collapsed into ONE
@@ -33,20 +32,13 @@ object StreamIngest {
     * re-bind saves only the first batch's compiles. */
   def start(spark: SparkSession, layout: Layout,
       trigger: Trigger = Trigger.ProcessingTime("60 seconds")): StreamingQuery = {
-    import spark.implicits._
     // finish any catalog append a crashed previous driver left between
     // CLAIM and DONE (idempotent; see Catalog.recoverAppends) before
     // new micro-batches append behind it
     Catalog.recoverAppends(spark, layout)
-    val lines = spark.readStream
-      .option("wholetext", "true")
-      .text(s"${layout.bronzeDir}/*/*")
-      .withColumn("key", input_file_name())
-      .withColumn("source", Ingest.sourceFromPath(layout.bronzeDir))
-      .select($"source", $"key", $"value").as[(String, String, String)]
-      .flatMap { case (source, key, content) =>
-        ConcatJson.split(content).map(json => (source, key, json)) }
-      .toDF("source", "key", "json")
+    val lines = Ingest.split(
+      spark.readStream.options(Ingest.objectReads).text(s"${layout.bronzeDir}/*"),
+      layout.bronzeDir)
 
     lines.writeStream
       .option("checkpointLocation", s"${layout.checkpointDir}/ingest")

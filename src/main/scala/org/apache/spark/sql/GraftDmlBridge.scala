@@ -4,6 +4,7 @@ import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.json.{JSONOptions, JacksonGenerator}
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types.StructType
 
@@ -23,6 +24,9 @@ import org.apache.spark.sql.types.StructType
   *    plain frame; it also turns the catalog's logged entries (a
   *    local relation) and the distribution's log-backed relation
   *    ([[graft.lake.LogFileIndex]]) into frames;
+  *  - [[rebind]] — a planned frame's rows as a frame of another
+  *    session, so a stream's micro-batch runs on the session that
+  *    started the stream ([[graft.streaming.CallerSession]]);
   *  - [[column]] — a resolved catalyst `Expression` (a merge
   *    condition / assignment, rewritten to alias-qualified form) as a
   *    `Column`, so clause evaluation composes with the public
@@ -33,6 +37,14 @@ import org.apache.spark.sql.types.StructType
 object GraftDmlBridge {
   def frame(spark: SparkSession, plan: LogicalPlan): DataFrame =
     classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession], plan)
+
+  /** `batch`'s rows, as its session plans them, as a frame of `spark`
+    * with `batch`'s columns: a scan of the planned rows, with no second
+    * plan of `batch` and no conversion of its rows. */
+  def rebind(spark: SparkSession, batch: DataFrame): DataFrame = {
+    val qe = batch.queryExecution
+    frame(spark, LogicalRDD(qe.analyzed.output, qe.toRdd)(spark.asInstanceOf[classic.SparkSession]))
+  }
 
   def column(e: Expression): Column =
     org.apache.spark.sql.classic.ExpressionUtils.column(e)

@@ -61,6 +61,46 @@ class StreamIngestSpec extends SparkTestBase {
     assert(Catalog.load(spark, layout).count() == 2)
   }
 
+  test("a restart over more bronze objects than Spark lists in one go starts no listing job; " +
+      "a source's objects are read at any depth, and one directly under bronze is not") {
+    val layout = Layout(tmpDir("slake_many"))
+    def write(dir: String, name: String, content: String): Unit = {
+      val d = new java.io.File(dir); d.mkdirs()
+      java.nio.file.Files.writeString(new java.io.File(d, name).toPath, content)
+    }
+    def arrive(objects: Range): Unit = {
+      objects.foreach(i =>
+        write(layout.bronzeSourceDir(if (i % 2 == 0) "clicks" else "logs"), s"o$i.json", s"""{"i":$i}"""))
+    }
+    write(s"${layout.bronzeSourceDir("clicks")}/day=1", "nested.json", """{"i":100}""")
+    write(layout.bronzeDir, "stray.json", """{"i":-1}""")
+    // two arrivals of 20 objects; a restart re-reads the file list of
+    // the last batch, which Spark lists with a job past 32 files
+    Seq(0 until 20, 20 until 40).foreach { objects =>
+      arrive(objects)
+      StreamIngest.start(spark, layout, Trigger.AvailableNow()).awaitTermination(60000)
+    }
+    // the next arrival: the restart finds the source's files by listing
+    // the bronze directories, not by a Spark job over every object
+    arrive(40 until 41)
+    val listings = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        Option(e.properties).flatMap(p => Option(p.getProperty("spark.job.description")))
+          .filter(_.startsWith("Listing leaf files")).foreach(listings.add)
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      StreamIngest.start(spark, layout, Trigger.AvailableNow()).awaitTermination(60000)
+      org.apache.spark.ListenerBusAccess.drain(spark.sparkContext)
+    } finally spark.sparkContext.removeSparkListener(listener)
+    assert(listings.isEmpty, listings)
+    assert(Distribution.subscribeSnapshot(spark, layout, "clicks").count() == 22)
+    assert(Distribution.subscribeSnapshot(spark, layout, "logs").count() == 20)
+    assert(Catalog.load(spark, layout).count() == 42)
+    assert(graft.lake.Ingest.readBronze(spark, layout).count() == 42, "the batch read sees the same objects")
+  }
+
   test("processBatch is idempotent per catalog content on empty batches") {
     val layout = Layout(tmpDir("slake2"))
     val empty = spark.range(0).selectExpr("'s' as source", "'k' as key", "'{}' as json").filter("false")

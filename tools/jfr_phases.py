@@ -58,6 +58,9 @@ PHASES = [
         "org.apache.hadoop.conf.Configuration.readFields")),
     ("task: deserialize", TASK_THREAD, (
         "org.apache.spark.serializer.JavaSerializerInstance.deserialize",)),
+    # a replay task opens, decompresses and splits its objects under
+    # Replay's frames, then writes them under DistWrite's
+    ("task: bronze read", TASK_THREAD, ("graft.lake.Replay",)),
     ("task: distribution write", TASK_THREAD, ("graft.lake.DistWrite",)),
     ("task: file write", TASK_THREAD, (
         "org.apache.spark.sql.execution.datasources.FileFormatWriter",

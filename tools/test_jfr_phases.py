@@ -60,6 +60,12 @@ EVENTS = [
     sample(4.5, "main", ("graft.lake.LogFileIndex", "listFiles")),
     sample(5.0, "main", ("graft.streaming.StreamIngest$", "start")),
     sample(5.5, "main", ("scala.collection.immutable.List", "map")),
+    sample(6.0, TASK, ("graft.lake.ConcatJson$", "split"),
+           ("graft.lake.Replay$", "$anonfun$records$3"),
+           ("graft.lake.DistWrite$", "writeTask"), RUN),
+    sample(6.5, TASK, ("java.util.zip.GZIPInputStream", "read"),
+           ("graft.lake.Replay$", "$anonfun$records$2"),
+           ("graft.lake.DistWrite$", "writeTask"), RUN),
     compilation(0.2, "org.apache.spark.sql.catalyst.Foo", 0.25),
     compilation(1.2, "org.apache.spark.sql.catalyst.Bar", 0.5),
     compilation(2.2, "org.apache.hadoop.conf.Configuration", "1.125"),
@@ -71,7 +77,8 @@ class PhaseTest(unittest.TestCase):
     def test_every_sample_lands_in_its_phase(self):
         s = jfr_phases.summarize(EVENTS)
         self.assertEqual(s["samples"], {
-            "task: hadoop conf": 1, "task: deserialize": 1, "task: distribution write": 2,
+            "task: hadoop conf": 1, "task: deserialize": 1, "task: bronze read": 2,
+            "task: distribution write": 2,
             "task: scan": 1, "task: other": 1, "commit": 1, "stream machinery": 1,
             "replay": 1, "subscribe": 1, "stream start": 1, "other": 1})
 
